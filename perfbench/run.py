@@ -118,7 +118,7 @@ def main() -> int:
     from prometheus_anomaly_detection_lstm_spark.session import get_spark
     from prometheus_anomaly_detection_lstm_spark.sources.prometheus import PrometheusDataSource
 
-    from perfbench.trace import MemSampler
+    from perfbench.trace import MemSampler, tree_cpu_s
     from perfbench.workloads import WORKLOADS
 
     mem = MemSampler().start()
@@ -131,10 +131,13 @@ def main() -> int:
         ctx = Context(spark, args.seed, work)
         workload = WORKLOADS[args.workload](ctx)
         workload.warm()
-        # one set-up per process: a repeat in the same process would find
-        # the JVM, the Python workers and the imports warm
-        setup_s = time.time() - PROCESS_START
-        log(f"set-up {setup_s:.2f} s (session {session_start_s:.2f} s)")
+        # set-up time is the CPU time of the process tree so far: the wall
+        # time of a cold start moves with the CPU the host steals far more
+        # than its CPU time does.  One set-up per process: a repeat in the
+        # same process would find the JVM, the workers and the imports warm
+        setup_s = tree_cpu_s()
+        log(f"set-up {time.time() - PROCESS_START:.2f} s, {setup_s:.2f} cpu s "
+            f"(session {session_start_s:.2f} s)")
         try:
             workload.measure(args.seconds, bool(args.trace))
         finally:

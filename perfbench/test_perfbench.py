@@ -128,6 +128,18 @@ def test_metric_names_match_benchmark_json():
             assert f'"{name}"' in src, name
 
 
+def test_realtime_rates_read_zero_when_nothing_was_measured():
+    from perfbench.workloads import RealtimeDetect
+
+    rt = object.__new__(RealtimeDetect)  # no session: only the bookkeeping
+    rt.results, rt.batches, rt.progress, rt.window = [], [], [], (0, 6)
+    assert rt.end_to_end() == {"ingest_items_per_cpu_s": 0.0, "score_items_per_cpu_s": 0.0}
+    # a stream that emitted only before the window measured nothing either
+    rt.results = [("0", 6, 0.1, 0, 20, 9.0)]
+    rt.batches = [{"id": 0, "received": 9.0, "rows": 1, "cpu_s": 1.0, "update_s": 0.0}]
+    assert rt.end_to_end()["score_items_per_cpu_s"] == 0.0
+
+
 def run_bench(cwd, workload, seconds, trace=0):
     return subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "2",

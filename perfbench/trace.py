@@ -157,7 +157,7 @@ class MemSampler:
     Reading a process's PSS holds its memory-map lock for milliseconds,
     so samples are sparse."""
 
-    def __init__(self, interval: float = 2.0):
+    def __init__(self, interval: float = 1.0):
         self.interval = interval
         self.peak_mb = 0.0
         self._stop = threading.Event()
