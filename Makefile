@@ -3,8 +3,10 @@
 
 CONFIG ?= config.yaml
 SF ?= /root/testdata/sf0.01
+W ?= batch_pipeline
+SEED ?= 1
 
-.PHONY: collect preprocess train filter detect test parity sweep hygiene bench clean
+.PHONY: collect preprocess train filter detect test parity sweep hygiene bench shuffle-audit anchors zoo perfbench perfbench-test clean
 
 collect:
 	python -m prometheus_anomaly_detection_lstm_spark.cli collect --config $(CONFIG)
@@ -38,6 +40,14 @@ hygiene:
 
 bench:
 	python bench.py
+
+# pipeline benchmark (BENCHMARK.json): one untraced run of workload W
+# (batch_pipeline | realtime_detect) on seed SEED
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 12 --trace 0
+
+perfbench-test:
+	python3 -m pytest perfbench -q
 
 # per-query bytes-moved audit from event-log task metrics (BASELINE.md)
 shuffle-audit:

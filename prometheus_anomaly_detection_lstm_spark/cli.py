@@ -9,6 +9,18 @@
 Unlike the reference (subprocess per stage, cli.py:7-12), stages here
 are library calls sharing one SparkSession — no process boundary, one
 Catalyst-planned job graph per stage.
+
+``train`` and ``filter`` each build the sequence windows once, as the
+reference builds its window tensor once per script
+(train_autoencoder.py:61-74, filter_anomalous_data.py:57-67): the
+windows frame is cut with ``functions.checkpoint.cut_lineage`` and every
+consumer reads that one frame.  ``train`` collects the train and
+validation tensors and takes the p95 threshold in NumPy, from the
+trained model's per-window MSE over the validation tensor it already
+holds.  ``filter`` scores the cut frame once and writes both splits from
+one cut (window, is_anomaly) frame.  Both stages release the blocks of
+the frames they cut when they return, so a long-lived session does not
+pile them up.
 """
 
 from __future__ import annotations
@@ -17,6 +29,7 @@ import argparse
 import json
 import os
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from .config import EngineConfig, load_config, validate_periods
@@ -26,7 +39,9 @@ from .operators import score as score_ops
 from .operators.align import metrics_wide
 from .operators.windows import sequence_windows_scalable
 from .functions import hour_of_day, weekday_mon0
+from .functions.checkpoint import cut_lineage, release_checkpoints
 from .session import get_spark
+from .shipping import ensure_shipped
 from .sources.prometheus import PrometheusDataSource
 
 
@@ -37,6 +52,9 @@ def _art(cfg: EngineConfig, name: str) -> str:
 
 def cmd_collect(cfg: EngineConfig) -> None:
     spark = get_spark("collect")
+    # the source's reader runs on Python workers, which import it by
+    # module path: ship the package before the first read
+    ensure_shipped(spark)
     spark.dataSource.register(PrometheusDataSource)
     periods = validate_periods(cfg.collection_periods_iso)
     frames = []
@@ -98,24 +116,23 @@ def cmd_preprocess(cfg: EngineConfig, input_path: str | None = None) -> None:
 def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
     from .ml.train import (
         collect_windows,
-        fit_threshold,
         save_artifacts,
         train_linear_autoencoder,
         train_val_split,
     )
-    from .ml.infer import score_windows
-    from .ml.train import LinearAutoencoder
 
     spark = get_spark("train")
     path = input_path or _art(cfg, cfg.processed_output_filename)
     df = spark.read.parquet(path)
     features = [c for c in df.columns if c != "ts"]
-    windows = sequence_windows_scalable(df, features, cfg.sequence_length)
-    train_df, val_df = train_val_split(windows, cfg.train_split_ratio)
-    x_train = collect_windows(train_df)
-    x_val = collect_windows(val_df)
+    windows = cut_lineage(sequence_windows_scalable(df, features, cfg.sequence_length))
+    try:
+        train_df, val_df = train_val_split(windows, cfg.train_split_ratio)
+        x_train = collect_windows(train_df)
+        x_val = collect_windows(val_df)
+    finally:
+        release_checkpoints([windows])
     if cfg.model_type == "lstm":
-        from .ml.lstm_np import LSTMAutoencoder
         from .ml.lstm_train import train_lstm_autoencoder
 
         model, history = train_lstm_autoencoder(
@@ -125,8 +142,6 @@ def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
             patience=cfg.early_stopping_patience,
             val=x_val,
         )
-        trained_w = model.w
-        factory = lambda: LSTMAutoencoder(trained_w)  # noqa: E731
     else:
         model, history = train_linear_autoencoder(
             x_train,
@@ -134,13 +149,13 @@ def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
             patience=cfg.early_stopping_patience,
             val=x_val,
         )
-        a_fit, b_fit = model.a, model.b
-        factory = lambda: LinearAutoencoder(a=a_fit, b=b_fit)  # noqa: E731
     # the persisted threshold must describe the SAME model as the
-    # persisted weights: score validation windows with the trained
-    # model (weights captured in the factory closure, rebuilt per task)
-    scored = score_windows(val_df if x_val.size else train_df, factory)
-    threshold = fit_threshold(scored.select("mse"), 0.95)
+    # persisted weights: p95 of the trained model's per-window MSE over
+    # the validation tensor (every window when validation is empty);
+    # np.percentile interpolates linearly, as Spark's exact percentile
+    held = x_val if x_val.size else x_train
+    err = held - model.predict(held)
+    threshold = float(np.percentile((err * err).mean(axis=(1, 2)), 95))
     # scaler params were already persisted by the preprocess stage
     save_artifacts(cfg.artifacts_dir, model, history, None, threshold)
 
@@ -154,7 +169,6 @@ def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
     path = input_path or _art(cfg, cfg.processed_output_filename)
     df = spark.read.parquet(path)
     features = [c for c in df.columns if c != "ts"]
-    windows = sequence_windows_scalable(df, features, cfg.sequence_length)
     # prefer the threshold fitted by `train` (p95 of validation errors,
     # training_meta.json) over the hand-tuned config constant — the
     # reference documents this practice but leaves it manual
@@ -170,8 +184,6 @@ def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
     # identifies the model family (a/b = linear, enc*/dec* = LSTM).
     weights_path = os.path.join(cfg.artifacts_dir, "autoencoder_weights.npz")
     if os.path.exists(weights_path):
-        import numpy as np
-
         with np.load(weights_path) as npz:
             keys = set(npz.files)
             arrays = {k: npz[k] for k in npz.files}
@@ -184,17 +196,28 @@ def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
             factory = lambda: LSTMAutoencoder(arrays)  # noqa: E731
     else:
         factory = lambda: StubAutoencoder()  # noqa: E731
-    scored = score_windows(windows, factory).withColumn(
-        "is_anomaly",
-        (F.col("mse") > F.lit(threshold)).cast("int"),
-    )
-    joined = windows.join(scored.select("window_id", "is_anomaly"), "window_id")
-    joined.filter(F.col("is_anomaly") == 0).write.mode("overwrite").parquet(
-        _art(cfg, "normal_sequences.parquet")
-    )
-    joined.filter(F.col("is_anomaly") == 1).write.mode("overwrite").parquet(
-        _art(cfg, "anomalous_sequences.parquet")
-    )
+    windows = cut_lineage(sequence_windows_scalable(df, features, cfg.sequence_length))
+    cuts = [windows]
+    try:
+        scored = score_windows(windows, factory).withColumn(
+            "is_anomaly",
+            (F.col("mse") > F.lit(threshold)).cast("int"),
+        )
+        # both writes read one cut: each would otherwise rerun the
+        # scoring (and, without the cut above, the window build)
+        split = cut_lineage(
+            windows.join(scored.select("window_id", "is_anomaly"), "window_id")
+        )
+        cuts.append(split)
+        for name, flag in (
+            ("normal_sequences.parquet", 0),
+            ("anomalous_sequences.parquet", 1),
+        ):
+            split.filter(F.col("is_anomaly") == flag).write.mode(
+                "overwrite"
+            ).parquet(_art(cfg, name))
+    finally:
+        release_checkpoints(cuts)
 
 
 def cmd_detect(cfg: EngineConfig) -> None:  # pragma: no cover - needs live prom

@@ -16,7 +16,9 @@ to the driver is the right call — MLlib has no LSTM, and shipping a
   LSTM which needs TensorFlow (absent here; build_lstm_autoencoder
   raises with guidance).  Persists weights + training history.
 * :func:`fit_threshold` — A11: percentile of training-set errors, the
-  practice config.yaml:113-118 documents but never automates.
+  practice config.yaml:113-118 documents but never automates.  The CLI
+  ``train`` stage takes the same percentile with ``np.percentile``
+  instead, from the validation tensor it already holds.
 """
 
 from __future__ import annotations
@@ -46,10 +48,16 @@ def train_val_split(
 
 
 def collect_windows(windows: DataFrame) -> np.ndarray:
-    """windows DF -> (n, L, F) float64 tensor, ordered by window_id."""
-    rows = windows.select("window_id", "features").orderBy("window_id").collect()
+    """windows DF -> (n, L, F) float64 tensor, ordered by window_id.
+
+    The rows are sorted in Python after the collect: a Spark
+    ``orderBy`` would add a range-partition sampling job and a shuffle
+    for a frame that is collected anyway.
+    """
+    rows = windows.select("window_id", "features").collect()
     if not rows:
         return np.empty((0, 0, 0))
+    rows.sort(key=lambda r: r.window_id)
     return np.array([r.features for r in rows], dtype="float64")
 
 

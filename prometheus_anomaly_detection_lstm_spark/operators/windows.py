@@ -94,7 +94,10 @@ def bucket_assign(
     rolling features).
 
     Physical shape: the per-day summary (count + cumulative offset) is
-    metadata-scale, so it is collected once and turned into an explicit
+    metadata-scale.  It is never collected: it stays a lazy broadcast,
+    read by three subtrees (the ``__g`` offset join and both sides of
+    the coverage mapping), each of which rebuilds it (see
+    ``day_counts``).  It is turned into an explicit
     (source day -> covering bucket) mapping joined EQUI on the day — a
     broadcast HASH join touching each row ~once per covering bucket
     (K ~= 2 for dense days).  A range-join formulation would plan as a

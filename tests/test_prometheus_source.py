@@ -118,6 +118,32 @@ def test_datasource_partitions_and_cache(spark, stub_server, tmp_path):
     assert len(_StubProm.hits) == first_hits
 
 
+def test_cmd_collect_ships_the_package(spark, stub_server, tmp_path, monkeypatch):
+    """The source's reader runs on Python workers, which import it by
+    module path; cmd_collect must ship the package before it reads, or a
+    run from outside the repository root fails on the worker."""
+    from prometheus_anomaly_detection_lstm_spark import shipping
+    from prometheus_anomaly_detection_lstm_spark.cli import cmd_collect
+    from prometheus_anomaly_detection_lstm_spark.config import EngineConfig
+
+    monkeypatch.setattr(shipping, "_shipped", set())
+    cfg = EngineConfig(
+        prometheus_url=stub_server,
+        artifacts_dir=str(tmp_path / "artifacts"),
+        queries={"cpu": "rate(cpu[2m])", "mem": "mem_bytes"},
+        collection_periods_iso=[
+            {"start": "2024-01-01T00:00:00Z", "end": "2024-01-01T02:00:00Z"}
+        ],
+        step_seconds=120,
+    )
+    cmd_collect(cfg)
+    assert id(spark.sparkContext) in shipping._shipped
+    wide = spark.read.parquet(f"{cfg.artifacts_dir}/{cfg.output_filename}")
+    # 2 one-hour chunks x 3 points per query, on a shared grid
+    assert wide.count() == 6
+    assert {"cpu", "mem", "day_of_week", "hour_of_day"} <= set(wide.columns)
+
+
 def test_stream_reader_offsets_are_step_aligned():
     """Offset arithmetic without Spark: initial/latest offsets sit on
     the step grid, the end cap bounds the stream, and an empty range
