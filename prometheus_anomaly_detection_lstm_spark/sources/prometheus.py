@@ -9,10 +9,19 @@ Two layers, both network-free-testable:
    FIXTURES-F2 tests exercise.
 
 2. :class:`PrometheusDataSource` — a Spark 4 Python DataSource whose
-   reader plans ONE InputPartition PER (query, time-chunk) (O1: the
-   reference's 1-hour chunk granularity, data_collector.py:85-111,
-   becomes the unit of scan parallelism) and fetches over HTTP inside
-   the executor.  PromQL stays opaque — ``rate()``/``sum by()`` run
+   reader plans ONE InputPartition PER time chunk (O1: the reference's
+   1-hour chunk granularity, data_collector.py:85-111, is the only unit
+   of scan parallelism) and fetches over HTTP inside the executor: the
+   partition carries every query, and its one task makes one call per
+   (query, chunk) over a shared HTTP session.  Queries are not split
+   into tasks of their own because a Python task has a fixed cost that
+   dwarfs a poll: on a 4-vCPU box a read of 16 queries x 7 points took
+   6.6 CPU-s as 16 tasks and 0.9 CPU-s as one, about 0.38 CPU-s per
+   task, most of it PySpark's per-task ``importlib.invalidate_caches()``
+   (``worker_util.setup_spark_files``), which on Python 3.11 re-reads
+   the zip directory behind each of the worker's 16 zipimporters
+   (pyspark.zip, the Spark jars, the shipped package; ~0.24 CPU-s a
+   call).  PromQL stays opaque — ``rate()``/``sum by()`` run
    inside Prometheus (O2, the source-pushdown analog).  A deterministic
    per-chunk JSON file cache (S5: keyed by query+range+step like the
    reference's diskcache, data_collector.py:34-40) makes re-reads
@@ -154,29 +163,31 @@ def _chunks(
     return out
 
 
-class _PromPartition(InputPartition):
-    def __init__(self, alias, promql, start, end, step):
-        self.alias = alias
-        self.promql = promql
+def _epoch(iso: str) -> int:
+    return int(datetime.fromisoformat(iso.replace("Z", "+00:00")).timestamp())
+
+
+class _ChunkPartition(InputPartition):
+    """One time chunk of every query: the sorted ``(alias, promql)``
+    pairs, each fetched over ``[start, end]`` at ``step`` in one task."""
+
+    def __init__(self, queries, start, end, step):
+        self.queries = queries
         self.start = start
         self.end = end
         self.step = step
 
 
-class PrometheusReader(DataSourceReader):
+class _ChunkReader:
+    """Options, chunk planning and the per-chunk read shared by the
+    batch and stream readers.  ``fail_on_error`` decides what an error
+    payload does: zero rows (batch) or a failed task (stream)."""
+
+    fail_on_error = False
+
     def __init__(self, options):
         self.url = options.get("url", "http://localhost:9090")
         self.queries = json.loads(options.get("queries_json", "{}"))
-        self.start = int(
-            datetime.fromisoformat(
-                options["start"].replace("Z", "+00:00")
-            ).timestamp()
-        )
-        self.end = int(
-            datetime.fromisoformat(
-                options["end"].replace("Z", "+00:00")
-            ).timestamp()
-        )
         self.step = int(options.get("step_seconds", "120"))
         self.chunk_seconds = int(
             float(options.get("chunk_hours", "1")) * 3600
@@ -187,48 +198,72 @@ class PrometheusReader(DataSourceReader):
             options.get("first_series_only", "true").lower() == "true"
         )
 
-    def partitions(self):
+    def _plan(self, start: int, end: int) -> list[_ChunkPartition]:
+        pairs = tuple(sorted(self.queries.items()))
         return [
-            _PromPartition(alias, promql, s, e, self.step)
-            for alias, promql in sorted(self.queries.items())
-            for (s, e) in _chunks(
-                self.start, self.end, self.chunk_seconds, self.step
-            )
+            _ChunkPartition(pairs, s, e, self.step)
+            for (s, e) in _chunks(start, end, self.chunk_seconds, self.step)
         ]
 
-    def _fetch(self, part: _PromPartition) -> dict:
-        return _fetch_payload(
-            self.url, part, self.cache_dir, self.timeout
-        )
+    def read(self, partition: _ChunkPartition):
+        """Fetch and decode every query of the chunk in order, over one
+        shared HTTP session: one call per (query, chunk)."""
+        import requests
 
-    def read(self, partition: _PromPartition):
-        payload = self._fetch(partition)
-        yield from _rows_from_payload(
-            payload, partition.alias, self.first_series_only
-        )
+        with requests.Session() as http:
+            for alias, promql in partition.queries:
+                payload = _fetch_payload(
+                    self.url, promql, partition, self.cache_dir,
+                    self.timeout, http,
+                )
+                if self.fail_on_error and payload.get("status") != "success":
+                    raise RuntimeError(
+                        f"Prometheus query {alias!r} failed over "
+                        f"[{partition.start}, {partition.end}]: "
+                        f"{payload.get('errorType')}: {payload.get('error')}"
+                    )
+                yield from _rows_from_payload(
+                    payload, alias, self.first_series_only
+                )
+
+
+class PrometheusReader(_ChunkReader, DataSourceReader):
+    """Batch reader.  An error payload yields no rows: the reference
+    logs and skips it."""
+
+    def __init__(self, options):
+        super().__init__(options)
+        self.start = _epoch(options["start"])
+        self.end = _epoch(options["end"])
+
+    def partitions(self):
+        return self._plan(self.start, self.end)
 
 
 def _fetch_payload(
-    url: str, part: _PromPartition, cache_dir: str, timeout: float
+    url: str,
+    promql: str,
+    part: _ChunkPartition,
+    cache_dir: str,
+    timeout: float,
+    http,
 ) -> dict:
-    """One /api/v1/query_range HTTP fetch with the deterministic JSON
-    file cache (S5, data_collector.py:34-40); shared by the batch and
-    stream readers."""
+    """One /api/v1/query_range HTTP fetch of ``promql`` over the chunk
+    ``part`` on the session ``http``, with the deterministic JSON file
+    cache (S5, data_collector.py:34-40)."""
     cache = None
     if cache_dir:
         key = hashlib.md5(
-            f"{url}|{part.promql}|{part.start}|{part.end}|{part.step}".encode()
+            f"{url}|{promql}|{part.start}|{part.end}|{part.step}".encode()
         ).hexdigest()
         cache = os.path.join(cache_dir, f"{key}.json")
     if cache and os.path.exists(cache):
         with open(cache) as fh:
             return json.load(fh)
-    import requests
-
-    resp = requests.get(
+    resp = http.get(
         f"{url}/api/v1/query_range",
         params={
-            "query": part.promql,
+            "query": promql,
             "start": part.start,
             "end": part.end,
             "step": part.step,
@@ -275,7 +310,7 @@ def _rows_from_payload(payload: dict, alias: str, first_series_only: bool):
             )
 
 
-class PrometheusStreamReader(DataSourceStreamReader):
+class PrometheusStreamReader(_ChunkReader, DataSourceStreamReader):
     """Rate-driven streaming wrapper over the same per-cycle fetch the
     ``foreachBatch`` detector uses (T1/T2 semantics as a first-class
     ``spark.readStream.format("prometheus")`` surface).
@@ -287,45 +322,30 @@ class PrometheusStreamReader(DataSourceStreamReader):
     the batch reader's :func:`_chunks` handles).  ``latestOffset``
     advances to ``now - lag_seconds`` floored to the step grid, capped
     at the optional ``end`` (which makes bounded, deterministic test
-    runs possible with ``availableNow``).  One InputPartition per
-    (query, chunk) per microbatch — the same scan-parallelism unit as
-    the batch reader.
+    runs possible with ``availableNow``).  One InputPartition per time
+    chunk per microbatch, carrying every query — the same
+    scan-parallelism unit as the batch reader, so a live microbatch
+    inside one chunk is ONE Python task.  A Python task costs about
+    0.38 CPU-s of fixed worker set-up whatever it reads (see the module
+    docstring), far more than one poll of every query takes.
+
+    An error payload fails the task, so the microbatch fails before its
+    offset is committed and a restart re-fetches the same range.
+    Skipping it with zero rows, as the batch reader does, would commit
+    past those grid points and never fetch them again.
     """
 
+    fail_on_error = True
+
     def __init__(self, options):
-        self.url = options.get("url", "http://localhost:9090")
-        self.queries = json.loads(options.get("queries_json", "{}"))
-        self.step = int(options.get("step_seconds", "120"))
-        self.chunk_seconds = int(
-            float(options.get("chunk_hours", "1")) * 3600
-        )
-        self.cache_dir = options.get("cache_dir", "")
-        self.timeout = float(options.get("timeout_seconds", "30"))
-        self.first_series_only = (
-            options.get("first_series_only", "true").lower() == "true"
-        )
+        super().__init__(options)
         self.lag = int(options.get("lag_seconds", "0"))
         start_opt = options.get("start", "")
-        if start_opt:
-            self._start = self._align(
-                int(
-                    datetime.fromisoformat(
-                        start_opt.replace("Z", "+00:00")
-                    ).timestamp()
-                )
-            )
-        else:
-            self._start = self._align(self._now() - self.lag)
-        end_opt = options.get("end", "")
-        self._end_cap = (
-            int(
-                datetime.fromisoformat(
-                    end_opt.replace("Z", "+00:00")
-                ).timestamp()
-            )
-            if end_opt
-            else None
+        self._start = self._align(
+            _epoch(start_opt) if start_opt else self._now() - self.lag
         )
+        end_opt = options.get("end", "")
+        self._end_cap = _epoch(end_opt) if end_opt else None
 
     @staticmethod
     def _now() -> int:
@@ -351,19 +371,7 @@ class PrometheusStreamReader(DataSourceStreamReader):
         lo, hi = int(start["ts"]), int(end["ts"]) - self.step
         if hi < lo:
             return []
-        return [
-            _PromPartition(alias, promql, s, e, self.step)
-            for alias, promql in sorted(self.queries.items())
-            for (s, e) in _chunks(lo, hi, self.chunk_seconds, self.step)
-        ]
-
-    def read(self, partition: _PromPartition):
-        payload = _fetch_payload(
-            self.url, partition, self.cache_dir, self.timeout
-        )
-        yield from _rows_from_payload(
-            payload, partition.alias, self.first_series_only
-        )
+        return self._plan(lo, hi)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are recomputable; the file cache is the replay story
