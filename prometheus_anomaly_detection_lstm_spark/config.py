@@ -50,7 +50,6 @@ class EngineConfig:
     sequence_length: int = 20
     train_split_ratio: float = 0.8
     epochs: int = 50
-    batch_size: int = 64
     learning_rate: float = 0.001
     early_stopping_patience: int = 10
     #: "lstm" = NumPy BPTT on the reference architecture (ml/lstm_train);
@@ -99,7 +98,6 @@ def load_config(path: str | None = None, data: dict | None = None) -> EngineConf
         sequence_length=ts.get("sequence_length", 20),
         train_split_ratio=ts.get("train_split_ratio", 0.8),
         epochs=ts.get("epochs", 50),
-        batch_size=ts.get("batch_size", 64),
         learning_rate=ts.get("learning_rate", 0.001),
         early_stopping_patience=ts.get("early_stopping_patience", 10),
         model_type=ts.get("model_type", "lstm"),

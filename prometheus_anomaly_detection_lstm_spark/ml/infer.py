@@ -26,6 +26,13 @@ SCORE_SCHEMA = (
 )
 
 
+def batch_tensor(features: pd.Series) -> np.ndarray:
+    """Arrow ``array<array<double>>`` column -> (n, L, F) float64, one
+    stack per window: a nested per-element Python loop over Arrow's
+    object arrays costs more than the model math itself."""
+    return np.stack([np.stack(w).astype("float64", copy=False) for w in features])
+
+
 def score_windows(
     windows: DataFrame,
     model_factory: Callable[[], object],
@@ -58,13 +65,7 @@ def score_windows(
         for pdf in batches:
             if pdf.empty:
                 continue
-            # one stack per window (Arrow yields object arrays of
-            # per-step arrays): a nested per-element Python loop here
-            # costs more than the model math itself
-            x = np.stack(
-                [np.stack(w).astype("float64", copy=False)
-                 for w in pdf["features"]]
-            )
+            x = batch_tensor(pdf["features"])
             recon = model.predict(x)
             err = x - recon
             sq = err * err

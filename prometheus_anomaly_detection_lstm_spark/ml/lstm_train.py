@@ -2,24 +2,25 @@
 
 Analytical backpropagation-through-time for the exact architecture of
 ``ml/lstm_np.py`` (the reference's train_autoencoder.py:76-91 stack),
-with the reference's optimizer settings: Adam(lr=0.001), MSE loss,
-early stopping with best-weight restore (train_autoencoder.py:196-237).
+with the reference's optimizer settings: :func:`adam` (lr=0.001), MSE
+loss, and the shared early-stop / best-restore loop
+``train.fit_early_stopping`` (train_autoencoder.py:196-237).
 Deterministic end to end — fixed init, full-batch updates, float64 —
 so training is bit-reproducible anywhere (SURVEY H5), unlike the
-Keras/TF path this replaces.
-
-Spark's role stays data prep (the distributed pipeline produces the
-windows DataFrame; at the reference's scale the collected tensor is
-~23 MB — SURVEY §6); gradients here are driver-side NumPy.  The
+Keras/TF path this replaces.  The distributed trainer sums the same
+gradients on the cluster through ``train.sum_over_batches``.  The
 gradient math is verified against numerical differentiation in
 tests/test_lstm_train.py.
 """
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import numpy as np
 
 from .lstm_np import LSTMAutoencoder, _sigmoid, init_weights
+from .train import fit_early_stopping, persisted_features, sum_over_batches
 
 LAYERS = ("enc1", "enc2", "dec1", "dec2")
 
@@ -153,6 +154,33 @@ def loss_and_grads(weights: dict, x: np.ndarray, denom: float | None = None):
     return loss, grads
 
 
+def adam(lr: float):
+    """Adam with the Keras defaults (beta1 0.9, beta2 0.999, eps 1e-7).
+
+    Returns ``update(weights, grads) -> new weights``: a closure that
+    holds the moment estimates and the step count across calls and
+    never mutates ``weights``.
+    """
+    beta1, beta2, eps = 0.9, 0.999, 1e-7
+    m: dict = {}
+    v: dict = {}  # moments, zero until a key's first update
+    step = 0
+
+    def update(weights: dict, grads: dict) -> dict:
+        nonlocal step
+        step += 1
+        out = {}
+        for k, w in weights.items():
+            m[k] = beta1 * m.get(k, 0.0) + (1 - beta1) * grads[k]
+            v[k] = beta2 * v.get(k, 0.0) + (1 - beta2) * grads[k] ** 2
+            m_hat = m[k] / (1 - beta1**step)
+            v_hat = v[k] / (1 - beta2**step)
+            out[k] = w - lr * m_hat / (np.sqrt(v_hat) + eps)
+        return out
+
+    return update
+
+
 def train_lstm_autoencoder(
     x: np.ndarray,
     epochs: int = 50,
@@ -162,41 +190,24 @@ def train_lstm_autoencoder(
     units: tuple[int, int] = (64, 32),
     seed: int = 20240613,
 ) -> tuple[LSTMAutoencoder, list[float]]:
-    """Full-batch Adam on the LSTM autoencoder; M4 semantics
-    (epochs / early-stop / best-restore, train_autoencoder.py:196-237).
+    """Full-batch :func:`adam` on the LSTM autoencoder under
+    ``train.fit_early_stopping`` (M4, train_autoencoder.py:196-237).
 
     Returns the trained model (best weights) + per-epoch val-loss
     history.  Deterministic: same inputs -> bit-identical weights.
     """
-    weights = init_weights(x.shape[-1], units=units, seed=seed)
     val_x = x if val is None or not len(val) else val
-    m = {k: np.zeros_like(v) for k, v in weights.items()}
-    v = {k: np.zeros_like(vv) for k, vv in weights.items()}
-    beta1, beta2, eps = 0.9, 0.999, 1e-7  # Keras Adam defaults
-    best = (np.inf, {k: w.copy() for k, w in weights.items()})
-    history: list[float] = []
-    stale = 0
-    step = 0
-    for _ in range(epochs):
+    update = adam(lr)
+
+    def step(weights):
         _, grads = loss_and_grads(weights, x)
-        step += 1
-        for k in weights:
-            m[k] = beta1 * m[k] + (1 - beta1) * grads[k]
-            v[k] = beta2 * v[k] + (1 - beta2) * grads[k] ** 2
-            m_hat = m[k] / (1 - beta1**step)
-            v_hat = v[k] / (1 - beta2**step)
-            weights[k] = weights[k] - lr * m_hat / (np.sqrt(v_hat) + eps)
+        weights = update(weights, grads)
         val_y, _ = forward_with_caches(weights, val_x)
-        val_loss = float(((val_y - val_x) ** 2).mean())
-        history.append(val_loss)
-        if val_loss < best[0] - 1e-12:
-            best = (val_loss, {k: w.copy() for k, w in weights.items()})
-            stale = 0
-        else:
-            stale += 1
-            if stale >= patience:
-                break
-    return LSTMAutoencoder(best[1]), history
+        return weights, float(((val_y - val_x) ** 2).mean())
+
+    init = init_weights(x.shape[-1], units=units, seed=seed)
+    best, history = fit_early_stopping(step, init, epochs, patience)
+    return LSTMAutoencoder(best), history
 
 
 # ------------------------------------------------------- distributed
@@ -208,21 +219,9 @@ def _pack(weights: dict) -> np.ndarray:
 
 
 def _unpack(vec: np.ndarray, template: dict) -> dict:
-    out = {}
-    ofs = 0
-    for k in sorted(template):
-        size = template[k].size
-        out[k] = vec[ofs : ofs + size].reshape(template[k].shape)
-        ofs += size
-    return out
-
-
-def _batch_tensor(pdf) -> np.ndarray:
-    """(rows of array<array<double>> 'features') -> (n, L, F) float64."""
-    return np.array(
-        [np.array([np.asarray(r) for r in w]) for w in pdf["features"]],
-        dtype="float64",
-    )
+    keys = sorted(template)
+    parts = np.split(vec, np.cumsum([template[k].size for k in keys])[:-1])
+    return {k: p.reshape(template[k].shape) for k, p in zip(keys, parts)}
 
 
 def train_lstm_autoencoder_distributed(
@@ -237,111 +236,40 @@ def train_lstm_autoencoder_distributed(
     """Data-parallel BPTT: per-partition gradients on the cluster,
     Adam on the driver (SURVEY §2.7-M4 at engine scale).
 
-    The same shape as ``train.train_linear_autoencoder_distributed``:
-    per epoch ONE ``mapInPandas`` job runs :func:`loss_and_grads` on
-    each Arrow batch with the GLOBAL element count as denominator and
-    yields the packed partial-gradient vector; the driver sums partials
-    and applies the identical Adam update as
-    :func:`train_lstm_autoencoder`.  A second lightweight job computes
-    the post-update validation loss (forward pass only) driving the
-    same early-stop / best-restore logic.  Gradient partial-sums are
-    mathematically the full-batch gradient — the only divergence from
-    the driver path is float summation order
-    (tests/test_lstm_train.py pins the two paths together on the
-    fixture).
+    Two ``train.sum_over_batches`` jobs per epoch: the first runs
+    :func:`loss_and_grads` on each Arrow batch with the GLOBAL element
+    count as denominator and sums the packed partial gradients, which
+    the driver feeds to the same :func:`adam` update as
+    :func:`train_lstm_autoencoder`; the second sums the post-update
+    squared validation error (forward pass only) that drives the shared
+    early-stop loop.  Gradient partial-sums are mathematically the
+    full-batch gradient — the only divergence from the driver path is
+    float summation order (tests/test_lstm_train.py pins the two paths
+    together on the fixture).
     """
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(windows.sparkSession)
-    persisted = windows.select("features").persist()
-    val_persisted = (
-        persisted if val is None else val.select("features").persist()
-    )
-    try:
-        first = persisted.first()["features"]
+    with persisted_features(windows) as frame, (
+        nullcontext(frame) if val is None else persisted_features(val)
+    ) as val_frame:
+        first = frame.first()["features"]
         length, n_features = len(first), len(first[0])
-        n_rows = persisted.count()
-        denom = float(n_rows * length * n_features)
-        if val_persisted is persisted:
-            denom_val = denom
-        else:
-            denom_val = float(
-                val_persisted.count() * length * n_features
+        denom = float(frame.count() * length * n_features)
+        denom_val = (
+            denom if val_frame is frame
+            else float(val_frame.count() * length * n_features)
+        )
+        update = adam(lr)
+
+        def step(weights):
+            grads = sum_over_batches(
+                frame, lambda x: _pack(loss_and_grads(weights, x, denom)[1])
             )
-
-        weights = init_weights(n_features, units=units, seed=seed)
-        grad_schema = "grads array<double>, loss_part double"
-        loss_schema = "sq_sum double"
-
-        def epoch_grads(w_now: dict):
-            def partials(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    x = _batch_tensor(pdf)
-                    loss_part, grads = loss_and_grads(w_now, x, denom)
-                    yield pd.DataFrame(
-                        {"grads": [_pack(grads).tolist()],
-                         "loss_part": [loss_part]}
-                    )
-
-            parts = persisted.mapInPandas(partials, grad_schema).toPandas()
-            gsum = np.sum(
-                [np.array(v, dtype="float64") for v in parts["grads"]],
-                axis=0,
+            new = update(weights, _unpack(grads, weights))
+            sq = sum_over_batches(
+                val_frame,
+                lambda x: [float(((forward_with_caches(new, x)[0] - x) ** 2).sum())],
             )
-            return _unpack(gsum, w_now), float(parts["loss_part"].sum())
+            return new, float(sq[0] / denom_val)
 
-        def val_loss(w_now: dict):
-            def partials(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    x = _batch_tensor(pdf)
-                    y, _ = forward_with_caches(w_now, x)
-                    yield pd.DataFrame(
-                        {"sq_sum": [float(((y - x) ** 2).sum())]}
-                    )
-
-            parts = val_persisted.mapInPandas(partials, loss_schema)
-            return float(parts.toPandas()["sq_sum"].sum() / denom_val)
-
-        m = {k: np.zeros_like(v) for k, v in weights.items()}
-        v2 = {k: np.zeros_like(vv) for k, vv in weights.items()}
-        beta1, beta2, eps = 0.9, 0.999, 1e-7  # Keras Adam defaults
-        best = (np.inf, {k: w.copy() for k, w in weights.items()})
-        history: list[float] = []
-        stale = 0
-        step = 0
-        for _ in range(epochs):
-            grads, _ = epoch_grads(weights)
-            step += 1
-            for k in weights:
-                m[k] = beta1 * m[k] + (1 - beta1) * grads[k]
-                v2[k] = beta2 * v2[k] + (1 - beta2) * grads[k] ** 2
-                m_hat = m[k] / (1 - beta1**step)
-                v_hat = v2[k] / (1 - beta2**step)
-                weights[k] = weights[k] - lr * m_hat / (
-                    np.sqrt(v_hat) + eps
-                )
-            vloss = val_loss(weights)
-            history.append(vloss)
-            if vloss < best[0] - 1e-12:
-                best = (
-                    vloss,
-                    {k: w.copy() for k, w in weights.items()},
-                )
-                stale = 0
-            else:
-                stale += 1
-                if stale >= patience:
-                    break
-        return LSTMAutoencoder(best[1]), history
-    finally:
-        persisted.unpersist()
-        if val_persisted is not persisted:
-            val_persisted.unpersist()
+        init = init_weights(n_features, units=units, seed=seed)
+        best, history = fit_early_stopping(step, init, epochs, patience)
+    return LSTMAutoencoder(best), history

@@ -11,10 +11,14 @@ to the driver is the right call — MLlib has no LSTM, and shipping a
   (train_autoencoder.py:188-190): row identity differs, distribution
   properties are tested instead (SURVEY §5.5).
 * :func:`collect_windows` — windows DataFrame -> (n, L, F) ndarray.
+* :func:`fit_early_stopping` — M4, the one training loop every trainer
+  here and in ``ml/lstm_train.py`` runs (epochs, early stop,
+  best-restore).
 * :func:`train_linear_autoencoder` — a deterministic NumPy autoencoder
   (full-batch gradient descent, fixed init) standing in for the Keras
-  LSTM which needs TensorFlow (absent here; build_lstm_autoencoder
-  raises with guidance).  Persists weights + training history.
+  LSTM; :func:`train_linear_autoencoder_distributed` sums its gradient
+  on the cluster through :func:`sum_over_batches`, the one distributed
+  job shape (the driver holds the parameters, the cluster sums).
 * :func:`fit_threshold` — A11: percentile of training-set errors, the
   practice config.yaml:113-118 documents but never automates.  The CLI
   ``train`` stage takes the same percentile with ``np.percentile``
@@ -25,12 +29,15 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .infer import batch_tensor
 
 
 def train_val_split(
@@ -86,6 +93,32 @@ class LinearAutoencoder:
         return cls(a=z["a"], b=z["b"])
 
 
+def fit_early_stopping(step, params, epochs: int, patience: int):
+    """M4, the one training loop: Keras ``fit`` with
+    ``EarlyStopping(patience, restore_best_weights)``
+    (train_autoencoder.py:196-237).
+
+    ``step(params) -> (new_params, val_loss)`` runs one epoch and must
+    return new arrays, never mutate ``params``: the best epoch's params
+    are kept without copies.  An epoch improves when its loss beats the
+    best by more than 1e-12; ``patience`` stale epochs in a row stop.
+    Returns (best params, or ``params`` if none improved, history).
+    """
+    best, best_loss = params, np.inf
+    history: list[float] = []
+    stale = 0
+    for _ in range(epochs):
+        params, loss = step(params)
+        history.append(loss)
+        if loss < best_loss - 1e-12:
+            best, best_loss, stale = params, loss, 0
+        else:
+            stale += 1
+            if stale >= patience:
+                break
+    return best, history
+
+
 def train_linear_autoencoder(
     x: np.ndarray,
     epochs: int = 50,
@@ -93,33 +126,21 @@ def train_linear_autoencoder(
     patience: int = 10,
     val: np.ndarray | None = None,
 ) -> tuple[LinearAutoencoder, list[float]]:
-    """Full-batch GD on mse(x, a·x+b) with early stopping (M4 semantics:
-    epochs/early-stop/best-restore mirror train_autoencoder.py:196-237)."""
+    """Full-batch GD on mse(x, a·x+b) under :func:`fit_early_stopping`;
+    the recorded loss is the post-update validation loss."""
     n_features = x.shape[-1]
-    a = np.full(n_features, 0.5)
-    b = np.zeros(n_features)
-    best = (np.inf, a.copy(), b.copy())
-    history: list[float] = []
-    stale = 0
     val_x = x if val is None or not len(val) else val
-    for _ in range(epochs):
-        pred = x * a + b
-        err = pred - x
-        grad_a = 2.0 * (err * x).mean(axis=(0, 1))
-        grad_b = 2.0 * err.mean(axis=(0, 1))
-        a -= lr * grad_a
-        b -= lr * grad_b
+
+    def step(params):
+        a, b = params
+        err = x * a + b - x
+        a = a - lr * (2.0 * (err * x).mean(axis=(0, 1)))
+        b = b - lr * (2.0 * err.mean(axis=(0, 1)))
         val_err = val_x * a + b - val_x
-        val_loss = float((val_err * val_err).mean())
-        history.append(val_loss)
-        if val_loss < best[0] - 1e-12:
-            best = (val_loss, a.copy(), b.copy())
-            stale = 0
-        else:
-            stale += 1
-            if stale >= patience:  # EarlyStopping(restore_best_weights)
-                break
-    _, a, b = best
+        return (a, b), float((val_err * val_err).mean())
+
+    init = (np.full(n_features, 0.5), np.zeros(n_features))
+    (a, b), history = fit_early_stopping(step, init, epochs, patience)
     return LinearAutoencoder(a=a, b=b), history
 
 
@@ -155,6 +176,38 @@ def save_artifacts(
         json.dump({"history": history, "threshold": threshold}, fh)
 
 
+@contextmanager
+def persisted_features(windows: DataFrame):
+    """Ship the package, persist the ``features`` column of ``windows``
+    for the duration of the block, unpersist it on the way out."""
+    from ..shipping import ensure_shipped
+
+    ensure_shipped(windows.sparkSession)
+    frame = windows.select("features").persist()
+    try:
+        yield frame
+    finally:
+        frame.unpersist()
+
+
+def sum_over_batches(frame: DataFrame, partial) -> np.ndarray:
+    """One Spark job: ``partial(x)`` maps each Arrow batch of ``frame``'s
+    features, as an (n, L, F) tensor, to a float64 vector; the driver
+    returns the sum of the vectors."""
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            vec = np.asarray(partial(batch_tensor(pdf["features"])), "float64")
+            yield pd.DataFrame({"v": [vec.tolist()]})
+
+    parts = frame.mapInPandas(run, "v array<double>").toPandas()
+    return np.sum([np.asarray(v, "float64") for v in parts["v"]], axis=0)
+
+
 def train_linear_autoencoder_distributed(
     windows,  # DataFrame (window_id, start_ts, features)
     epochs: int = 50,
@@ -162,80 +215,35 @@ def train_linear_autoencoder_distributed(
     patience: int = 10,
 ) -> tuple[LinearAutoencoder, list[float]]:
     """Distributed full-batch GD: gradients aggregate on the cluster,
-    parameters live on the driver (the north-star "Spark-integrated
-    training" shape).
+    parameters live on the driver.
 
-    Per epoch ONE Spark job computes partial (sum(err*x), sum(err),
-    sum(err^2), n) per Arrow batch under the current (a, b) — shipped
-    into the closure as plain arrays — and the driver applies the
-    update.  The windows DataFrame is persisted once and rescanned per
-    epoch; at the reference's scale this matches driver-side training
-    to float precision (partial-sum order is the only difference).
+    One :func:`sum_over_batches` job under the current (a, b) packs
+    (sum(err*x), sum(err), sum(err^2), n): the post-update loss of the
+    epoch that set (a, b) and the gradient the next epoch applies — one
+    job before the first epoch, one per epoch.  This matches driver-side
+    training to float precision (partial-sum order is the only
+    difference).
     """
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ module)
+    with persisted_features(windows) as frame:
+        n_features = len(frame.first()["features"][0])
 
-    from ..shipping import ensure_shipped
+        def stats(a, b):
+            def partial(x):
+                err = x * a + b - x
+                sq_n = [(err * err).sum(), x.shape[0] * x.shape[1]]
+                return np.concatenate(
+                    [(err * x).sum(axis=(0, 1)), err.sum(axis=(0, 1)), sq_n]
+                )
 
-    ensure_shipped(windows.sparkSession)
-    persisted = windows.select("features").persist()
-    try:
-        n_features = len(persisted.first()["features"][0])
-        a = np.full(n_features, 0.5)
-        b = np.zeros(n_features)
-        best = (np.inf, a.copy(), b.copy())
-        history: list[float] = []
-        stale = 0
-        schema = (
-            "sum_ex array<double>, sum_e array<double>, "
-            "sum_sq double, n bigint"
-        )
-        def epoch_stats(a_now: np.ndarray, b_now: np.ndarray):
-            def partials(batches):
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    x = np.array(
-                        [
-                            np.array([np.asarray(r) for r in w])
-                            for w in pdf["features"]
-                        ],
-                        dtype="float64",
-                    )
-                    err = x * a_now + b_now - x
-                    yield pd.DataFrame(
-                        {
-                            "sum_ex": [(err * x).sum(axis=(0, 1)).tolist()],
-                            "sum_e": [err.sum(axis=(0, 1)).tolist()],
-                            "sum_sq": [float((err * err).sum())],
-                            "n": [int(x.shape[0] * x.shape[1])],
-                        }
-                    )
+            sums = sum_over_batches(frame, partial)
+            n = sums[-1]
+            grads = (sums[:n_features] / n, sums[n_features:-2] / n)
+            return (a, b) + grads, float(sums[-2] / (n * n_features))
 
-            parts = persisted.mapInPandas(partials, schema).toPandas()
-            n_total = int(parts["n"].sum())
-            sum_ex = np.sum([np.array(v) for v in parts["sum_ex"]], axis=0)
-            sum_e = np.sum([np.array(v) for v in parts["sum_e"]], axis=0)
-            loss = float(parts["sum_sq"].sum() / (n_total * n_features))
-            return sum_ex / n_total, sum_e / n_total, loss
+        def step(params):
+            a, b, mean_ex, mean_e = params
+            return stats(a - lr * 2.0 * mean_ex, b - lr * 2.0 * mean_e)
 
-        # semantics aligned with train_linear_autoencoder: per epoch,
-        # update with the gradient, THEN record the post-update loss
-        # (the reference's val_loss-after-fit, train_autoencoder.py:203-237)
-        mean_ex, mean_e, _ = epoch_stats(a, b)
-        for _ in range(epochs):
-            a = a - lr * 2.0 * mean_ex
-            b = b - lr * 2.0 * mean_e
-            mean_ex, mean_e, loss = epoch_stats(a, b)
-            history.append(loss)
-            if loss < best[0] - 1e-12:
-                best = (loss, a.copy(), b.copy())
-                stale = 0
-            else:
-                stale += 1
-                if stale >= patience:
-                    break
-        _, a, b = best
-        return LinearAutoencoder(a=a, b=b), history
-    finally:
-        persisted.unpersist()
+        init, _ = stats(np.full(n_features, 0.5), np.zeros(n_features))
+        best, history = fit_early_stopping(step, init, epochs, patience)
+    return LinearAutoencoder(a=best[0], b=best[1]), history

@@ -1,4 +1,4 @@
-"""Reconstruction-error scoring (SURVEY §2.5-A6/A7/A8/A9/A11, §2.2-P7/P8).
+"""Reconstruction-error scoring (SURVEY §2.5-A6/A7/A8/A9/A11, §2.2-P7).
 
 Reference semantics:
 * per-window MSE = mean((X - X̂)²) over BOTH the time and feature axes
@@ -7,6 +7,7 @@ Reference semantics:
 * per-feature MSE = mean over the time axis only
   (realtime_detector.py:309-311);
 * threshold split normal/anomalous (filter_anomalous_data.py:142-146);
+  the P8 split that writes the two sets is ``cli.cmd_filter``;
 * 50-bin density histogram of errors (train_autoencoder.py:280-292);
 * percentile threshold suggestion (config.yaml:113-118, doc-only there —
   implemented for real here, A11).
@@ -123,11 +124,6 @@ def threshold_split(mse_df: DataFrame, threshold: float) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .withColumn("pct", F.col("n") / F.sum("n").over(total) * 100.0)
     )
-
-
-def anomaly_windows(mse_df: DataFrame, threshold: float) -> DataFrame:
-    """P8: the anomalous subset (the filter of filter_anomalous_data.py:142-146)."""
-    return mse_df.filter(F.col("mse") > F.lit(threshold))
 
 
 def mse_histogram(mse_df: DataFrame, bins: int = 50) -> DataFrame:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,3 +24,22 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("tests")
     yield s
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), Spark jobs fn ran)``, counted under a
+    fresh job group through the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -129,18 +128,10 @@ def test_threshold_from_all_windows_when_validation_empty(spark, tmp_path, proce
     np.testing.assert_array_equal(both["is_anomaly"].to_numpy(), mse[ids] > threshold)
 
 
-def test_stage_job_gates(spark, tmp_path, processed):
-    sc = spark.sparkContext
+def test_stage_job_gates(tmp_path, processed, count_jobs):
     cfg = _cfg(tmp_path, "lstm")
     for name, fn in (("train", cmd_train), ("filter", cmd_filter)):
-        group = f"cli-{name}-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn(cfg, input_path=processed)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        got = len(sc.statusTracker().getJobIdsForGroup(group))
+        _, got = count_jobs(lambda: fn(cfg, input_path=processed))
         assert got <= JOB_GATES[name], (
             f"cmd_{name}: {got} Spark jobs (gate {JOB_GATES[name]}) — a "
             "consumer no longer reads the one cut windows frame"

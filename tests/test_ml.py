@@ -18,6 +18,7 @@ from prometheus_anomaly_detection_lstm_spark.ml.infer import score_windows
 from prometheus_anomaly_detection_lstm_spark.ml.train import (
     LinearAutoencoder,
     collect_windows,
+    fit_early_stopping,
     fit_threshold,
     train_linear_autoencoder,
     train_val_split,
@@ -114,11 +115,76 @@ def test_distributed_training_matches_driver(windows_df):
     )
 
     x = collect_windows(windows_df)
-    m_drv, h_drv = train_linear_autoencoder(x, epochs=15, patience=50)
-    m_dist, h_dist = train_linear_autoencoder_distributed(
-        windows_df, epochs=15, patience=50
+    # patience >= epochs never stops; at lr=2 the loss grows ~14x an
+    # epoch, so the stop fires after epoch 4 whatever the sum order
+    for kw, n_epochs in (
+        ({"epochs": 15, "patience": 50}, 15),
+        ({"epochs": 15, "lr": 2.0, "patience": 3}, 4),
+    ):
+        m_drv, h_drv = train_linear_autoencoder(x, **kw)
+        m_dist, h_dist = train_linear_autoencoder_distributed(windows_df, **kw)
+        assert len(h_drv) == len(h_dist) == n_epochs
+        # same math, different partial-sum order -> equal to float tolerance
+        np.testing.assert_allclose(m_dist.a, m_drv.a, rtol=1e-9)
+        np.testing.assert_allclose(m_dist.b, m_drv.b, rtol=1e-9, atol=1e-12)
+        np.testing.assert_allclose(h_dist, h_drv, rtol=1e-9)
+
+
+def test_distributed_training_job_count(spark, windows_df, count_jobs):
+    """One Spark job per epoch plus a fixed set-up: the shared
+    partial-sum job must not grow a second job per epoch."""
+    from prometheus_anomaly_detection_lstm_spark.ml.train import (
+        train_linear_autoencoder_distributed,
     )
-    # same math, different partial-sum order -> equal to float tolerance
-    np.testing.assert_allclose(m_dist.a, m_drv.a, rtol=1e-9)
-    np.testing.assert_allclose(m_dist.b, m_drv.b, rtol=1e-9, atol=1e-12)
-    np.testing.assert_allclose(h_dist, h_drv, rtol=1e-9)
+
+    # 12 windows in 4 partitions: a set-up cost that does not depend on
+    # how many shuffle partitions the windows plan was cut into
+    rows = [(i, w.tolist()) for i, w in enumerate(collect_windows(windows_df)[:12])]
+    small = spark.createDataFrame(
+        rows, "window_id bigint, features array<array<double>>"
+    ).repartition(4)
+    counts = {
+        epochs: count_jobs(
+            lambda: train_linear_autoencoder_distributed(
+                small, epochs=epochs, patience=epochs
+            )
+        )[1]
+        for epochs in (2, 5)
+    }
+    assert counts[5] - counts[2] == 3
+    assert counts[5] <= 9  # 5 epochs, the pre-epoch job, 3 set-up jobs
+
+
+def _scripted(losses):
+    """A step that returns a fresh params array per epoch and the next
+    scripted loss; ``made`` records every params object it returned."""
+    made = []
+
+    def step(params):
+        made.append(np.array([float(len(made) + 1)]))
+        return made[-1], losses[len(made) - 1]
+
+    return step, made
+
+
+def test_fit_early_stopping_policy():
+    init = np.zeros(1)
+    # patience 3: epochs 3-5 do not beat epoch 2, so epoch 5 stops and
+    # epoch 2's params object comes back; epoch 6's loss is never seen
+    step, made = _scripted([3.0, 2.0, 2.5, 2.4, 2.3, 1.0])
+    best, hist = fit_early_stopping(step, init, epochs=10, patience=3)
+    assert hist == [3.0, 2.0, 2.5, 2.4, 2.3]
+    assert best is made[1]
+    # a gain under 1e-12 is stale; a larger one improves
+    step, made = _scripted([1.0, 1.0 - 5e-13, 1.0 - 2e-12])
+    best, hist = fit_early_stopping(step, init, epochs=3, patience=2)
+    assert len(hist) == 3 and best is made[2]
+    step, made = _scripted([1.0, 1.0 - 5e-13, 0.5])
+    best, hist = fit_early_stopping(step, init, epochs=3, patience=1)
+    assert len(hist) == 2 and best is made[0]
+    # no epoch at all, or none that improves: the initial params
+    best, hist = fit_early_stopping(step, init, epochs=0, patience=1)
+    assert best is init and hist == []
+    step, _ = _scripted([np.inf, np.nan])
+    best, hist = fit_early_stopping(step, init, epochs=2, patience=5)
+    assert best is init and len(hist) == 2
