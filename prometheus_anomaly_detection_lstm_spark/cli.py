@@ -18,9 +18,12 @@ consumer reads that one frame.  ``train`` collects the train and
 validation tensors and takes the p95 threshold in NumPy, from the
 trained model's per-window MSE over the validation tensor it already
 holds.  ``filter`` scores the cut frame once and writes both splits from
-one cut (window, is_anomaly) frame.  Both stages release the blocks of
-the frames they cut when they return, so a long-lived session does not
-pile them up.
+one cut (window, is_anomaly) frame.  ``preprocess`` fits its scaler once
+(preprocess_data.py:85-100): one ``fit_params`` aggregation over the cut
+filled frame, collected; ``scaler_params.parquet`` and the scaled frame
+(a literal projection of the cut frame) both come from those rows.
+Every stage releases the blocks of the frames it cuts when it returns,
+so a long-lived session does not pile them up.
 """
 
 from __future__ import annotations
@@ -105,12 +108,20 @@ def cmd_preprocess(cfg: EngineConfig, input_path: str | None = None) -> None:
         "hour_of_day", hour_of_day("ts")
     )
     features = metric_cols + ["day_of_week", "hour_of_day"]
-    params = scale_ops.fit_params(df, features)
-    params.write.mode("overwrite").parquet(_art(cfg, "scaler_params.parquet"))
-    scaled = scale_ops.scale_data(df, features, cfg.scaler_type)
-    scaled.write.mode("overwrite").parquet(
-        _art(cfg, cfg.processed_output_filename)
-    )
+    df = cut_lineage(df)
+    try:
+        params = scale_ops.fit_params(df, features)
+        rows = params.collect()
+        # one file, as the aggregation's single partition wrote it
+        spark.createDataFrame(rows, params.schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(_art(cfg, "scaler_params.parquet"))
+        scaled = scale_ops.scale_data(df, features, cfg.scaler_type, rows)
+        scaled.write.mode("overwrite").parquet(
+            _art(cfg, cfg.processed_output_filename)
+        )
+    finally:
+        release_checkpoints([df])
 
 
 def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
@@ -156,8 +167,7 @@ def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
     held = x_val if x_val.size else x_train
     err = held - model.predict(held)
     threshold = float(np.percentile((err * err).mean(axis=(1, 2)), 95))
-    # scaler params were already persisted by the preprocess stage
-    save_artifacts(cfg.artifacts_dir, model, history, None, threshold)
+    save_artifacts(cfg.artifacts_dir, model, history, threshold)
 
 
 def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:

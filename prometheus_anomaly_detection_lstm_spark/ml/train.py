@@ -155,23 +155,15 @@ def save_artifacts(
     out_dir: str,
     model: LinearAutoencoder,
     history: list[float],
-    scaler_params,  # DataFrame from operators.scale.fit_params, or None
     threshold: float,
 ) -> None:
-    """S9/S10/S14 equivalents: weights npz + params parquet + meta json.
+    """S10/S14 equivalents: weights npz + meta json (history, threshold).
 
-    ``scaler_params=None`` skips the params write (the preprocess stage
-    already persisted them).  When given, the params are materialized
-    to the driver BEFORE writing — a lazy ``df.write`` pointed at a path
-    the same plan reads would self-destruct (overwrite deletes the
-    input files mid-scan).
+    The scaler artifact (S9) is the preprocess stage's
+    ``scaler_params.parquet``; training writes no second copy.
     """
     os.makedirs(out_dir, exist_ok=True)
     model.save(os.path.join(out_dir, "autoencoder_weights.npz"))
-    if scaler_params is not None:
-        pdf = scaler_params.toPandas()
-        path = os.path.join(out_dir, "scaler_params_fitted.parquet")
-        pdf.to_parquet(path, index=False)
     with open(os.path.join(out_dir, "training_meta.json"), "w") as fh:
         json.dump({"history": history, "threshold": threshold}, fh)
 

@@ -1,23 +1,27 @@
 """Feature scaling with sklearn-exact semantics (SURVEY §2.5-A4/A5, M1, H2).
 
-The reference fits ``MinMaxScaler`` / ``StandardScaler`` over ALL columns
-of the processed frame — including the two calendar features
-(preprocess_data.py:85-93; load-bearing, see SURVEY §3.2) — and persists
-the fitted scaler (joblib).  Here the "scaler artifact" is a tiny params
-DataFrame (feature, min, max, mean, std_pop) — trivially persistable as
-Parquet/JSON (S9) and exactly reproducible, unlike MLlib's scalers:
+The reference fits ``MinMaxScaler`` / ``StandardScaler`` once over ALL
+columns of the processed frame — including the two calendar features
+(preprocess_data.py:85-93; load-bearing, see SURVEY §3.2) — persists it
+(joblib) and applies that one fitted scaler wherever it scales.  Here the
+"scaler artifact" is a tiny params table (feature, min, max, mean,
+std_pop), persistable as Parquet/JSON (S9) and exactly reproducible:
 
-* MinMax degenerate range: sklearn maps a constant column to 0
-  (``scale_`` falls back to 1) — replicated via a CASE on max==min.
-* StandardScaler uses POPULATION std (ddof=0); Spark's ``stddev`` and
-  MLlib's StandardScaler are sample std — we use ``stddev_pop``.
+* :func:`fit_params` is the one fit, a single global aggregation whose
+  rows the caller collects once;
+* :func:`affine` maps those rows to a per-feature (shift, divisor), the
+  only home of the sklearn rule (population std, ddof=0; a zero divisor
+  becomes 1, so a constant column maps to 0);
+* :func:`scale_data` is one projection with those values as literals.
 
-Fit is a single global aggregation (map-side partial, one exchange to a
-1-row frame); transform is a broadcast cross join + projections — pure
-Catalyst, no UDF, fully codegen'd.
+:func:`minmax_project` serves the registry's lazy fused plan
+(``plans/pipeline.preprocessed``), whose fill summary already carries
+each feature's min/max, so it never runs a separate fit.
 """
 
 from __future__ import annotations
+
+from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,35 +46,39 @@ def fit_params(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def _wide_params(df: DataFrame, cols: list[str], which: str) -> DataFrame:
-    if which == "minmax":
-        return df.agg(
-            *[F.min(c).alias(f"__lo_{c}") for c in cols],
-            *[F.max(c).alias(f"__hi_{c}") for c in cols],
-        )
-    return df.agg(
-        *[F.avg(c).alias(f"__mu_{c}") for c in cols],
-        *[F.stddev_pop(c).alias(f"__sd_{c}") for c in cols],
-    )
+def affine(params: Iterable, cols: list[str], scaler_type: str) -> tuple[list, list]:
+    """Fitted params rows -> ``(shift, divisor)`` lists, one entry per col.
 
-
-def minmax_transform(df: DataFrame, cols: list[str]) -> DataFrame:
-    """M1/A4: ``(x - min) / (max - min)``; constant column -> 0.0.
-
-    sklearn MinMaxScaler semantics (preprocess_data.py:93): zero range
-    uses scale 1, so output is ``x - min`` = 0 for every row.
+    MinMax: ``(min, max - min)``; Standard: ``(mean, std_pop)``; an
+    unknown ``scaler_type`` falls back to MinMax (preprocess_data.py:89-91).
+    A zero divisor becomes 1 (sklearn's ``scale_`` rule).  A null
+    statistic (an all-null column) stays None, so the column stays null.
     """
-    params = _wide_params(df, cols, "minmax")
-    out = df.crossJoin(F.broadcast(params))
+    rows = {r["feature"]: r for r in params}
+    shift, divisor = [], []
     for c in cols:
-        lo, hi = F.col(f"__lo_{c}"), F.col(f"__hi_{c}")
-        scaled = F.when(hi == lo, F.col(c) - lo).otherwise(
-            (F.col(c) - lo) / (hi - lo)
-        )
-        out = out.withColumn(c, scaled)
-    return out.drop(
-        *[f"__lo_{c}" for c in cols], *[f"__hi_{c}" for c in cols]
-    )
+        r = rows[c]
+        if scaler_type == "StandardScaler":
+            lo, d = r["mean"], r["std_pop"]
+        else:
+            lo, hi = r["min"], r["max"]
+            d = None if lo is None or hi is None else hi - lo
+        shift.append(lo)
+        divisor.append(1.0 if d == 0 else d)
+    return shift, divisor
+
+
+def scale_data(
+    df: DataFrame, cols: list[str], scaler_type: str, params: Iterable
+) -> DataFrame:
+    """M1/A4/A5: ``(c - shift) / divisor`` per col, from fitted ``params``
+    (see :func:`affine`), as one select with literal values."""
+    shift, divisor = affine(params, cols, scaler_type)
+    scaled = {
+        c: ((F.col(c) - F.lit(s).cast("double")) / F.lit(d).cast("double")).alias(c)
+        for c, s, d in zip(cols, shift, divisor)
+    }
+    return df.select(*[scaled.get(c, c) for c in df.columns])
 
 
 def minmax_project(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -80,7 +88,7 @@ def minmax_project(df: DataFrame, cols: list[str]) -> DataFrame:
     ``fill.ffill_bfill_scalable(attach_minmax=cols)``) — the fused
     pipeline shape that avoids re-computing the upstream plan under a
     separate fit aggregation.  Same sklearn semantics as
-    :func:`minmax_transform` (constant column -> 0.0).
+    :func:`scale_data` with ``MinMaxScaler`` (constant column -> 0.0).
     """
     # one select with one parsed expression per scaled column: the
     # withColumn-per-column form re-analyzes the growing plan each
@@ -101,24 +109,3 @@ def minmax_project(df: DataFrame, cols: list[str]) -> DataFrame:
             if c not in drop
         ]
     )
-
-
-def standard_transform(df: DataFrame, cols: list[str]) -> DataFrame:
-    """M1/A5: ``(x - mean) / std_pop``; zero std -> ``x - mean`` (sklearn)."""
-    params = _wide_params(df, cols, "standard")
-    out = df.crossJoin(F.broadcast(params))
-    for c in cols:
-        mu, sd = F.col(f"__mu_{c}"), F.col(f"__sd_{c}")
-        scaled = F.when(sd == 0.0, F.col(c) - mu).otherwise((F.col(c) - mu) / sd)
-        out = out.withColumn(c, scaled)
-    return out.drop(
-        *[f"__mu_{c}" for c in cols], *[f"__sd_{c}" for c in cols]
-    )
-
-
-SCALERS = {"MinMaxScaler": minmax_transform, "StandardScaler": standard_transform}
-
-
-def scale_data(df: DataFrame, cols: list[str], scaler_type: str = "MinMaxScaler") -> DataFrame:
-    """Dispatch; unknown scaler falls back to MinMax (preprocess_data.py:89-91)."""
-    return SCALERS.get(scaler_type, minmax_transform)(df, cols)

@@ -81,9 +81,9 @@ def preprocessed(
     # Fused fit: the fill's day-summary aggregate also carries each
     # feature's global min/max (fill never changes a column's value
     # SET, so pre-fill == post-fill extrema), making the scale step a
-    # pure projection.  The unfused form (minmax_transform over the
-    # filled frame) executes the whole pivot->fill subtree twice —
-    # once under the fit aggregation, once for the transform.
+    # pure projection.  The unfused form (fit_params over the filled
+    # frame, then scale_data) executes the whole pivot->fill subtree
+    # twice — once under the fit aggregation, once for the transform.
     df = fill.ffill_bfill_scalable(
         df, METRICS, day_col="__day", attach_minmax=FEATURES
     )

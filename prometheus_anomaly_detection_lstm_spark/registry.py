@@ -93,7 +93,8 @@ def q_standard_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     df = P.with_calendar(P.wide_frame(spark, sf_dir))
     df = fill.ffill_bfill_scalable(df, P.METRICS)
-    df = scale.standard_transform(df, P.FEATURES)
+    rows = scale.fit_params(df, P.FEATURES).collect()
+    df = scale.scale_data(df, P.FEATURES, "StandardScaler", rows)
     return df.select("ts", *[F.round(c, 6).alias(c) for c in P.FEATURES])
 
 

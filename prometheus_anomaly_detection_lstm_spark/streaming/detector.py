@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.autoencoder import StubAutoencoder
+from ..operators.scale import affine
 from .exporter import DetectorMetrics
 
 
@@ -46,7 +47,7 @@ class DetectorConfig:
     #: into calibration (Siffer et al., KDD'17).
     threshold: float | None = 0.0013
     interval_seconds: int = 30
-    scaler_params: pd.DataFrame | None = None  # feature -> (min, max)
+    scaler_params: pd.DataFrame | None = None  # scaler_params.parquet, as MinMax
     #: any scorer exposing predict((1, L, F)) -> (1, L, F): the stub,
     #: a trained LinearAutoencoder, or the NumPy LSTM (ml/lstm_np.py)
     model: object = field(default_factory=StubAutoencoder)
@@ -82,14 +83,12 @@ def _prep_window(pdf: pd.DataFrame, cfg: DetectorConfig) -> np.ndarray | None:
     vals = pdf[cfg.features].astype("float64")
     if vals.isna().any().any():  # ffill/bfill only when NaN present (:224-230)
         vals = vals.ffill().bfill()
-    if cfg.scaler_params is not None:
-        p = cfg.scaler_params.set_index("feature")
-        lo = p["min"].reindex(cfg.features).to_numpy()
-        hi = p["max"].reindex(cfg.features).to_numpy()
-        rng = np.where(hi == lo, 1.0, hi - lo)
-        vals = (vals.to_numpy() - lo) / rng
-    else:
-        vals = vals.to_numpy()
+    vals = vals.to_numpy()
+    if cfg.scaler_params is not None:  # the fitted MinMax scaler (:231-242)
+        shift, divisor = affine(
+            cfg.scaler_params.to_dict("records"), cfg.features, "MinMaxScaler"
+        )
+        vals = (vals - np.asarray(shift, np.float64)) / np.asarray(divisor, np.float64)
     return vals[np.newaxis, :, :]  # (1, L, F) — :242
 
 

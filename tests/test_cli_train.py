@@ -1,9 +1,16 @@
-"""CLI train -> filter end-to-end: trained LSTM weights + matching
-threshold artifacts, consumed by the filter stage (M4 + S9/S10/S14).
+"""CLI preprocess, train and filter stages.
+
+preprocess: the processed parquet and ``scaler_params.parquet`` equal a
+pandas/NumPy oracle (ffill/bfill, calendar features, sklearn scaler
+rules with ddof=0), and the detector scales a live window exactly as
+preprocess scaled the training data (A1-A5, M1, S9).  train -> filter:
+trained LSTM weights + matching threshold artifacts, consumed by the
+filter stage (M4 + S10/S14).
 
 Also gates the Spark jobs each stage runs and the checkpoint blocks it
-leaves behind: both stages build the windows once and release the
-frames they cut.
+leaves behind: preprocess fits its scaler once over one cut frame, and
+train and filter build the windows once; every stage releases the
+frames it cuts.
 """
 
 from __future__ import annotations
@@ -13,17 +20,172 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from prometheus_anomaly_detection_lstm_spark.cli import cmd_filter, cmd_train
+from prometheus_anomaly_detection_lstm_spark.cli import (
+    cmd_filter,
+    cmd_preprocess,
+    cmd_train,
+)
 from prometheus_anomaly_detection_lstm_spark.config import EngineConfig
 from prometheus_anomaly_detection_lstm_spark.ml.lstm_np import LSTMAutoencoder
+from prometheus_anomaly_detection_lstm_spark.streaming.detector import (
+    DetectorConfig,
+    run_detection_cycle,
+)
+from prometheus_anomaly_detection_lstm_spark.streaming.exporter import DetectorMetrics
 
 #: stage -> Spark jobs one call runs on the fixture.  Exact: the windows
 #: are built once per stage, so a consumer chained above the cut (a
 #: rebuild of the windows or a rescoring) shows up here.  With the
 #: windows re-planned per consumer, train ran 30 jobs and filter 19.
-JOB_GATES = {"train": 10, "filter": 13}
+#: preprocess fits once over its cut frame; with a second fit under the
+#: transform (a broadcast cross join over the fill plan) it ran 14.
+JOB_GATES = {"preprocess": 9, "train": 10, "filter": 13}
+
+#: the raw fixture's metrics, in the sorted order preprocess uses
+RAW_METRICS = ["cpu", "dead", "mem", "net"]
+
+#: the scaler artifact's schema (operators/scale.fit_params)
+PARAMS_SCHEMA = pa.schema(
+    [("feature", pa.string())]
+    + [(c, pa.float64()) for c in ("min", "max", "mean", "std_pop")]
+)
+
+
+@pytest.fixture()
+def raw(spark, tmp_path):
+    """A collected wide frame crossing midnight: leading and interior
+    nulls (cpu), interior nulls (net), a constant column (mem) and an
+    all-null metric (dead).  The last 20 rows have every live metric."""
+    ts = pd.date_range("2024-01-01 23:00", "2024-01-02 01:00", freq="1min")
+    rng = np.random.default_rng(5)
+    cpu = rng.uniform(0, 100, len(ts))
+    cpu[:3] = np.nan
+    cpu[40:43] = np.nan
+    net = rng.normal(5, 2, len(ts))
+    net[[10, 61, 90]] = np.nan
+    pdf = pd.DataFrame(
+        {
+            "ts": ts,
+            "cpu": cpu,
+            "dead": np.nan,
+            "mem": 7.5,
+            "net": net,
+            "day_of_week": ts.dayofweek.astype("int64"),
+            "hour_of_day": ts.hour.astype("int64"),
+        }
+    )
+    path = str(tmp_path / "raw.parquet")
+    spark.createDataFrame(pdf).write.parquet(path)
+    # Arrow turns the NaNs into nulls, as the collect stage leaves them
+    assert spark.read.parquet(path).where("dead IS NULL").count() == len(pdf)
+    return path, pdf
+
+
+def _preprocess_oracle(pdf, scaler_type):
+    """(scaled features, params table) in pandas/NumPy."""
+    frame = pdf.copy()
+    frame[RAW_METRICS] = frame[RAW_METRICS].ffill().bfill()
+    frame["day_of_week"] = frame["ts"].dt.dayofweek
+    frame["hour_of_day"] = frame["ts"].dt.hour
+    features = RAW_METRICS + ["day_of_week", "hour_of_day"]
+    x = frame[features].astype(np.float64)
+    params = pd.DataFrame(
+        {
+            "feature": features,
+            "min": x.min().to_numpy(),
+            "max": x.max().to_numpy(),
+            "mean": x.mean().to_numpy(),
+            "std_pop": x.std(ddof=0).to_numpy(),
+        }
+    )
+    if scaler_type == "StandardScaler":
+        shift, divisor = params["mean"].to_numpy(), params["std_pop"].to_numpy()
+    else:  # MinMax, also for an unknown name
+        shift = params["min"].to_numpy()
+        divisor = params["max"].to_numpy() - shift
+    divisor = np.where(divisor == 0, 1.0, divisor)
+    return (x - shift) / divisor, params
+
+
+def _art(cfg, name):
+    return os.path.join(cfg.artifacts_dir, name)
+
+
+@pytest.mark.parametrize(
+    "scaler_type", ["MinMaxScaler", "StandardScaler", "NoSuchScaler"]
+)
+def test_preprocess_matches_oracle(tmp_path, raw, scaler_type):
+    path, pdf = raw
+    queries = {m: m for m in RAW_METRICS}
+    cfg = _cfg(tmp_path, "lstm", queries=queries, scaler_type=scaler_type)
+    cmd_preprocess(cfg, input_path=path)
+    want, want_params = _preprocess_oracle(pdf, scaler_type)
+
+    table = pq.read_table(_art(cfg, cfg.processed_output_filename))
+    assert table.num_rows == len(pdf)
+    # the all-null metric stays null: no statistic became a NaN literal
+    assert table.column("dead").null_count == len(pdf)
+    got = table.to_pandas().sort_values("ts").reset_index(drop=True)
+    np.testing.assert_array_equal(
+        got["ts"].to_numpy("datetime64[us]"), pdf["ts"].to_numpy("datetime64[us]")
+    )
+    for c in want.columns:
+        assert table.schema.field(c).type == pa.float64(), c
+        np.testing.assert_allclose(
+            got[c].to_numpy(np.float64), want[c].to_numpy(), rtol=1e-9, atol=1e-12
+        )
+
+    params = pq.read_table(_art(cfg, "scaler_params.parquet"))
+    assert params.schema.equals(PARAMS_SCHEMA)
+    got_params = params.to_pandas()
+    assert list(got_params["feature"]) == list(want_params["feature"])
+    for c in ("min", "max", "mean", "std_pop"):
+        assert params.column(c).null_count == 1, c  # the all-null metric
+        np.testing.assert_allclose(
+            got_params[c].to_numpy(np.float64),
+            want_params[c].to_numpy(),
+            rtol=1e-12,
+            atol=1e-12,
+        )
+
+
+def test_detector_scales_like_preprocess(tmp_path, raw):
+    """Train/serve parity: fed the rows of ``scaler_params.parquet``, the
+    detector turns a raw window into the processed parquet's rows for
+    the same timestamps."""
+    path, pdf = raw
+    cfg = _cfg(tmp_path, "lstm", queries={m: m for m in RAW_METRICS})
+    cmd_preprocess(cfg, input_path=path)
+    processed = pd.read_parquet(_art(cfg, cfg.processed_output_filename))
+    processed = processed.sort_values("ts").reset_index(drop=True)
+
+    class Recorder:
+        def predict(self, x):
+            self.seen = x
+            return x
+
+    live = ["cpu", "mem", "net"]
+    length = 20
+    det = DetectorConfig(
+        metrics=live,
+        sequence_length=length,
+        scaler_params=pd.read_parquet(_art(cfg, "scaler_params.parquet")),
+        model=Recorder(),
+    )
+    tail = pdf.tail(length)
+    assert not tail[live].isna().any().any()
+    window = tail.melt(
+        id_vars="ts", value_vars=live, var_name="metric", value_name="value"
+    )
+    assert run_detection_cycle(window, det, DetectorMetrics()) is not None
+    seen = det.model.seen
+    assert seen.shape == (1, length, len(det.features))
+    want = processed[det.features].tail(length).to_numpy()
+    np.testing.assert_allclose(seen[0], want, rtol=1e-12, atol=0.0)
 
 
 @pytest.fixture()
@@ -128,23 +290,32 @@ def test_threshold_from_all_windows_when_validation_empty(spark, tmp_path, proce
     np.testing.assert_array_equal(both["is_anomaly"].to_numpy(), mse[ids] > threshold)
 
 
-def test_stage_job_gates(tmp_path, processed, count_jobs):
-    cfg = _cfg(tmp_path, "lstm")
-    for name, fn in (("train", cmd_train), ("filter", cmd_filter)):
-        _, got = count_jobs(lambda: fn(cfg, input_path=processed))
+def test_stage_job_gates(tmp_path, raw, processed, count_jobs):
+    cfg = _cfg(tmp_path, "lstm", queries={m: m for m in RAW_METRICS})
+    for name, fn, path in (
+        ("preprocess", cmd_preprocess, raw[0]),
+        ("train", cmd_train, processed),
+        ("filter", cmd_filter, processed),
+    ):
+        _, got = count_jobs(lambda: fn(cfg, input_path=path))
         assert got <= JOB_GATES[name], (
             f"cmd_{name}: {got} Spark jobs (gate {JOB_GATES[name]}) — a "
-            "consumer no longer reads the one cut windows frame"
+            "consumer no longer reads the stage's one cut frame"
         )
 
 
-def test_stages_release_checkpoint_blocks(spark, tmp_path, processed):
-    """A long-lived session running train and filter repeatedly keeps
-    no checkpoint blocks from either stage."""
+def test_stages_release_checkpoint_blocks(spark, tmp_path, raw, processed):
+    """A long-lived session running preprocess, train and filter
+    repeatedly keeps no checkpoint blocks from any stage."""
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
-    cfg = _cfg(tmp_path, "linear")
+    cfg = _cfg(tmp_path, "linear", queries={m: m for m in RAW_METRICS})
     for _ in range(2):
-        cmd_train(cfg, input_path=processed)
-        cmd_filter(cfg, input_path=processed)
-    assert persistent().size() == before
+        for fn, path in (
+            (cmd_preprocess, raw[0]),
+            (cmd_train, processed),
+            (cmd_filter, processed),
+        ):
+            fn(cfg, input_path=path)
+            # checked per stage: a JVM GC may drop a leaked block later
+            assert persistent().size() == before, fn.__name__

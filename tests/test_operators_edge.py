@@ -80,7 +80,8 @@ def test_minmax_degenerate_and_unknown_scaler(spark):
     df = spark.createDataFrame(
         [(1.0, 7.0), (2.0, 7.0), (3.0, 7.0)], ["a", "const"]
     )
-    out = scale.scale_data(df, ["a", "const"], "NoSuchScaler").collect()
+    rows = scale.fit_params(df, ["a", "const"]).collect()
+    out = scale.scale_data(df, ["a", "const"], "NoSuchScaler", rows).collect()
     # unknown scaler falls back to MinMax (preprocess_data.py:89-91)
     assert sorted(r.a for r in out) == [0.0, 0.5, 1.0]
     # degenerate range -> 0 (sklearn scale_=1 handling, SURVEY H2)
@@ -89,7 +90,10 @@ def test_minmax_degenerate_and_unknown_scaler(spark):
 
 def test_standard_scaler_population_std(spark):
     df = spark.createDataFrame([(1.0,), (2.0,), (3.0,)], ["a"])
-    out = sorted(r.a for r in scale.standard_transform(df, ["a"]).collect())
+    rows = scale.fit_params(df, ["a"]).collect()
+    out = sorted(
+        r.a for r in scale.scale_data(df, ["a"], "StandardScaler", rows).collect()
+    )
     # ddof=0: std = sqrt(2/3), NOT sample std 1.0 (SURVEY H2/A5)
     import math
 

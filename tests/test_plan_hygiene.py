@@ -49,7 +49,6 @@ BNLJ_SCALAR_BROADCASTS = {
     "fill_median",              # per-column medians summary row
     "mse_histogram",            # min/max bounds row
     "rolling_features",         # day-offset carry summary
-    "standard_scaled",          # scaler params row
     "text_frequent_tokens",     # global token-count scalar
     "text_lm_trigram_scores",   # corpus-total scalar
     "text_log_odds_keywords",   # one-row corpus token-total aggregate

@@ -56,7 +56,8 @@ def test_minmax_range_and_roundtrip(spark, vals):
     if not present:
         return
     df = _df(spark, vals)
-    scaled = scale.minmax_transform(df, ["m"])
+    rows = scale.fit_params(df, ["m"]).collect()
+    scaled = scale.scale_data(df, ["m"], "MinMaxScaler", rows)
     out = [r.m for r in scaled.orderBy("ts").collect() if r.m is not None]
     assert all(-1e-9 <= v <= 1 + 1e-9 for v in out)  # range law
     # round-trip: inverse(transform(x)) == x
@@ -88,9 +89,12 @@ def test_standard_scaler_moments(spark, vals):
         # correctly taking the sklearn constant-column branch instead
         return
     df = _df(spark, vals)
+    rows = scale.fit_params(df, ["m"]).collect()
     out = [
         r.m
-        for r in scale.standard_transform(df, ["m"]).orderBy("ts").collect()
+        for r in scale.scale_data(df, ["m"], "StandardScaler", rows)
+        .orderBy("ts")
+        .collect()
         if r.m is not None
     ]
     mean = sum(out) / len(out)

@@ -48,7 +48,8 @@ def main() -> None:
         wide = metrics_wide(long, P.METRICS)
         df = P.with_calendar(wide).withColumn("__day", F.to_date("ts"))
         df = fill.ffill_bfill_scalable(df, P.METRICS, day_col="__day")
-        df = scale.minmax_transform(df, P.FEATURES)
+        rows = scale.fit_params(df, P.FEATURES).collect()
+        df = scale.scale_data(df, P.FEATURES, "MinMaxScaler", rows)
         out = SC.window_mse(
             df,
             P.FEATURES,
