@@ -64,4 +64,4 @@ zoo:
 	python tools/detector_zoo_eval.py
 
 clean:
-	rm -rf spark-warehouse metastore_db derby.log .pytest_cache .hypothesis
+	rm -rf spark-warehouse metastore_db derby.log .pytest_cache .hypothesis .perfbench_work .benchmarks

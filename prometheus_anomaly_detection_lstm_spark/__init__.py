@@ -18,3 +18,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from prometheus_anomaly_detection_lstm_spark import shipping as _shipping
+
+_shipping.install_lazy_zip_invalidation()

@@ -63,12 +63,3 @@ def ntz_epoch_seconds(ts: Column | str) -> Column:
         + F.minute(c).cast("double") * 60
         + sec.cast("double")
     )
-
-
-def coerce_double(c: Column) -> Column:
-    """String -> double with NULL on failure.
-
-    Matches ``pd.to_numeric(errors='coerce')`` at data_collector.py:66 —
-    Spark's cast yields NULL for unparseable input, same semantics.
-    """
-    return c.cast("double")

@@ -408,37 +408,6 @@ def minhash_lsh_dedup(
     return _verify_jaccard(shingles(docs), cands, threshold)
 
 
-def minhash_lsh_dedup_restricted(
-    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """A/B variant of ``minhash_lsh_dedup``: the verify stage shingles
-    ONLY docs that appear in at least one candidate pair (left-semi
-    against the pair ids) instead of the whole corpus.
-
-    Answer-identical to the unrestricted path (verification only ever
-    consults candidate docs' shingles; ``sizes`` joins into candidate
-    pairs, so non-candidate rows were dead weight).  The trade: the
-    verify subtree no longer shares the shingle scan subplan with the
-    signature subtree (ReuseExchange can merge only identical
-    subplans), but it skips the explode+distinct over every
-    non-candidate doc — a win when candidates are sparse, a loss when
-    most docs collide somewhere.  Benchmarked against the default in
-    BASELINE.md; the default stays whichever measures faster.
-    """
-    cands = lsh_candidate_pairs(minhash_signatures(docs)).persist()
-    cand_ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .union(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    out = _verify_jaccard(
-        shingles(docs.join(cand_ids, "doc_id", "left_semi")),
-        cands,
-        threshold,
-    )
-    return out
-
-
 def minhash_lsh_dedup_incremental(
     docs: DataFrame,
     new_min_id: int,

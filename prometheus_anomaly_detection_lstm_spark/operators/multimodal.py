@@ -279,16 +279,6 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phash_near_dup_pairs(as_binary_table(_docs(spark, sf_dir)))
 
 
-def resize_stub(media: DataFrame, target: int = 224) -> DataFrame:
-    """STUB resize: real codecs unavailable -> raises if actually asked
-    to produce pixels; metadata path works."""
-    raise NotImplementedError(
-        "image resize requires a codec library not present in this "
-        "container; use decode_batch's deterministic fake for plumbing "
-        "tests"
-    )
-
-
 FRAME_SCHEMA = (
     "media_id bigint, frame_idx bigint, frame_offset_bytes bigint, "
     "frame_digest string"

@@ -16,12 +16,14 @@ Two layers, both network-free-testable:
    (query, chunk) over a shared HTTP session.  Queries are not split
    into tasks of their own because a Python task has a fixed cost that
    dwarfs a poll: on a 4-vCPU box a read of 16 queries x 7 points took
-   6.6 CPU-s as 16 tasks and 0.9 CPU-s as one, about 0.38 CPU-s per
-   task, most of it PySpark's per-task ``importlib.invalidate_caches()``
-   (``worker_util.setup_spark_files``), which on Python 3.11 re-reads
-   the zip directory behind each of the worker's 16 zipimporters
-   (pyspark.zip, the Spark jars, the shipped package; ~0.24 CPU-s a
-   call).  PromQL stays opaque — ``rate()``/``sum by()`` run
+   6.6 CPU-s as 16 tasks and 0.9 CPU-s as one.  Most of that per-task
+   cost was PySpark's per-task ``importlib.invalidate_caches()``, which
+   on Python 3.11 re-read the zip directory behind each of the worker's
+   18-19 zipimporters (~0.2 CPU-s a call).  The package now installs a
+   lazy invalidation on every worker that imports it (``shipping``): a
+   task on a reused worker adds about 0.09 CPU-s to the process tree
+   (0.34 before), and a fresh worker spends about 0.7 CPU-s of its own
+   on its first task.  PromQL stays opaque — ``rate()``/``sum by()`` run
    inside Prometheus (O2, the source-pushdown analog).  A deterministic
    per-chunk JSON file cache (S5: keyed by query+range+step like the
    reference's diskcache, data_collector.py:34-40) makes re-reads
@@ -326,8 +328,9 @@ class PrometheusStreamReader(_ChunkReader, DataSourceStreamReader):
     chunk per microbatch, carrying every query — the same
     scan-parallelism unit as the batch reader, so a live microbatch
     inside one chunk is ONE Python task.  A Python task costs about
-    0.38 CPU-s of fixed worker set-up whatever it reads (see the module
-    docstring), far more than one poll of every query takes.
+    0.09 CPU-s of fixed set-up on a reused worker and about 0.7 CPU-s on
+    a fresh one, whatever it reads (see the module docstring), more than
+    one poll of every query takes.
 
     An error payload fails the task, so the microbatch fails before its
     offset is committed and a restart re-fetches the same range.

@@ -47,7 +47,10 @@ class DetectorConfig:
     #: into calibration (Siffer et al., KDD'17).
     threshold: float | None = 0.0013
     interval_seconds: int = 30
-    scaler_params: pd.DataFrame | None = None  # scaler_params.parquet, as MinMax
+    scaler_params: pd.DataFrame | None = None  # scaler_params.parquet
+    #: the scaler preprocess fitted (``EngineConfig.scaler_type``), so a
+    #: live window is scaled as the model's training data was
+    scaler_type: str = "MinMaxScaler"
     #: any scorer exposing predict((1, L, F)) -> (1, L, F): the stub,
     #: a trained LinearAutoencoder, or the NumPy LSTM (ml/lstm_np.py)
     model: object = field(default_factory=StubAutoencoder)
@@ -84,9 +87,9 @@ def _prep_window(pdf: pd.DataFrame, cfg: DetectorConfig) -> np.ndarray | None:
     if vals.isna().any().any():  # ffill/bfill only when NaN present (:224-230)
         vals = vals.ffill().bfill()
     vals = vals.to_numpy()
-    if cfg.scaler_params is not None:  # the fitted MinMax scaler (:231-242)
+    if cfg.scaler_params is not None:  # the fitted scaler (:231-242)
         shift, divisor = affine(
-            cfg.scaler_params.to_dict("records"), cfg.features, "MinMaxScaler"
+            cfg.scaler_params.to_dict("records"), cfg.features, cfg.scaler_type
         )
         vals = (vals - np.asarray(shift, np.float64)) / np.asarray(divisor, np.float64)
     return vals[np.newaxis, :, :]  # (1, L, F) — :242

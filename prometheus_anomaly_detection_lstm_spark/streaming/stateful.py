@@ -24,11 +24,14 @@ Deployment note: the stateful operator's partition count is taken from
 ``spark.sql.shuffle.partitions`` at the FIRST run and frozen into the
 checkpoint — size it to the detector-key cardinality before starting
 (200 tasks per micro-batch for one key is pure scheduling overhead).
-Each state partition runs one Python task per micro-batch, and a Python
-task costs about 0.38 CPU-s of fixed worker set-up (measured on a 4-vCPU
-box), most of it PySpark's per-task ``importlib.invalidate_caches()``,
-which on Python 3.11 re-reads the zip directory behind every
-zipimporter on the worker's path.
+Each state partition runs one Python task per micro-batch.  Measured on
+a 4-vCPU box, a Python task on a reused worker adds about 0.09 CPU-s of
+fixed cost to the process tree (0.34 before the package's lazy zip
+invalidation, see ``shipping``); a fresh worker spends about 0.7 CPU-s
+of its own on its first task.  The state function calls :func:`_update`
+by module reference, so every state-partition worker imports the
+package and gets the lazy invalidation; :func:`stateful_detector_stream`
+ships the package for it.
 """
 
 from __future__ import annotations
@@ -40,6 +43,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from prometheus_anomaly_detection_lstm_spark import shipping
 
 OUTPUT_SCHEMA = (
     "detector_id string, window_end timestamp, "
@@ -57,73 +62,88 @@ def make_detector_fn(
     a: float = 0.9,
     b: float = 0.02,
 ):
-    """Build the applyInPandasWithState function (closure carries only
-    plain values — safe to pickle to workers without the package)."""
+    """Build the applyInPandasWithState function.  The closure carries
+    plain values and calls :func:`_update` by module reference, so a
+    worker unpickling it imports this package (which needs
+    ``shipping.ensure_shipped``) and installs the package's lazy zip
+    invalidation."""
     metrics = sorted(metrics)
-    L = sequence_length
 
     def detect(
         key: Any,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        new = pd.concat(list(pdfs), ignore_index=True)
-        if state.exists:
-            ts_arr, m_arr, v_arr = state.get
-            old = pd.DataFrame(
-                {"ts": ts_arr, "metric": m_arr, "value": v_arr}
-            )
-            old["ts"] = pd.to_datetime(old["ts"])
-            allrows = pd.concat(
-                [old, new[["ts", "metric", "value"]]], ignore_index=True
-            )
-        else:
-            allrows = new[["ts", "metric", "value"]]
-        allrows = allrows.drop_duplicates(["ts", "metric"], keep="first")
+        return _update(key, pdfs, state, metrics, sequence_length, threshold, a, b)
 
-        # ring trim: keep the last 2L distinct timestamps
-        keep_ts = sorted(allrows["ts"].unique())[-(L * 2) :]
-        allrows = allrows[allrows["ts"].isin(keep_ts)]
-        state.update(
-            (
-                list(allrows["ts"]),
-                list(allrows["metric"]),
-                [float(v) for v in allrows["value"]],
-            )
-        )
+    return detect
 
-        wide = allrows.pivot_table(
-            index="ts", columns="metric", values="value", aggfunc="first"
+
+def _update(
+    key: Any,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    metrics: list[str],
+    L: int,
+    threshold: float,
+    a: float,
+    b: float,
+) -> Iterator[pd.DataFrame]:
+    """One key's batch: merge the new samples into the ring buffer, trim
+    it to the last 2L timestamps and score the last L aligned steps."""
+    new = pd.concat(list(pdfs), ignore_index=True)
+    if state.exists:
+        ts_arr, m_arr, v_arr = state.get
+        old = pd.DataFrame({"ts": ts_arr, "metric": m_arr, "value": v_arr})
+        old["ts"] = pd.to_datetime(old["ts"])
+        allrows = pd.concat(
+            [old, new[["ts", "metric", "value"]]], ignore_index=True
         )
-        if set(metrics) <= set(wide.columns):
-            aligned = wide.dropna(subset=metrics)
-        else:  # a metric entirely absent -> nothing aligned (J3 guard)
-            aligned = wide.iloc[0:0]
-        if len(aligned) < L:
-            yield pd.DataFrame(
-                {
-                    "detector_id": [key[0]],
-                    "window_end": [pd.NaT],
-                    "mse": [float("nan")],
-                    "is_anomaly": [0],
-                    "n_points": [len(aligned)],
-                }
-            )
-            return
-        tail = aligned.sort_index().tail(L)[metrics].to_numpy(dtype="float64")
-        recon = np.clip(tail * a + b, 0.0, 1.0)
-        mse = float(((tail - recon) ** 2).mean())
+    else:
+        allrows = new[["ts", "metric", "value"]]
+    allrows = allrows.drop_duplicates(["ts", "metric"], keep="first")
+
+    # ring trim: keep the last 2L distinct timestamps
+    keep_ts = sorted(allrows["ts"].unique())[-(L * 2) :]
+    allrows = allrows[allrows["ts"].isin(keep_ts)]
+    state.update(
+        (
+            list(allrows["ts"]),
+            list(allrows["metric"]),
+            [float(v) for v in allrows["value"]],
+        )
+    )
+
+    wide = allrows.pivot_table(
+        index="ts", columns="metric", values="value", aggfunc="first"
+    )
+    if set(metrics) <= set(wide.columns):
+        aligned = wide.dropna(subset=metrics)
+    else:  # a metric entirely absent -> nothing aligned (J3 guard)
+        aligned = wide.iloc[0:0]
+    if len(aligned) < L:
         yield pd.DataFrame(
             {
                 "detector_id": [key[0]],
-                "window_end": [aligned.index.max()],
-                "mse": [mse],
-                "is_anomaly": [int(mse > threshold)],
+                "window_end": [pd.NaT],
+                "mse": [float("nan")],
+                "is_anomaly": [0],
                 "n_points": [len(aligned)],
             }
         )
-
-    return detect
+        return
+    tail = aligned.sort_index().tail(L)[metrics].to_numpy(dtype="float64")
+    recon = np.clip(tail * a + b, 0.0, 1.0)
+    mse = float(((tail - recon) ** 2).mean())
+    yield pd.DataFrame(
+        {
+            "detector_id": [key[0]],
+            "window_end": [aligned.index.max()],
+            "mse": [mse],
+            "is_anomaly": [int(mse > threshold)],
+            "n_points": [len(aligned)],
+        }
+    )
 
 
 def stateful_detector_stream(
@@ -135,6 +155,7 @@ def stateful_detector_stream(
     """Wire a streaming (detector_id, ts, metric, value) source through
     the ring-buffer state function.  Caller starts the returned stream
     with its own sink/checkpoint."""
+    shipping.ensure_shipped(source.sparkSession)
     fn = make_detector_fn(metrics, sequence_length, threshold)
     return source.groupBy("detector_id").applyInPandasWithState(
         fn,

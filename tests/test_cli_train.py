@@ -153,12 +153,15 @@ def test_preprocess_matches_oracle(tmp_path, raw, scaler_type):
         )
 
 
-def test_detector_scales_like_preprocess(tmp_path, raw):
-    """Train/serve parity: fed the rows of ``scaler_params.parquet``, the
-    detector turns a raw window into the processed parquet's rows for
-    the same timestamps."""
+@pytest.mark.parametrize("scaler", ["MinMaxScaler", "StandardScaler"])
+def test_detector_scales_like_preprocess(tmp_path, raw, scaler):
+    """Train/serve parity: fed the rows of ``scaler_params.parquet`` and
+    the scaler type preprocess used, the detector turns a raw window into
+    the processed parquet's rows for the same timestamps."""
     path, pdf = raw
-    cfg = _cfg(tmp_path, "lstm", queries={m: m for m in RAW_METRICS})
+    cfg = _cfg(
+        tmp_path, "lstm", queries={m: m for m in RAW_METRICS}, scaler_type=scaler
+    )
     cmd_preprocess(cfg, input_path=path)
     processed = pd.read_parquet(_art(cfg, cfg.processed_output_filename))
     processed = processed.sort_values("ts").reset_index(drop=True)
@@ -174,6 +177,7 @@ def test_detector_scales_like_preprocess(tmp_path, raw):
         metrics=live,
         sequence_length=length,
         scaler_params=pd.read_parquet(_art(cfg, "scaler_params.parquet")),
+        scaler_type=scaler,
         model=Recorder(),
     )
     tail = pdf.tail(length)
