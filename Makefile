@@ -6,7 +6,7 @@ SF ?= /root/testdata/sf0.01
 W ?= batch_pipeline
 SEED ?= 1
 
-.PHONY: collect preprocess train filter detect test parity sweep hygiene bench shuffle-audit anchors zoo perfbench perfbench-test clean
+.PHONY: collect preprocess train filter detect test parity sweep hygiene bench shuffle-audit anchors zoo perfbench perfbench-test perfbench-ab clean
 
 collect:
 	python -m prometheus_anomaly_detection_lstm_spark.cli collect --config $(CONFIG)
@@ -48,6 +48,14 @@ perfbench:
 
 perfbench-test:
 	python3 -m pytest perfbench -q
+
+# interleaved A/B of workload W between two clean checkouts (git archive),
+# e.g. make perfbench-ab PARENT=../parent CHANGE=../change SEEDS=921-930
+PARENT ?=
+CHANGE ?= .
+SEEDS ?= 1-10
+perfbench-ab:
+	python3 tools/perfbench_ab.py $(PARENT) $(CHANGE) --workload $(W) --seeds $(SEEDS)
 
 # per-query bytes-moved audit from event-log task metrics (BASELINE.md)
 shuffle-audit:

@@ -6,7 +6,9 @@ reference), so the Python worker must be able to import
 ``prometheus_anomaly_detection_lstm_spark`` — which is not guaranteed when the
 driving process runs from another directory.  ``ensure_shipped`` zips
 the package once per process and registers it with
-``SparkContext.addPyFile`` so every worker can.
+``SparkContext.addPyFile`` so every worker can.  The zip lives in the
+temp dir until the interpreter exits: the driver's file server serves
+``addPyFile`` files from that path for as long as the session runs.
 
 Lazy zip invalidation: PySpark's worker calls
 ``importlib.invalidate_caches()`` at the start of every task
@@ -29,6 +31,8 @@ invalidation lazy itself (gh-103200), so there the install does nothing.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import shutil
 import sys
@@ -55,8 +59,14 @@ def ensure_shipped(spark) -> None:
     zip_path = shutil.make_archive(
         out, "zip", root_dir=root, base_dir="prometheus_anomaly_detection_lstm_spark"
     )
+    atexit.register(_remove, zip_path)
     sc.addPyFile(zip_path)
     _shipped.add(key)
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def _archive_key(path: str) -> tuple[int, int, int] | None:

@@ -3,22 +3,44 @@
 The reference re-fetches the full L-point window every cycle
 (realtime_detector.py:142-153 — stateless recompute).  The idiomatic
 Structured-Streaming upgrade keeps the trailing window in OPERATOR
-STATE so each trigger only needs the NEW samples: a ring buffer of
-recent (ts, metric, value) rows lives in per-key group state, and a
+STATE so each trigger only needs the NEW samples: a ring of recent
+samples lives in per-key group state as compact NumPy buffers, and a
 scored row is emitted per batch once the buffer holds a full aligned
 window.
 
 Implementation note: Spark 4's ``transformWithStateInPandas`` is the
 newer API, but its Python worker requires ``google.protobuf`` which is
 not in this image — so this uses ``applyInPandasWithState`` (GroupState,
-Spark >= 3.4, no extra deps).  The ring buffer is stored as arrays in
-the state tuple; semantics are identical.
+Spark >= 3.4, no extra deps).
 
 Input stream : (detector_id string, ts timestamp, metric string, value double)
 Output stream: (detector_id, window_end, mse, is_anomaly, n_points)
 
-State size is O(2L x n_metrics) per detector key — thousands of
-detectors shard across executors by key, nothing global.
+State layout (``STATE_SCHEMA``), one row per detector key, for L =
+``sequence_length`` and M configured metrics in sorted order:
+
+- ``metrics``: the M metric names, sorted: the matrix's columns;
+- ``ts``: the ring's last 2L distinct timestamps, sorted, as int64
+  microseconds (the session-local wall time Spark hands to pandas);
+- ``value``: the (n_ts x M) float64 matrix, row-major, ``tobytes()``;
+- ``seen``: the (n_ts x M) bool mask of occupied cells, ``tobytes()``.
+  A present-but-NaN sample is seen; a missing one is not.
+
+That is at most 8·2L + 9·2L·M bytes per key (6,080 for L = 20,
+M = 16) plus the M names, and the state codec moves M strings, 2L ints
+and two byte strings per key, not 2L·M Python datetimes, strings and
+floats each.  Nothing is global: thousands of detectors shard across
+executors by key.
+
+Checkpoint break: a checkpoint written with the earlier row-list state
+(``ts array<timestamp>, metric array<string>, value array<double>``)
+cannot be resumed.  Spark refuses it when the query starts, with
+``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; start such a detector on a
+fresh checkpoint.  Changing the metric list of a running detector also
+needs a fresh checkpoint: a key whose stored names differ from the
+configured ones (a rename, an added or a dropped metric) fails the
+batch with a ``ValueError`` naming both lists, rather than reading one
+metric's values as another's.
 
 Deployment note: the stateful operator's partition count is taken from
 ``spark.sql.shuffle.partitions`` at the FIRST run and frozen into the
@@ -50,9 +72,7 @@ OUTPUT_SCHEMA = (
     "detector_id string, window_end timestamp, "
     "mse double, is_anomaly int, n_points int"
 )
-STATE_SCHEMA = (
-    "ts array<timestamp>, metric array<string>, value array<double>"
-)
+STATE_SCHEMA = "metrics array<string>, ts array<bigint>, value binary, seen binary"
 
 
 def make_detector_fn(
@@ -89,59 +109,75 @@ def _update(
     a: float,
     b: float,
 ) -> Iterator[pd.DataFrame]:
-    """One key's batch: merge the new samples into the ring buffer, trim
-    it to the last 2L timestamps and score the last L aligned steps."""
-    new = pd.concat(list(pdfs), ignore_index=True)
-    if state.exists:
-        ts_arr, m_arr, v_arr = state.get
-        old = pd.DataFrame({"ts": ts_arr, "metric": m_arr, "value": v_arr})
-        old["ts"] = pd.to_datetime(old["ts"])
-        allrows = pd.concat(
-            [old, new[["ts", "metric", "value"]]], ignore_index=True
-        )
-    else:
-        allrows = new[["ts", "metric", "value"]]
-    allrows = allrows.drop_duplicates(["ts", "metric"], keep="first")
+    """One key's batch: merge the new samples into the ring, keep its
+    last 2L distinct timestamps and score the last L aligned steps.
 
-    # ring trim: keep the last 2L distinct timestamps
-    keep_ts = sorted(allrows["ts"].unique())[-(L * 2) :]
-    allrows = allrows[allrows["ts"].isin(keep_ts)]
-    state.update(
-        (
-            list(allrows["ts"]),
-            list(allrows["metric"]),
-            [float(v) for v in allrows["value"]],
+    A (ts, metric) cell keeps its first sample: a state sample beats a new
+    one, and within a batch the earlier row wins.  A present-but-NaN
+    sample occupies its cell (the ``seen`` mask tells it from a missing
+    one).  Every distinct timestamp counts toward the 2L trim, including
+    one carried only by a metric outside ``metrics``, whose value is
+    dropped.  A step is aligned when every configured metric has a
+    non-NaN value there, so a configured metric that never arrived
+    leaves none aligned (the J3 guard); ``n_points`` counts the aligned
+    steps in the ring and ``window_end`` is the last one scored.  State
+    stored for another metric list raises ``ValueError``."""
+    M = len(metrics)
+    frames = list(pdfs)
+    index = pd.Index(metrics)
+    new_ts = np.concatenate(
+        [f["ts"].to_numpy("datetime64[us]").view(np.int64) for f in frames]
+    )
+    new_col = np.concatenate([index.get_indexer(f["metric"]) for f in frames])
+    new_val = np.concatenate([f["value"].to_numpy(np.float64) for f in frames])
+    old_metrics, old_ts, old_val, old_seen = (
+        state.get if state.exists else (metrics, [], b"", b"")
+    )
+    if list(old_metrics) != metrics:
+        raise ValueError(
+            f"detector {key[0]!r}: its state holds metrics {list(old_metrics)}, "
+            f"not the configured {metrics}; start it on a fresh checkpoint"
         )
-    )
+    old_ts = np.asarray(old_ts, dtype=np.int64)
+    old_val = np.frombuffer(old_val, np.float64).reshape(len(old_ts), M)
+    old_seen = np.frombuffer(old_seen, np.bool_).reshape(len(old_ts), M)
 
-    wide = allrows.pivot_table(
-        index="ts", columns="metric", values="value", aggfunc="first"
-    )
-    if set(metrics) <= set(wide.columns):
-        aligned = wide.dropna(subset=metrics)
-    else:  # a metric entirely absent -> nothing aligned (J3 guard)
-        aligned = wide.iloc[0:0]
+    ts = np.union1d(old_ts, new_ts)[-2 * L :]
+    val = np.full((len(ts), M), np.nan)
+    seen = np.zeros((len(ts), M), np.bool_)
+    k = np.searchsorted(old_ts, ts[0])  # old_ts[k:] survive the trim
+    rows = np.searchsorted(ts, old_ts[k:])
+    val[rows] = old_val[k:]
+    seen[rows] = old_seen[k:]
+    ok = (new_col >= 0) & (new_ts >= ts[0])
+    cells = np.searchsorted(ts, new_ts[ok]) * M + new_col[ok]
+    cells, first = np.unique(cells, return_index=True)  # first in batch order
+    fresh = ~seen.reshape(-1)[cells]
+    val.reshape(-1)[cells[fresh]] = new_val[ok][first[fresh]]
+    seen.reshape(-1)[cells[fresh]] = True
+    state.update((metrics, ts.tolist(), val.tobytes(), seen.tobytes()))
+
+    aligned = np.flatnonzero(~np.isnan(val).any(axis=1))
     if len(aligned) < L:
-        yield pd.DataFrame(
-            {
-                "detector_id": [key[0]],
-                "window_end": [pd.NaT],
-                "mse": [float("nan")],
-                "is_anomaly": [0],
-                "n_points": [len(aligned)],
-            }
-        )
+        yield _row(key, pd.NaT, float("nan"), 0, len(aligned))
         return
-    tail = aligned.sort_index().tail(L)[metrics].to_numpy(dtype="float64")
+    # metric-major, the memory order of a pandas pivot of the window, so
+    # the MSE sums in the same order as a pandas scorer does
+    tail = np.asfortranarray(val[aligned[-L:]])
     recon = np.clip(tail * a + b, 0.0, 1.0)
     mse = float(((tail - recon) ** 2).mean())
-    yield pd.DataFrame(
+    end = pd.Timestamp(int(ts[aligned[-1]]), unit="us")
+    yield _row(key, end, mse, int(mse > threshold), len(aligned))
+
+
+def _row(key: Any, window_end, mse: float, is_anomaly: int, n_points: int):
+    return pd.DataFrame(
         {
             "detector_id": [key[0]],
-            "window_end": [aligned.index.max()],
+            "window_end": [window_end],
             "mse": [mse],
-            "is_anomaly": [int(mse > threshold)],
-            "n_points": [len(aligned)],
+            "is_anomaly": [is_anomaly],
+            "n_points": [n_points],
         }
     )
 

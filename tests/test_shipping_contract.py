@@ -38,7 +38,7 @@ lazy_only = pytest.mark.skipif(
 )
 
 
-def _run_foreign(script: str, tmp_path) -> str:
+def _run_foreign(script: str, tmp_path, **env: str) -> str:
     """Run ``script`` in a fresh interpreter whose cwd is outside the repo
     and whose PYTHONPATH is empty; return its stdout."""
     proc = subprocess.run(
@@ -47,7 +47,7 @@ def _run_foreign(script: str, tmp_path) -> str:
         capture_output=True,
         text=True,
         timeout=300,
-        env={**os.environ, "PYTHONPATH": ""},
+        env={**os.environ, "PYTHONPATH": "", **env},
     )
     return proc.stdout + f"\nstderr={proc.stderr[-2000:]}"
 
@@ -236,3 +236,39 @@ def test_stateful_stream_ships_package_from_foreign_cwd(tmp_path):
     detector, n_points, mse = rows[0]
     assert (detector, n_points) == ("d1", 4)
     assert mse == pytest.approx((0.5 - (0.9 * 0.5 + 0.02)) ** 2, rel=1e-12)
+
+
+EXIT_SCRIPT = """
+import glob, os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .appName("ship-exit").getOrCreate()
+)
+from prometheus_anomaly_detection_lstm_spark import shipping
+shipping.ensure_shipped(spark)
+
+def probe(batches):
+    for b in batches:
+        yield b.assign(zipped=".zip" in shipping.__file__)
+
+rows = spark.range(2).mapInPandas(probe, "id long, zipped boolean").collect()
+pattern = os.path.join(tempfile.gettempdir(), "prometheus_anomaly_detection_lstm_spark_*.zip")
+print("EXIT_RUN", ([r.zipped for r in rows], len(glob.glob(pattern))))
+"""
+
+
+def test_shipped_zip_is_removed_at_exit(tmp_path):
+    """The package zip stays while the driver runs (its file server
+    serves it) and is gone once the interpreter has exited."""
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    out = _run_foreign(EXIT_SCRIPT, tmp_path, TMPDIR=str(tmpdir))
+    assert "EXIT_RUN" in out, out[-4000:]
+    zipped, zips_while_running = ast.literal_eval(
+        out.split("EXIT_RUN", 1)[1].splitlines()[0]
+    )
+    assert zipped == [True, True] and zips_while_running == 1, out[-4000:]
+    assert list(tmpdir.glob("prometheus_anomaly_detection_lstm_spark_*.zip")) == []
