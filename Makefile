@@ -6,7 +6,7 @@ SF ?= /root/testdata/sf0.01
 W ?= batch_pipeline
 SEED ?= 1
 
-.PHONY: collect preprocess train filter detect test parity sweep hygiene bench shuffle-audit anchors zoo perfbench perfbench-test perfbench-ab clean
+.PHONY: collect preprocess train filter detect test parity sweep hygiene bench shuffle-audit anchors growth zoo perfbench perfbench-test perfbench-ab clean
 
 collect:
 	python -m prometheus_anomaly_detection_lstm_spark.cli collect --config $(CONFIG)
@@ -65,6 +65,11 @@ shuffle-audit:
 # defaults to the ratio-weak text/corpus/DSPOT set at sf0.1)
 anchors:
 	python tools/inrun_anchor_sweep.py $(QUERIES)
+
+# registry queries or modules vs data volume, every table replicated
+# through io_tables.replicate (e.g. make growth QUERIES=robust)
+growth:
+	python tools/growth.py $(QUERIES)
 
 # labeled detector scorecard: point spikes / level shift (+GLR
 # localization) / slot contamination / slow ramp

@@ -38,7 +38,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from prometheus_anomaly_detection_lstm_spark.io_tables import load_table
+from prometheus_anomaly_detection_lstm_spark.io_tables import (
+    REPLICA_KEY_OFFSET,
+    REPLICA_TS_SHIFT_DAYS,
+    load_table,
+    span_days,
+    write_replica,
+)
 from prometheus_anomaly_detection_lstm_spark.operators import score as SC
 from prometheus_anomaly_detection_lstm_spark.plans import pipeline as P
 from prometheus_anomaly_detection_lstm_spark.registry import all_queries
@@ -176,44 +182,24 @@ def _executed_shuffle_mb(df) -> float:
 
 #: sf1 crossover pair (round-6 verdict task 6): the 62 MB -> 0 shuffle
 #: story measured by tools/shuffle_audit.py lives on the official bench
-#: record as one plain-vs-bucketed q3 pass at sf1.  The three q3 tables
-#: are built once under /tmp (lineitem/orders replicated 10x from sf0.1
-#: with distinct orderkeys — tools/sf1_crossover.py's recipe — customer
-#: copied); generation cost is reported when it happens.
+#: record as one plain-vs-bucketed q3 pass at sf1.  Every sf1 fact
+#: table is built once under /tmp as io_tables.replicate's 10
+#: distinct-key copies of the sf0.1 table (dimensions copied as-is);
+#: generation cost is reported when it happens.
 SF1_DIR = "/tmp/crossover/sf1"
+SF1_BASE = "/root/testdata/sf0.1"
+SF1_COPIES = 10
 
 
 def _sf1_q3_pair(spark, queries) -> dict:
-    import functools
-
-    from pyspark.sql import functions as F
-
     out: dict[str, float] = {}
     needed = ("lineitem", "orders", "customer")
     if not all(
         os.path.exists(f"{SF1_DIR}/{t}.parquet") for t in needed
     ):
         t0 = time.perf_counter()
-        os.makedirs(SF1_DIR, exist_ok=True)
-        load_table(spark, "/root/testdata/sf0.1", "customer").write.mode(
-            "overwrite"
-        ).parquet(f"{SF1_DIR}/customer.parquet")
-        for name, keys in (
-            ("lineitem", ["l_orderkey"]),
-            ("orders", ["o_orderkey", "o_custkey"]),
-        ):
-            base = load_table(spark, "/root/testdata/sf0.1", name)
-            copies = []
-            for k in range(10):
-                c = base
-                for key in keys:
-                    c = c.withColumn(key, F.col(key) + F.lit(k * 1_000_000_000))
-                copies.append(c)
-            functools.reduce(
-                lambda a, b: a.unionByName(b), copies
-            ).repartition(16).write.mode("overwrite").parquet(
-                f"{SF1_DIR}/{name}.parquet"
-            )
+        for name in needed:
+            write_replica(spark, SF1_BASE, SF1_DIR, name, SF1_COPIES)
         out["sf1_gen_sec"] = round(time.perf_counter() - t0, 3)
 
     from prometheus_anomaly_detection_lstm_spark.plans.relational import (
@@ -257,30 +243,18 @@ def _sf1_q3_pair(spark, queries) -> dict:
     return out
 
 
-def _ensure_sf1_documents(spark) -> dict:
-    """Create (or verify and reuse) the sf1 documents artifact shared
-    by every sf1 corpus section; returns the bookkeeping keys."""
-    import functools
-    import json
+def _ensure_sf1_stamped(spark, name: str, recipe: dict) -> dict:
+    """Create (or verify and reuse) ``SF1_DIR/<name>.parquet``; returns
+    the bookkeeping keys.
 
+    Recipe stamp (r8 ADVICE 3): a pre-existing artifact is reused ONLY
+    if its ``<name>.recipe.json`` sidecar equals ``recipe`` AND its row
+    count agrees — a stale or differently-generated parquet would
+    otherwise silently make the official sf1 number measure other
+    data.  Mismatch -> regenerate and re-stamp."""
     out: dict[str, float | int] = {}
-    path = f"{SF1_DIR}/documents.parquet"
-    # Recipe stamp (r8 ADVICE 3): a pre-existing artifact is reused
-    # ONLY if its sidecar matches the generation recipe below AND its
-    # row count agrees — a stale or differently-generated parquet would
-    # otherwise silently make the official sf1 number measure other
-    # data.  Mismatch -> regenerate.
-    stamp_path = f"{SF1_DIR}/documents.recipe.json"
-    base = load_table(spark, "/root/testdata/sf0.1", "documents")
-    base_rows = base.count()
-    recipe = {
-        "recipe": "copyvariant",
-        "copies": 10,
-        "doc_id_offset": 1_000_000_000,
-        "base": "/root/testdata/sf0.1/documents.parquet",
-        "base_rows": base_rows,
-        "rows": base_rows * 10,
-    }
+    path = f"{SF1_DIR}/{name}.parquet"
+    stamp_path = f"{SF1_DIR}/{name}.recipe.json"
     reusable = False
     if os.path.exists(path) and os.path.exists(stamp_path):
         try:
@@ -293,93 +267,49 @@ def _ensure_sf1_documents(spark) -> dict:
             reusable = False
     if not reusable:
         t0 = time.perf_counter()
-        os.makedirs(SF1_DIR, exist_ok=True)
-        copies = []
-        for k in range(10):
-            c = base.withColumn(
-                "doc_id", F.col("doc_id") + F.lit(k * 1_000_000_000)
-            )
-            if k > 0:
-                c = c.withColumn(
-                    "text",
-                    F.concat(F.col("text"), F.lit(f" copyvariant{k}")),
-                )
-            copies.append(c)
-        functools.reduce(
-            lambda a, b: a.unionByName(b), copies
-        ).repartition(16).write.mode("overwrite").parquet(path)
+        write_replica(spark, SF1_BASE, SF1_DIR, name, SF1_COPIES)
         with open(stamp_path, "w") as fh:
             json.dump(recipe, fh)
-        out["sf1_documents_gen_sec"] = round(time.perf_counter() - t0, 3)
-    out["sf1_documents_rows"] = recipe["rows"]
+        out[f"sf1_{name}_gen_sec"] = round(time.perf_counter() - t0, 3)
+    out[f"sf1_{name}_rows"] = recipe["rows"]
     return out
+
+
+def _ensure_sf1_documents(spark) -> dict:
+    """The sf1 documents artifact shared by every sf1 corpus section:
+    10 doc_id-offset copies, copy k > 0 with a " copyvariant{k}" text
+    suffix."""
+    base = load_table(spark, SF1_BASE, "documents")
+    base_rows = base.count()
+    return _ensure_sf1_stamped(spark, "documents", {
+        "recipe": "copyvariant",
+        "copies": SF1_COPIES,
+        "doc_id_offset": REPLICA_KEY_OFFSET,
+        "base": f"{SF1_BASE}/documents.parquet",
+        "base_rows": base_rows,
+        "rows": base_rows * SF1_COPIES,
+    })
 
 
 def _ensure_sf1_events(spark) -> dict:
-    """Create (or verify and reuse) the sf1 EVENTS artifact: 10
-    event_id-offset copies of the sf0.1 events table, each shifted by
-    k*30 days so the copies tile a contiguous ~300-day series — the
-    natural scale axis for the time-series flagship (10x the distinct
-    minutes, not 10 duplicates of every minute).  Same recipe-stamp
-    reuse contract as the documents artifact."""
-    import functools
-    import json
-
-    out: dict[str, float | int] = {}
-    path = f"{SF1_DIR}/events.parquet"
-    stamp_path = f"{SF1_DIR}/events.recipe.json"
-    base = load_table(spark, "/root/testdata/sf0.1", "events")
+    """The sf1 EVENTS artifact: 10 event_id-offset copies of the sf0.1
+    events table, each shifted by k*30 days so the copies tile a
+    contiguous ~300-day series — the natural scale axis for the
+    time-series flagship (10x the distinct minutes, not 10 duplicates
+    of every minute).  ``replicate`` refuses a base spanning >= 30
+    days; the measured span rides in the stamp."""
+    base = load_table(spark, SF1_BASE, "events")
     base_rows = base.count()
-    # the k*30-day shift tiles copies contiguously ONLY if the base
-    # spans < 30 days; a regenerated wider base would silently overlap
-    # copies and change the pivot's keep-first semantics (ADVICE r11)
-    span = base.agg(
-        F.datediff(F.max("ts"), F.min("ts")).alias("d")
-    ).collect()[0]["d"]
-    assert span is not None and span < 30, (
-        f"sf1 copyshift recipe assumes base events span < 30 days; "
-        f"measured {span} — widen ts_shift_days or re-derive the shift"
-    )
-    recipe = {
+    return _ensure_sf1_stamped(spark, "events", {
         "recipe": "copyshift",
-        "copies": 10,
-        "event_id_offset": 1_000_000_000,
-        "ts_shift_days": 30,
-        "base": "/root/testdata/sf0.1/events.parquet",
+        "copies": SF1_COPIES,
+        "event_id_offset": REPLICA_KEY_OFFSET,
+        "ts_shift_days": REPLICA_TS_SHIFT_DAYS,
+        "base": f"{SF1_BASE}/events.parquet",
         "base_rows": base_rows,
-        "base_span_days": span,
-        "rows": base_rows * 10,
-    }
-    reusable = False
-    if os.path.exists(path) and os.path.exists(stamp_path):
-        try:
-            with open(stamp_path) as fh:
-                stamped = json.load(fh)
-            reusable = stamped == recipe and (
-                spark.read.parquet(path).count() == recipe["rows"]
-            )
-        except (json.JSONDecodeError, OSError):
-            reusable = False
-    if not reusable:
-        t0 = time.perf_counter()
-        os.makedirs(SF1_DIR, exist_ok=True)
-        copies = []
-        for k in range(10):
-            copies.append(
-                base.withColumn(
-                    "event_id", F.col("event_id") + F.lit(k * 1_000_000_000)
-                ).withColumn(
-                    "ts", F.col("ts") + F.expr(f"INTERVAL {k * 30} DAYS")
-                )
-            )
-        functools.reduce(
-            lambda a, b: a.unionByName(b), copies
-        ).repartition(16).write.mode("overwrite").parquet(path)
-        with open(stamp_path, "w") as fh:
-            json.dump(recipe, fh)
-        out["sf1_events_gen_sec"] = round(time.perf_counter() - t0, 3)
-    out["sf1_events_rows"] = recipe["rows"]
-    return out
+        "base_span_days": span_days(base),
+        "rows": base_rows * SF1_COPIES,
+    })
 
 
 def _sf1_anomaly(spark, queries) -> dict:

@@ -232,9 +232,9 @@ def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
 
 def cmd_detect(cfg: EngineConfig) -> None:  # pragma: no cover - needs live prom
     raise SystemExit(
-        "detect requires a live Prometheus; see streaming/detector.py "
-        "(start_streaming_detector) and tests/test_streaming.py for the "
-        "replay-driven form"
+        "detect requires a live Prometheus; see "
+        "streaming/detector.run_detector_on_batch (a foreachBatch body) "
+        "and streaming/stateful.stateful_detector_stream"
     )
 
 

@@ -11,6 +11,8 @@ keeping oracle parity.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,6 +68,88 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if memo_key is not None:
         _TABLE_MEMO[memo_key] = df
     return df
+
+
+#: fact table -> key columns :func:`replicate` offsets per copy; every
+#: other table is a dimension and is not replicated.
+REPLICA_KEYS: dict[str, list[str]] = {
+    "lineitem": ["l_orderkey"],
+    "orders": ["o_orderkey", "o_custkey"],
+    "events": ["event_id"],
+    "documents": ["doc_id"],
+    "embeddings": ["vec_id"],
+}
+#: per-copy key offset, far above any generated key
+REPLICA_KEY_OFFSET = 1_000_000_000
+#: per-copy events ``ts`` shift: copies tile a contiguous longer series
+REPLICA_TS_SHIFT_DAYS = 30
+
+
+def span_days(events: DataFrame) -> int | None:
+    """Calendar days between an events frame's first and last ``ts``."""
+    return events.agg(
+        F.datediff(F.max("ts"), F.min("ts")).alias("d")
+    ).collect()[0]["d"]
+
+
+def replicate(base: DataFrame, name: str, copies: int) -> DataFrame:
+    """``copies`` distinct-key copies of table ``name``, unioned — the
+    one scale-up recipe for sf1 artifacts and growth runs.
+
+    Copy k offsets the table's :data:`REPLICA_KEYS` by
+    k·:data:`REPLICA_KEY_OFFSET`, so join fan-outs and group
+    cardinalities grow instead of duplicating.  Events copies are also
+    shifted by k·:data:`REPLICA_TS_SHIFT_DAYS` days (series grow in
+    time), and document copies k > 0 get a ``" copyvariant{k}"`` text
+    suffix (near-, not exact-duplicates).  Dimension tables come back
+    unchanged.
+
+    Raises ``ValueError`` if an events base spans as many days as the
+    shift: overlapping copies would change the pivot's keep-first
+    semantics.
+    """
+    keys = REPLICA_KEYS.get(name)
+    if keys is None:
+        return base
+    if name == "events" and copies > 1:
+        span = span_days(base)
+        if span is None or span >= REPLICA_TS_SHIFT_DAYS:
+            raise ValueError(
+                f"replicate(events) assumes the base spans < "
+                f"{REPLICA_TS_SHIFT_DAYS} days; measured {span}"
+            )
+
+    def copy(k: int) -> DataFrame:
+        c = base
+        for key in keys:
+            c = c.withColumn(key, F.col(key) + F.lit(k * REPLICA_KEY_OFFSET))
+        if name == "events":
+            c = c.withColumn(
+                "ts",
+                F.col("ts")
+                + F.expr(f"INTERVAL {k * REPLICA_TS_SHIFT_DAYS} DAYS"),
+            )
+        if name == "documents" and k > 0:
+            c = c.withColumn(
+                "text", F.concat(F.col("text"), F.lit(f" copyvariant{k}"))
+            )
+        return c
+
+    return functools.reduce(
+        DataFrame.unionByName, [copy(k) for k in range(copies)]
+    )
+
+
+def write_replica(
+    spark: SparkSession, src_dir: str, dst_dir: str, name: str, copies: int
+) -> None:
+    """Write table ``name`` of ``src_dir`` to ``dst_dir`` as
+    :func:`replicate`'s ``copies`` copies: a fact table in 16 files, a
+    dimension table as read."""
+    df = load_table(spark, src_dir, name)
+    if name in REPLICA_KEYS:
+        df = replicate(df, name, copies).repartition(16)
+    df.write.mode("overwrite").parquet(f"{dst_dir}/{name}.parquet")
 
 
 def events_series(spark: SparkSession, sf_dir: str) -> DataFrame:

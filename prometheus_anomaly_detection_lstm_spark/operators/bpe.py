@@ -241,10 +241,10 @@ def encode_word_tokens_bounded(
     merge — plan depth linear in merges, fine at the frozen 10 but a
     real 32k-merge production vocabulary won't compile; this variant's
     plan is constant-size and its runtime is linear in merges × words
-    (measured flat-compile/linear-encode in tools/bpe_bounded_growth.py
-    -> BASELINE.md).  Still vocabulary-scale: callers feed the
-    DISTINCT-word table and join back, so no repeated word is ever
-    encoded twice."""
+    (measured flat-compile/linear-encode over a synthetic 50k-word
+    vocabulary: BASELINE.md, "Round-9 bounded-BPE growth").  Still
+    vocabulary-scale: callers feed the DISTINCT-word table and join
+    back, so no repeated word is ever encoded twice."""
     return words.select("word").mapInPandas(
         make_bpe_encode_kernel(merges), schema="word string, t array<string>"
     )
@@ -528,10 +528,10 @@ MERGES_32K = 32_000
 
 def merges_32k() -> list[tuple[str, str]]:
     """The FROZEN_MERGES head padded to a 32,000-entry merge table —
-    the closure size a real tokenizer ships (tools/bpe_bounded_growth.py
-    measured the kernel flat from 10 to 32k entries; this registers
-    that production shape as an every-session query, round-9 verdict
-    task 7).
+    the closure size a real tokenizer ships (BASELINE.md's bounded-BPE
+    growth table measured the kernel flat from 10 to 32k entries; this
+    registers that production shape as an every-session query, round-9
+    verdict task 7).
 
     The pad entries provably never fire on ANY corpus: each pad left
     token ("①<i>") is multi-character, initial tokens are single

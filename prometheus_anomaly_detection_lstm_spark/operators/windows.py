@@ -25,6 +25,7 @@ per-row error first and windows the scalar — see operators/score.py.
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import pandas as pd
@@ -33,23 +34,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import single_partition_key
-
-
-def _day_counts_check_enabled(df: DataFrame) -> bool:
-    """Opt-in day_counts contract validation (see bucket_assign)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_DEBUG_DAY_COUNTS", "") not in ("", "0"):
-        return True
-    try:
-        return (
-            df.sparkSession.conf.get(
-                "spark.prometheus_anomaly_detection_lstm_spark.debug.dayCounts", "false"
-            ).lower()
-            == "true"
-        )
-    except Exception:  # conf lookup must never break the operator
-        return False
 
 
 def sequence_windows(
@@ -126,9 +110,9 @@ def bucket_assign(
         # Debug-mode contract check (ADVICE r11): a non-row-preserving
         # step slipped into the caller's prep chain would silently
         # corrupt every offset/window id.  Opt-in because it executes
-        # both chains — set spark.prometheus_anomaly_detection_lstm_spark.debug.dayCounts=true (or env
-        # SPARK_GRAFT_DEBUG_DAY_COUNTS=1) in a validation run.
-        if _day_counts_check_enabled(df):
+        # both chains — set SPARK_GRAFT_DEBUG_DAY_COUNTS=1 in a
+        # validation run.
+        if os.environ.get("SPARK_GRAFT_DEBUG_DAY_COUNTS", "") not in ("", "0"):
             derived = with_day.groupBy("__day").agg(
                 F.count("*").alias("__n_actual")
             )

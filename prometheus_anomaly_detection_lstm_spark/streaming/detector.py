@@ -26,7 +26,7 @@ import logging
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ml.autoencoder import StubAutoencoder
@@ -173,28 +173,3 @@ def run_detector_on_batch(
             out = None
         outcomes.append({"cycle_id": int(cycle_id), "outcome": out})
     return outcomes
-
-
-def start_streaming_detector(
-    spark: SparkSession,
-    source: DataFrame,
-    cfg: DetectorConfig,
-    sinks: DetectorMetrics,
-    checkpoint_dir: str,
-):
-    """Wire the detector to a streaming source of long-format samples.
-
-    ``source`` must be a streaming DataFrame with columns
-    (cycle_id, ts, metric, value).  Stateless recompute -> no watermark
-    needed (SURVEY T3); a stateful ring-buffer upgrade would add
-    ``withWatermark('ts', 2*step)``.
-    """
-    return (
-        source.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, _epoch: run_detector_on_batch(df, cfg, sinks)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{cfg.interval_seconds} seconds")
-        .start()
-    )

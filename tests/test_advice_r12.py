@@ -8,10 +8,11 @@
    table (wrong count / missing day) must raise when the debug flag is
    on, and the flag must default OFF (no extra execution in the hot
    path).
-3. bench._ensure_sf1_events must refuse a base events table spanning
-   >= the 30-day copyshift (overlapping copies silently change the
-   pivot's keep-first semantics) — source-level pin plus a direct pin
-   that the repo testdata satisfies the assumption.
+3. The sf1 events copyshift must refuse a base events table spanning
+   >= the 30-day shift (overlapping copies silently change the pivot's
+   keep-first semantics): io_tables.replicate raises on a wide base,
+   bench's events stamp records the measured span, and the repo
+   testdata satisfies the assumption.
 4. localCheckpoint sites carry the executor-loss caveat (comment pin).
 """
 
@@ -77,10 +78,20 @@ def test_day_counts_check_catches_corruption(spark, monkeypatch):
         windows.bucket_assign(df, 3, day_counts=missing_day)
 
 
-def test_sf1_copyshift_guards_base_span():
-    import inspect
+def test_sf1_copyshift_guards_base_span(spark, tmp_path, monkeypatch):
+    import datetime as dt
+    import json
     import sys
     from pathlib import Path
+
+    from prometheus_anomaly_detection_lstm_spark.io_tables import replicate
+
+    t0 = dt.datetime(2024, 1, 1)
+    wide = spark.createDataFrame(
+        [(1, t0), (2, t0 + dt.timedelta(days=45))], "event_id bigint, ts timestamp"
+    )
+    with pytest.raises(ValueError, match="< 30 days"):
+        replicate(wide, "events", 10)
 
     repo = Path(__file__).resolve().parents[1]
     sys.path.insert(0, str(repo))
@@ -88,8 +99,12 @@ def test_sf1_copyshift_guards_base_span():
         import bench
     finally:
         sys.path.remove(str(repo))
-    src = inspect.getsource(bench._ensure_sf1_events)
-    assert "span < 30" in src and "base_span_days" in src
+    monkeypatch.setattr(bench, "SF1_DIR", str(tmp_path))
+    monkeypatch.setattr(bench, "SF1_BASE", "/root/testdata/sf0.001")
+    out = bench._ensure_sf1_events(spark)
+    stamp = json.loads((tmp_path / "events.recipe.json").read_text())
+    assert stamp["base_span_days"] < stamp["ts_shift_days"] == 30
+    assert out["sf1_events_rows"] == stamp["rows"] == 10 * stamp["base_rows"]
 
 
 def test_sf01_events_fit_copyshift_assumption(spark):

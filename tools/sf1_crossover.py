@@ -7,18 +7,18 @@ per-stage overhead and the crossover sits near sf1; this measures it.
     python tools/sf1_crossover.py duck    # time DuckDB on it
     SPARK_GRAFT_SF_DIR=/tmp/crossover/sf1 python bench.py   # Spark side
 
-``gen`` replicates the sf0.1 tables 10x with DISTINCT keys so join
-fan-outs, group cardinalities and duplicate-group sizes grow
-realistically (orderkeys/event ids/doc ids/vec ids offset per copy;
-document text gets a per-copy suffix token so the dedup workload does
-not degenerate into 10-member exact-duplicate groups).  ``duck`` runs
+``gen`` replicates the sf0.1 fact tables 10x through
+``io_tables.replicate`` — bench.py's sf1 recipe, so the two write the
+same data: distinct keys per copy (join fan-outs, group cardinalities
+and duplicate-group sizes grow realistically), events shifted 30 days
+per copy, and a per-copy document suffix token so the dedup workload
+does not degenerate into 10-member exact-duplicate groups.  ``duck`` runs
 the same headline queries' DuckDB oracle SQL against identical parquet,
 best-of-three per query — the apples-to-apples single-process anchor.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import sys
@@ -29,16 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 OUT_DIR = "/tmp/crossover/sf1"
 SRC = "/root/testdata/sf0.1"
 MULT = 10
-KEYED = {
-    # table -> (key columns to offset per copy, text column to tag)
-    "lineitem": (["l_orderkey"], None),
-    "orders": (["o_orderkey", "o_custkey"], None),
-    "events": (["event_id", "user_id"], None),
-    "documents": (["doc_id"], "text"),
-    "embeddings": (["vec_id"], None),
-}
-COPY_AS_IS = ["region", "nation", "customer", "supplier", "part"]
-OFF = 1_000_000_000
 
 #: standalone headline queries timed on the DuckDB side from their
 #: registry oracles verbatim.  The four pipeline-derived entries are
@@ -60,37 +50,17 @@ DUCK_QUERIES = [
 
 
 def gen() -> None:
-    from pyspark.sql import functions as F
-
-    from prometheus_anomaly_detection_lstm_spark.io_tables import load_table
+    from prometheus_anomaly_detection_lstm_spark.io_tables import (
+        TABLES,
+        write_replica,
+    )
     from prometheus_anomaly_detection_lstm_spark.session import get_spark
 
     spark = get_spark("sf1-gen")
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(OUT_DIR, exist_ok=True)
-    for name in COPY_AS_IS:
-        load_table(spark, SRC, name).write.mode("overwrite").parquet(
-            f"{OUT_DIR}/{name}.parquet"
-        )
-        print(f"{name}: copied", flush=True)
-    for name, (keys, text_col) in KEYED.items():
-        base = load_table(spark, SRC, name)
-        copies = []
-        for k in range(MULT):
-            c = base
-            for key in keys:
-                c = c.withColumn(key, F.col(key) + F.lit(k * OFF))
-            if text_col is not None and k > 0:
-                c = c.withColumn(
-                    text_col,
-                    F.concat(F.col(text_col), F.lit(f" copyvariant{k}")),
-                )
-            copies.append(c)
-        df = functools.reduce(lambda a, b: a.unionByName(b), copies)
-        df.repartition(16).write.mode("overwrite").parquet(
-            f"{OUT_DIR}/{name}.parquet"
-        )
-        print(f"{name}: x{MULT} written", flush=True)
+    for name in TABLES:
+        write_replica(spark, SRC, OUT_DIR, name, MULT)
+        print(f"{name}: written", flush=True)
 
 
 def duck(src: str = OUT_DIR, sf: float = 1.0) -> None:
@@ -98,10 +68,11 @@ def duck(src: str = OUT_DIR, sf: float = 1.0) -> None:
 
     import __spark_entry__ as E
     from prometheus_anomaly_detection_lstm_spark import oracles as O
+    from prometheus_anomaly_detection_lstm_spark.io_tables import TABLES
 
     oracles = E.oracle_sql()
     con = duckdb.connect()
-    for t in COPY_AS_IS + list(KEYED):
+    for t in TABLES:
         glob = "/*.parquet" if os.path.isdir(f"{src}/{t}.parquet") else ""
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{src}/{t}.parquet{glob}'"
