@@ -39,10 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from prometheus_anomaly_detection_lstm_spark.io_tables import (
-    REPLICA_KEY_OFFSET,
-    REPLICA_TS_SHIFT_DAYS,
+    ensure_replica,
     load_table,
-    span_days,
     write_replica,
 )
 from prometheus_anomaly_detection_lstm_spark.operators import score as SC
@@ -243,73 +241,15 @@ def _sf1_q3_pair(spark, queries) -> dict:
     return out
 
 
-def _ensure_sf1_stamped(spark, name: str, recipe: dict) -> dict:
-    """Create (or verify and reuse) ``SF1_DIR/<name>.parquet``; returns
-    the bookkeeping keys.
-
-    Recipe stamp (r8 ADVICE 3): a pre-existing artifact is reused ONLY
-    if its ``<name>.recipe.json`` sidecar equals ``recipe`` AND its row
-    count agrees — a stale or differently-generated parquet would
-    otherwise silently make the official sf1 number measure other
-    data.  Mismatch -> regenerate and re-stamp."""
-    out: dict[str, float | int] = {}
-    path = f"{SF1_DIR}/{name}.parquet"
-    stamp_path = f"{SF1_DIR}/{name}.recipe.json"
-    reusable = False
-    if os.path.exists(path) and os.path.exists(stamp_path):
-        try:
-            with open(stamp_path) as fh:
-                stamped = json.load(fh)
-            reusable = stamped == recipe and (
-                spark.read.parquet(path).count() == recipe["rows"]
-            )
-        except (json.JSONDecodeError, OSError):
-            reusable = False
-    if not reusable:
-        t0 = time.perf_counter()
-        write_replica(spark, SF1_BASE, SF1_DIR, name, SF1_COPIES)
-        with open(stamp_path, "w") as fh:
-            json.dump(recipe, fh)
-        out[f"sf1_{name}_gen_sec"] = round(time.perf_counter() - t0, 3)
-    out[f"sf1_{name}_rows"] = recipe["rows"]
-    return out
-
-
-def _ensure_sf1_documents(spark) -> dict:
-    """The sf1 documents artifact shared by every sf1 corpus section:
-    10 doc_id-offset copies, copy k > 0 with a " copyvariant{k}" text
-    suffix."""
-    base = load_table(spark, SF1_BASE, "documents")
-    base_rows = base.count()
-    return _ensure_sf1_stamped(spark, "documents", {
-        "recipe": "copyvariant",
-        "copies": SF1_COPIES,
-        "doc_id_offset": REPLICA_KEY_OFFSET,
-        "base": f"{SF1_BASE}/documents.parquet",
-        "base_rows": base_rows,
-        "rows": base_rows * SF1_COPIES,
-    })
-
-
-def _ensure_sf1_events(spark) -> dict:
-    """The sf1 EVENTS artifact: 10 event_id-offset copies of the sf0.1
-    events table, each shifted by k*30 days so the copies tile a
-    contiguous ~300-day series — the natural scale axis for the
-    time-series flagship (10x the distinct minutes, not 10 duplicates
-    of every minute).  ``replicate`` refuses a base spanning >= 30
-    days; the measured span rides in the stamp."""
-    base = load_table(spark, SF1_BASE, "events")
-    base_rows = base.count()
-    return _ensure_sf1_stamped(spark, "events", {
-        "recipe": "copyshift",
-        "copies": SF1_COPIES,
-        "event_id_offset": REPLICA_KEY_OFFSET,
-        "ts_shift_days": REPLICA_TS_SHIFT_DAYS,
-        "base": f"{SF1_BASE}/events.parquet",
-        "base_rows": base_rows,
-        "base_span_days": span_days(base),
-        "rows": base_rows * SF1_COPIES,
-    })
+def _ensure_sf1(spark, name: str) -> dict:
+    """Create (or verify and reuse) the recipe-stamped
+    ``SF1_DIR/<name>.parquet`` (``documents``: 10 doc_id-offset copies,
+    copy k > 0 with a " copyvariant{k}" text suffix; ``events``: 10
+    event_id-offset copies shifted k*30 days, tiling a contiguous
+    ~300-day series) through ``io_tables.ensure_replica``; returns the
+    ``sf1_<name>_gen_sec`` / ``sf1_<name>_rows`` bookkeeping keys."""
+    got = ensure_replica(spark, SF1_BASE, SF1_DIR, name, SF1_COPIES)
+    return {f"sf1_{k}": v for k, v in got.items()}
 
 
 def _sf1_anomaly(spark, queries) -> dict:
@@ -321,7 +261,7 @@ def _sf1_anomaly(spark, queries) -> dict:
     events table, so this ratio covers pipeline_prep implicitly.
     Median of 3 warm passes (the basket's construct-once protocol)."""
     out: dict[str, float | list[float]] = {}
-    out.update(_ensure_sf1_events(spark))
+    out.update(_ensure_sf1(spark, "events"))
     df = queries["anomaly_mse"][0](spark, SF1_DIR)
     df.write.format("noop").mode("overwrite").save()  # warm, untimed
     con = _duck_connect(SF1_DIR)
@@ -365,7 +305,7 @@ def _sf1_anomaly_waist(spark, queries) -> dict:
     from prometheus_anomaly_detection_lstm_spark import oracles
 
     out: dict[str, float | int | list[float]] = {}
-    out.update(_ensure_sf1_events(spark))
+    out.update(_ensure_sf1(spark, "events"))
     waist_path = f"{SF1_DIR}/anomaly_waist.parquet"
 
     t0 = time.perf_counter()
@@ -446,7 +386,7 @@ def _sf1_minhash(spark, queries) -> dict:
     statistic as the sf0.1 minhash entry — with raw passes alongside.
     """
     out: dict[str, float | list[float]] = {}
-    out.update(_ensure_sf1_documents(spark))
+    out.update(_ensure_sf1(spark, "documents"))
 
     df = queries["dedup_minhash_lsh"][0](spark, SF1_DIR)
     df.write.format("noop").mode("overwrite").save()  # warm, untimed
@@ -495,7 +435,7 @@ def _sf1_span_removal(spark, queries) -> dict:
     )
 
     out: dict[str, float | list[float]] = {}
-    out.update(_ensure_sf1_documents(spark))
+    out.update(_ensure_sf1(spark, "documents"))
 
     df = queries["corpus_dup_span_removal"][0](spark, SF1_DIR)
     df.write.format("noop").mode("overwrite").save()  # warm, untimed
@@ -544,7 +484,7 @@ def _sf1_perplexity(spark, queries) -> dict:
     pass constructs fresh and the full corpus rollup stays in the
     timed cost)."""
     out: dict[str, float | list[float]] = {}
-    out.update(_ensure_sf1_documents(spark))
+    out.update(_ensure_sf1(spark, "documents"))
     con = _duck_connect(SF1_DIR)
     sql = queries["corpus_perplexity_filter"][1]
     passes: list[float] = []
@@ -581,7 +521,7 @@ def _sf1_langid(spark, queries) -> dict:
     every pass) — the key says so (`warm_vs_fullduck`); the
     like-for-like headline is `full_inrun_ratio` (full/full)."""
     out: dict[str, float | list[float]] = {}
-    out.update(_ensure_sf1_documents(spark))
+    out.update(_ensure_sf1(spark, "documents"))
     con = _duck_connect(SF1_DIR)
     sql = queries["text_lang_id_ngram"][1]
     full: list[float] = []

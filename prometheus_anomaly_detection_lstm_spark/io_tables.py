@@ -12,6 +12,9 @@ keeping oracle parity.
 from __future__ import annotations
 
 import functools
+import json
+import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -152,6 +155,67 @@ def write_replica(
     df.write.mode("overwrite").parquet(f"{dst_dir}/{name}.parquet")
 
 
+def ensure_replica(
+    spark: SparkSession, src_dir: str, dst_dir: str, name: str, copies: int
+) -> dict:
+    """:func:`write_replica` for ``documents`` or ``events``, skipped
+    when ``dst_dir`` already holds the table under the same recipe.
+
+    The recipe stamp names recipe, copies, key offset (for events also
+    the day shift and the measured base span), base path and row
+    counts; it is written beside the table as ``<name>.recipe.json``.
+    An existing ``<name>.parquet`` is reused only if its sidecar equals
+    the stamp and its row count agrees: a stale or differently built
+    parquet would otherwise make a measurement on ``dst_dir`` read
+    other data.  Returns ``{name}_gen_sec`` (only when it wrote) and
+    ``{name}_rows``."""
+    base = load_table(spark, src_dir, name)
+    base_rows = base.count()
+    if name == "documents":
+        recipe = {
+            "recipe": "copyvariant",
+            "copies": copies,
+            "doc_id_offset": REPLICA_KEY_OFFSET,
+            "base": f"{src_dir}/documents.parquet",
+            "base_rows": base_rows,
+            "rows": base_rows * copies,
+        }
+    elif name == "events":
+        recipe = {
+            "recipe": "copyshift",
+            "copies": copies,
+            "event_id_offset": REPLICA_KEY_OFFSET,
+            "ts_shift_days": REPLICA_TS_SHIFT_DAYS,
+            "base": f"{src_dir}/events.parquet",
+            "base_rows": base_rows,
+            "base_span_days": span_days(base),
+            "rows": base_rows * copies,
+        }
+    else:
+        raise ValueError(f"no replica recipe for table {name!r}")
+    path = f"{dst_dir}/{name}.parquet"
+    stamp_path = f"{dst_dir}/{name}.recipe.json"
+    reusable = False
+    if os.path.exists(path) and os.path.exists(stamp_path):
+        try:
+            with open(stamp_path) as fh:
+                stamped = json.load(fh)
+            reusable = stamped == recipe and (
+                spark.read.parquet(path).count() == recipe["rows"]
+            )
+        except (json.JSONDecodeError, OSError):
+            reusable = False
+    out: dict[str, float | int] = {}
+    if not reusable:
+        t0 = time.perf_counter()
+        write_replica(spark, src_dir, dst_dir, name, copies)
+        with open(stamp_path, "w") as fh:
+            json.dump(recipe, fh)
+        out[f"{name}_gen_sec"] = round(time.perf_counter() - t0, 3)
+    out[f"{name}_rows"] = recipe["rows"]
+    return out
+
+
 def events_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> (metric, ts, seq, value): THE shared sample-stream
     adapter (event_type is the series label) used by the promql/
@@ -219,8 +283,6 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     Frames with no scan lineage (in-memory, post-shuffle) fall back to
     the exact ``.rdd`` count.
     """
-    import os
-
     try:
         files = df.inputFiles()
     except Exception:
@@ -250,113 +312,6 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
         else:
             total += 1
     return total
-
-
-def write_day_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    mode: str = "overwrite",
-) -> None:
-    """Write a time-series frame as day-partitioned parquet — the
-    standard lake layout (``path/__day=YYYY-MM-DD/...``).
-
-    Partitioning by calendar day turns any day-range predicate into
-    PARTITION PRUNING at read time: a query over one week of a 100-TB
-    year touches ~2% of the files before a single row group is opened
-    (the scan plan shows it as ``PartitionFilters``).  The partition
-    column is derived, so the original ``ts_col`` stays intact in the
-    data files.
-    """
-    (
-        df.withColumn("__day", F.to_date(F.col(ts_col)))
-        .write.mode(mode)
-        .partitionBy("__day")
-        .parquet(path)
-    )
-
-
-def read_day_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a :func:`write_day_partitioned` dataset; ``__day`` comes
-    back as a partition column usable in pruning predicates."""
-    return spark.read.parquet(path)
-
-
-def _count_local_files(path: str) -> int:
-    """Parquet file count under a LOCAL path; raises on URI schemes
-    other than file: (os.walk would silently yield 0 for s3:// etc.,
-    making the returned before/after stats garbage)."""
-    import os
-
-    local = path.removeprefix("file:")
-    if "://" in local:
-        raise ValueError(
-            f"compact stats need a local path, got {path!r} — run the "
-            "compaction and count files with the object store's API"
-        )
-    return sum(
-        1
-        for _, _, files in os.walk(local)
-        for f in files
-        if f.endswith(".parquet")
-    )
-
-
-def compact_day_partitions(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_rows_per_file: int = 1_000_000,
-) -> dict[str, int]:
-    """Small-file compaction for a day-partitioned lake dataset.
-
-    Streaming ingestion writes one file per microbatch per day; after a
-    week a 100-TB lake has millions of KB-sized files and every scan
-    pays an open/seek per file.  Compaction rewrites each day into
-    ``ceil(day_rows / target_rows_per_file)`` files.
-
-    Scale shape: per-day row counts come from ONE metadata-cheap agg
-    over the partition column (no data columns read thanks to column
-    pruning); the rewrite itself repartitions by (day, file_slot) so
-    each output file is written by exactly one task — no global sort,
-    no driver-side file listing loops, and days compact independently
-    (a skewed day gets more slots, it cannot serialize the others).
-
-    Returns {"files_before": n, "files_after": m} so callers/tests can
-    assert the compaction actually bin-packed.
-    """
-    import math
-    import os
-
-    df = spark.read.parquet(path)
-    counts = {
-        r["__day"]: r["n"]
-        for r in df.groupBy("__day").count().withColumnRenamed("count", "n").collect()
-    }  # one row per DAY — metadata scale, bounded by the calendar
-    slots = {
-        d: max(1, math.ceil(n / target_rows_per_file)) for d, n in counts.items()
-    }
-    slot_map = F.create_map(
-        *[x for d, k in slots.items() for x in (F.lit(str(d)), F.lit(k))]
-    )
-    before = _count_local_files(path)
-    total_slots = sum(slots.values())
-    (
-        df.withColumn(
-            "__slot",
-            F.pmod(
-                F.xxhash64(F.monotonically_increasing_id()),
-                slot_map[F.col("__day").cast("string")],
-            ).cast("int"),
-        )
-        .repartition(total_slots, F.col("__day"), F.col("__slot"))
-        .drop("__slot")
-        .write.mode("overwrite")
-        .partitionBy("__day")
-        .parquet(out_path)
-    )
-    after = _count_local_files(out_path)
-    return {"files_before": before, "files_after": after}
 
 
 def write_bucketed(
@@ -390,190 +345,3 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     spec from the catalog, so joins/aggs on the bucket column skip
     their exchange."""
     return spark.table(table)
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    out_path: str,
-    col_a: str,
-    col_b: str,
-    n_bits: int = 8,
-    n_files: int = 8,
-) -> None:
-    """Rewrite a dataset Z-ORDERED on two numeric columns (Morton-curve
-    clustering — the OPTIMIZE ZORDER pattern) so parquet min/max stats
-    prune files for predicates on EITHER column.
-
-    A plain sort clusters one column perfectly and the other not at
-    all; interleaving the bits of the two columns' quantile ranks
-    yields files whose min/max footprint is narrow in BOTH dimensions.
-
-    Scale shape: per-column quantile cut points come from ONE
-    ``approx_percentile`` aggregate (sketch-mergeable, metadata-size
-    result); ranks and the Morton key are pure projections; the only
-    data movement is the range exchange on the key — the same single
-    sort-shuffle any clustering rewrite fundamentally requires, with
-    file count controlled by ``n_files``.
-    """
-    cuts = df.select(
-        F.percentile_approx(
-            col_a, [i / 2**n_bits for i in range(1, 2**n_bits)], 10_000
-        ).alias("ca"),
-        F.percentile_approx(
-            col_b, [i / 2**n_bits for i in range(1, 2**n_bits)], 10_000
-        ).alias("cb"),
-    ).first()
-
-    def rank_expr(col: str, cut_vals) -> F.Column:
-        # rank = number of cut points <= value (0..2^n_bits-1), as a
-        # literal-array binary-search-free fold: fine for 2^8 cuts
-        arr = F.array(*[F.lit(float(c)) for c in cut_vals])
-        return F.aggregate(
-            arr,
-            F.lit(0),
-            lambda acc, c: acc
-            + F.when(F.col(col).cast("double") >= c, 1).otherwise(0),
-        )
-
-    a_r = rank_expr(col_a, cuts["ca"])
-    b_r = rank_expr(col_b, cuts["cb"])
-    morton = F.lit(0).cast("bigint")
-    for i in range(n_bits):
-        bit_a = F.shiftright(a_r, i).bitwiseAND(F.lit(1)).cast("bigint")
-        bit_b = F.shiftright(b_r, i).bitwiseAND(F.lit(1)).cast("bigint")
-        morton = (
-            morton
-            + bit_a * F.lit(2 ** (2 * i)).cast("bigint")
-            + bit_b * F.lit(2 ** (2 * i + 1)).cast("bigint")
-        )
-    (
-        df.withColumn("__z", morton)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(out_path)
-    )
-
-
-#: canonical JSONL corpus schema — the interchange format training-data
-#: pipelines actually exchange (one JSON object per line, gzip per
-#: shard).  Explicit schema: corpus readers must never pay Spark's
-#: whole-input schema-inference pass, and a malformed line must become
-#: a NULL-keyed row to quarantine, not a silent column-type flip.
-JSONL_CORPUS_SCHEMA = (
-    "doc_id BIGINT, lang STRING, source STRING, ts_added STRING, "
-    "n_chars BIGINT, text STRING"
-)
-
-
-def write_jsonl_corpus(
-    df: DataFrame, path: str, shards: int | None = None, compress: bool = True
-) -> None:
-    """documents-shaped frame -> sharded (optionally gzipped) JSONL.
-
-    ``shards`` bounds the file count (one exchange); None keeps the
-    input partitioning (zero exchange — the right call when the frame
-    is already well-split).  gzip is the interchange default; Spark
-    writes/reads it natively per shard, and since gzip is not
-    splittable each shard should stay ~100-500 MB at scale — which is
-    what ``shards`` is for.
-    """
-    out = df if shards is None else df.repartition(shards)
-    writer = out.write.mode("overwrite")
-    if compress:
-        writer = writer.option("compression", "gzip")
-    writer.json(path)
-
-
-def read_jsonl_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Sharded JSONL (plain or .gz) -> corpus frame under the explicit
-    schema.  Lines that do not parse land with all-NULL columns plus
-    the raw line in ``_corrupt_record`` for quarantine — PERMISSIVE
-    mode, so one bad shard cannot fail a 100-TB read.  (Spark disallows
-    a query referencing ONLY ``_corrupt_record`` on a raw JSON scan;
-    persist the frame before a quarantine-only filter.)"""
-    return (
-        spark.read.schema(JSONL_CORPUS_SCHEMA + ", _corrupt_record STRING")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    bloom_cols: tuple[str, ...] = (),
-    shards: int | None = None,
-) -> None:
-    """Frame -> ORC with optional per-column Bloom filters — the
-    columnar interchange for Hive/Trino-adjacent stacks (ORC is built
-    into Spark; no extra package).  Bloom filters on point-lookup
-    columns let the reader skip entire stripes on equality predicates
-    the min/max stripe stats can't prune (high-cardinality ids).
-    Same sharding contract as the JSONL/CSV writers: ``shards=None``
-    keeps the input partitioning (zero exchange)."""
-    out = df if shards is None else df.repartition(shards)
-    writer = out.write.mode("overwrite")
-    if bloom_cols:
-        writer = writer.option(
-            "orc.bloom.filter.columns", ",".join(bloom_cols)
-        )
-    writer.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — vectorized reader, predicate pushdown and column
-    pruning apply exactly as on parquet (pinned by test)."""
-    return spark.read.orc(path)
-
-
-#: CSV metric-sample interchange schema (the flat-file drop every
-#: monitoring export produces: one sample per line).  ts is read as
-#: STRING then parsed explicitly — CSV timestamp inference is both slow
-#: and timezone-ambiguous; try_to_timestamp keeps a malformed stamp a
-#: NULL instead of failing the scan.
-CSV_METRICS_SCHEMA = "ts STRING, metric STRING, value DOUBLE, seq BIGINT"
-
-
-def write_csv_metrics(
-    df: DataFrame, path: str, shards: int | None = None, compress: bool = True
-) -> None:
-    """(ts, metric, value, seq) frame -> sharded (optionally gzipped)
-    CSV with header.  Same sharding contract as write_jsonl_corpus:
-    None keeps the input partitioning (zero exchange)."""
-    out = df if shards is None else df.repartition(shards)
-    writer = out.selectExpr(
-        "date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS ts",
-        "metric",
-        "value",
-        "seq",
-    ).write.mode("overwrite").option("header", True)
-    if compress:
-        writer = writer.option("compression", "gzip")
-    writer.csv(path)
-
-
-def read_csv_metrics(spark: SparkSession, path: str) -> DataFrame:
-    """Sharded CSV (plain or .gz) -> sample stream (ts TIMESTAMP_NTZ,
-    metric, value, seq) under the explicit schema — no inference scan.
-    Malformed lines keep the raw text in ``_corrupt_record`` for
-    quarantine (PERMISSIVE), and unparseable timestamps surface as NULL
-    ts rather than a failed 100-TB read."""
-    raw = (
-        spark.read.schema(CSV_METRICS_SCHEMA + ", _corrupt_record STRING")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("header", True)
-        .csv(path)
-    )
-    return raw.select(
-        F.expr(
-            "try_to_timestamp(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS')"
-        ).cast("timestamp_ntz").alias("ts"),
-        "metric",
-        "value",
-        "seq",
-        "_corrupt_record",
-    )

@@ -7,20 +7,16 @@ loss, and the shared early-stop / best-restore loop
 ``train.fit_early_stopping`` (train_autoencoder.py:196-237).
 Deterministic end to end — fixed init, full-batch updates, float64 —
 so training is bit-reproducible anywhere (SURVEY H5), unlike the
-Keras/TF path this replaces.  The distributed trainer sums the same
-gradients on the cluster through ``train.sum_over_batches``.  The
-gradient math is verified against numerical differentiation in
-tests/test_lstm_train.py.
+Keras/TF path this replaces.  The gradient math is verified against
+numerical differentiation in tests/test_lstm_train.py.
 """
 
 from __future__ import annotations
 
-from contextlib import nullcontext
-
 import numpy as np
 
 from .lstm_np import LSTMAutoencoder, _sigmoid, init_weights
-from .train import fit_early_stopping, persisted_features, sum_over_batches
+from .train import fit_early_stopping
 
 LAYERS = ("enc1", "enc2", "dec1", "dec2")
 
@@ -108,21 +104,11 @@ def forward_with_caches(weights: dict, x: np.ndarray):
     return y, (c1, c2, c3, c4, h4, y)
 
 
-def loss_and_grads(weights: dict, x: np.ndarray, denom: float | None = None):
-    """MSE-loss partials + analytical gradients for every weight.
-
-    With the default ``denom`` (= x.size) this is the full-batch loss
-    and gradient.  Passing the GLOBAL element count as ``denom`` while
-    ``x`` is one partition's slice makes the returned grads a partial
-    sum: summing them across partitions reproduces the full-batch
-    gradient exactly (up to float summation order) — the contract the
-    distributed trainer relies on.  In that mode the returned "loss" is
-    sum((y-x)^2) / denom, i.e. a partial of the global mean.
-    """
+def loss_and_grads(weights: dict, x: np.ndarray):
+    """Full-batch MSE loss + analytical gradients for every weight."""
     y, (c1, c2, c3, c4, h4, _) = forward_with_caches(weights, x)
     n, length, feats = x.shape
-    if denom is None:
-        denom = float(n * length * feats)
+    denom = float(n * length * feats)
     loss = float(((y - x) ** 2).sum() / denom)
     dy = 2.0 * (y - x) / denom
     dzd = dy * y * (1.0 - y)
@@ -209,67 +195,3 @@ def train_lstm_autoencoder(
     best, history = fit_early_stopping(step, init, epochs, patience)
     return LSTMAutoencoder(best), history
 
-
-# ------------------------------------------------------- distributed
-
-def _pack(weights: dict) -> np.ndarray:
-    """Flatten a weights/grads dict into one float64 vector (keys in
-    sorted order) for compact Arrow transport."""
-    return np.concatenate([weights[k].ravel() for k in sorted(weights)])
-
-
-def _unpack(vec: np.ndarray, template: dict) -> dict:
-    keys = sorted(template)
-    parts = np.split(vec, np.cumsum([template[k].size for k in keys])[:-1])
-    return {k: p.reshape(template[k].shape) for k, p in zip(keys, parts)}
-
-
-def train_lstm_autoencoder_distributed(
-    windows,  # DataFrame with a 'features' column: array<array<double>>
-    epochs: int = 50,
-    lr: float = 0.001,
-    patience: int = 10,
-    val=None,  # optional DataFrame, same shape; defaults to `windows`
-    units: tuple[int, int] = (64, 32),
-    seed: int = 20240613,
-) -> tuple[LSTMAutoencoder, list[float]]:
-    """Data-parallel BPTT: per-partition gradients on the cluster,
-    Adam on the driver (SURVEY §2.7-M4 at engine scale).
-
-    Two ``train.sum_over_batches`` jobs per epoch: the first runs
-    :func:`loss_and_grads` on each Arrow batch with the GLOBAL element
-    count as denominator and sums the packed partial gradients, which
-    the driver feeds to the same :func:`adam` update as
-    :func:`train_lstm_autoencoder`; the second sums the post-update
-    squared validation error (forward pass only) that drives the shared
-    early-stop loop.  Gradient partial-sums are mathematically the
-    full-batch gradient — the only divergence from the driver path is
-    float summation order (tests/test_lstm_train.py pins the two paths
-    together on the fixture).
-    """
-    with persisted_features(windows) as frame, (
-        nullcontext(frame) if val is None else persisted_features(val)
-    ) as val_frame:
-        first = frame.first()["features"]
-        length, n_features = len(first), len(first[0])
-        denom = float(frame.count() * length * n_features)
-        denom_val = (
-            denom if val_frame is frame
-            else float(val_frame.count() * length * n_features)
-        )
-        update = adam(lr)
-
-        def step(weights):
-            grads = sum_over_batches(
-                frame, lambda x: _pack(loss_and_grads(weights, x, denom)[1])
-            )
-            new = update(weights, _unpack(grads, weights))
-            sq = sum_over_batches(
-                val_frame,
-                lambda x: [float(((forward_with_caches(new, x)[0] - x) ** 2).sum())],
-            )
-            return new, float(sq[0] / denom_val)
-
-        init = init_weights(n_features, units=units, seed=seed)
-        best, history = fit_early_stopping(step, init, epochs, patience)
-    return LSTMAutoencoder(best), history

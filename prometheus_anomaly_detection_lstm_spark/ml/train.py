@@ -11,14 +11,13 @@ to the driver is the right call — MLlib has no LSTM, and shipping a
   (train_autoencoder.py:188-190): row identity differs, distribution
   properties are tested instead (SURVEY §5.5).
 * :func:`collect_windows` — windows DataFrame -> (n, L, F) ndarray.
-* :func:`fit_early_stopping` — M4, the one training loop every trainer
-  here and in ``ml/lstm_train.py`` runs (epochs, early stop,
-  best-restore).
+* :func:`fit_early_stopping` — M4, the one training loop both
+  trainers run (:func:`train_linear_autoencoder` here and
+  ``ml/lstm_train.train_lstm_autoencoder``): epochs, early stop,
+  best-restore.
 * :func:`train_linear_autoencoder` — a deterministic NumPy autoencoder
   (full-batch gradient descent, fixed init) standing in for the Keras
-  LSTM; :func:`train_linear_autoencoder_distributed` sums its gradient
-  on the cluster through :func:`sum_over_batches`, the one distributed
-  job shape (the driver holds the parameters, the cluster sums).
+  LSTM.
 * :func:`fit_threshold` — A11: percentile of training-set errors, the
   practice config.yaml:113-118 documents but never automates.  The CLI
   ``train`` stage takes the same percentile with ``np.percentile``
@@ -29,15 +28,12 @@ from __future__ import annotations
 
 import json
 import os
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .infer import batch_tensor
 
 
 def train_val_split(
@@ -167,75 +163,3 @@ def save_artifacts(
     with open(os.path.join(out_dir, "training_meta.json"), "w") as fh:
         json.dump({"history": history, "threshold": threshold}, fh)
 
-
-@contextmanager
-def persisted_features(windows: DataFrame):
-    """Ship the package, persist the ``features`` column of ``windows``
-    for the duration of the block, unpersist it on the way out."""
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(windows.sparkSession)
-    frame = windows.select("features").persist()
-    try:
-        yield frame
-    finally:
-        frame.unpersist()
-
-
-def sum_over_batches(frame: DataFrame, partial) -> np.ndarray:
-    """One Spark job: ``partial(x)`` maps each Arrow batch of ``frame``'s
-    features, as an (n, L, F) tensor, to a float64 vector; the driver
-    returns the sum of the vectors."""
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vec = np.asarray(partial(batch_tensor(pdf["features"])), "float64")
-            yield pd.DataFrame({"v": [vec.tolist()]})
-
-    parts = frame.mapInPandas(run, "v array<double>").toPandas()
-    return np.sum([np.asarray(v, "float64") for v in parts["v"]], axis=0)
-
-
-def train_linear_autoencoder_distributed(
-    windows,  # DataFrame (window_id, start_ts, features)
-    epochs: int = 50,
-    lr: float = 0.1,
-    patience: int = 10,
-) -> tuple[LinearAutoencoder, list[float]]:
-    """Distributed full-batch GD: gradients aggregate on the cluster,
-    parameters live on the driver.
-
-    One :func:`sum_over_batches` job under the current (a, b) packs
-    (sum(err*x), sum(err), sum(err^2), n): the post-update loss of the
-    epoch that set (a, b) and the gradient the next epoch applies — one
-    job before the first epoch, one per epoch.  This matches driver-side
-    training to float precision (partial-sum order is the only
-    difference).
-    """
-    with persisted_features(windows) as frame:
-        n_features = len(frame.first()["features"][0])
-
-        def stats(a, b):
-            def partial(x):
-                err = x * a + b - x
-                sq_n = [(err * err).sum(), x.shape[0] * x.shape[1]]
-                return np.concatenate(
-                    [(err * x).sum(axis=(0, 1)), err.sum(axis=(0, 1)), sq_n]
-                )
-
-            sums = sum_over_batches(frame, partial)
-            n = sums[-1]
-            grads = (sums[:n_features] / n, sums[n_features:-2] / n)
-            return (a, b) + grads, float(sums[-2] / (n * n_features))
-
-        def step(params):
-            a, b, mean_ex, mean_e = params
-            return stats(a - lr * 2.0 * mean_ex, b - lr * 2.0 * mean_e)
-
-        init, _ = stats(np.full(n_features, 0.5), np.zeros(n_features))
-        best, history = fit_early_stopping(step, init, epochs, patience)
-    return LinearAutoencoder(a=best[0], b=best[1]), history

@@ -1045,7 +1045,7 @@ WHERE i * 1.0 / sa.n_sh >= {CONTAINMENT_THRESHOLD}"""
 QUERIES["text_containment_pairs"] = (q_containment_pairs, ORACLE_CONTAINMENT)
 
 
-# ----------------------------------------------------- persisted index
+# -------------------------------------------------------- band buckets
 
 def band_buckets(
     sigs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
@@ -1069,71 +1069,6 @@ def band_buckets(
             F.col("bb.bucket").alias("bucket"),
         )
     )
-
-
-def build_dedup_index(
-    docs: DataFrame, table: str = "dedup_bucket_index", n_buckets: int = 16
-) -> None:
-    """Persist the minhash band-bucket table as a BUCKETED lake table —
-    the production dedup index the incremental docstring promises.
-
-    Written hash-bucketed on ``bucket`` (io_tables.write_bucketed), so
-    the daily probe join arrives at a layout already partitioned on the
-    join key: only the (small) new-batch side shuffles; the corpus-size
-    index is read in place with NO exchange — the recurring daily cost
-    is |new batch|, not |corpus|.  Rebuild is incremental in production
-    (append each ingest batch's buckets); here overwrite suffices.
-    """
-    from ..io_tables import write_bucketed
-
-    spark = docs.sparkSession
-    # DROP first, and clear an ORPHANED location (dir left by a prior
-    # process whose in-memory catalog is gone): saveAsTable refuses to
-    # adopt an existing managed-table path (LOCATION_ALREADY_EXISTS).
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    import shutil
-
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
-    write_bucketed(
-        band_buckets(minhash_signatures(docs)), table, "bucket", n_buckets
-    )
-
-
-def minhash_incremental_prebuilt(
-    spark: SparkSession,
-    docs: DataFrame,
-    new_min_id: int,
-    table: str = "dedup_bucket_index",
-    threshold: float = JACCARD_THRESHOLD,
-) -> DataFrame:
-    """The daily increment against the PERSISTED index: new docs'
-    buckets probe the bucketed corpus table; candidates verify with
-    exact Jaccard.  Result == :func:`minhash_lsh_dedup_incremental`
-    computed from scratch (equality pinned in tests/test_dedup_index.py).
-    """
-    from ..io_tables import read_bucketed
-
-    index = read_bucketed(spark, table)
-    new_buckets = band_buckets(
-        minhash_signatures(docs.filter(F.col("doc_id") >= new_min_id))
-    )
-    cands = (
-        index.alias("a")
-        .join(
-            new_buckets.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    return _verify_jaccard(shingles(docs), cands, threshold)
 
 
 # ----------------------------------------------- related-docs top-k

@@ -1,47 +1,16 @@
-"""Join strategy utilities for skew and co-location (SURVEY §4-O8).
+"""Join co-location utility (SURVEY §4-O8).
 
-The testdata is uniform, so these are the *mechanisms* a 100-TB
-deployment reaches for, each with an equivalence test against the plain
-strategy:
+The testdata is uniform, so this is the *mechanism* a 100-TB
+deployment reaches for, with a plan test against the plain strategy:
 
-* :func:`salted_join` — breaks a hot key across ``salt`` sub-keys:
-  the skewed (large) side gets a random salt, the small side is
-  replicated ``salt`` times.  Turns one straggler task into ``salt``
-  even tasks.  AQE's skew-join handles moderate skew automatically;
-  salting is for the pathological key that exceeds a single task even
-  after AQE splitting.
-* :func:`write_bucketed` / :func:`bucketed_join_ready` — persist both
-  sides bucketed by the join key so later joins co-locate without a
-  shuffle (SortMergeJoin with zero Exchange).
+* :func:`write_bucketed` — persist both sides bucketed by the join key
+  so later joins co-locate without a shuffle (SortMergeJoin with zero
+  Exchange).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the large side salted across ``salt`` sub-keys.
-
-    Result is identical to ``large.join(small, key, how)`` for inner /
-    left joins on an equi-key; only the physical key distribution
-    changes.
-    """
-    salted_large = large.withColumn(
-        "__salt", (F.rand(seed=42) * salt).cast("int")
-    )
-    replicated_small = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    out = salted_large.join(replicated_small, [key, "__salt"], how)
-    return out.drop("__salt")
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -58,11 +27,3 @@ def write_bucketed(
         .sortBy(key)
         .saveAsTable(table_name)
     )
-
-
-def bucketed_join_ready(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two co-bucketed saved tables; with matching bucket specs the
-    plan contains no Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), key)

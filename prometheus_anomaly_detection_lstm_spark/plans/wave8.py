@@ -12,7 +12,7 @@ same lake.
   percentile counts, skew ratio, top-key share.  The only
   data-proportional exchange is the per-key partial-aggregated
   groupBy; the percentile pass runs on the (much smaller) key-counts
-  frame.  Feeds ``operators/skew.salted_join``'s salting decision.
+  frame.
 - ``embedding_hard_negatives`` — triplet-mining readout per anchor:
   the hardest negative (highest cosine under a DIFFERENT label) and
   hardest positive (lowest cosine under the SAME label), plus the

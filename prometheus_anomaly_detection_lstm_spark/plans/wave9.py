@@ -41,9 +41,7 @@ def ab_sequential(ev: DataFrame) -> DataFrame:
     (mSPRT) p-value process per experiment day, so the experimenter can
     peek daily WITHOUT inflating false positives (the fixed-horizon
     t-test in events_ab_test is only valid at its planned end).
-    ``ev`` carries (ts, user_id, value) purchase events; the streaming
-    twin is :mod:`..streaming.msprt` (sufficient statistics carried
-    across micro-batches, pinned to this operator).
+    ``ev`` carries (ts, user_id, value) purchase events.
 
     Per day d, over purchase events cumulative through d (variant =
     user_id % 2): Welch-free pooled-variance delta

@@ -101,7 +101,7 @@ def test_sf1_copyshift_guards_base_span(spark, tmp_path, monkeypatch):
         sys.path.remove(str(repo))
     monkeypatch.setattr(bench, "SF1_DIR", str(tmp_path))
     monkeypatch.setattr(bench, "SF1_BASE", "/root/testdata/sf0.001")
-    out = bench._ensure_sf1_events(spark)
+    out = bench._ensure_sf1(spark, "events")
     stamp = json.loads((tmp_path / "events.recipe.json").read_text())
     assert stamp["base_span_days"] < stamp["ts_shift_days"] == 30
     assert out["sf1_events_rows"] == stamp["rows"] == 10 * stamp["base_rows"]

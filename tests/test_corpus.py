@@ -127,8 +127,7 @@ def test_stratified_sample_salted_matches_single_window(spark):
 
 def test_stratified_sample_spreads_hot_label(spark):
     """The phase-1 shard key (label, salt) cuts the hottest partition
-    by >3x vs partitioning on label alone — the same measurement as
-    test_skew.py's hot-key check."""
+    by >3x vs partitioning on label alone."""
     emb = _hot_label_emb(spark)
     parts = 16
 

@@ -1,8 +1,6 @@
-"""Persisted minhash dedup index: prebuilt == inline, no corpus shuffle."""
+"""minhash dedup: the pre-keyed flagship equals the gated default."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from prometheus_anomaly_detection_lstm_spark.operators import dedup
 from .conftest import SF_SMALL
@@ -22,37 +20,3 @@ def test_pre_key_equals_gated_minhash(spark):
     b = _pairs(dedup.minhash_lsh_dedup(docs, pre_key=False))
     assert a == b and len(a) > 0
 
-
-def test_prebuilt_index_equals_inline_incremental(spark):
-    docs = dedup._docs(spark, SF_SMALL)
-    dedup.build_dedup_index(docs, table="t_dedup_idx")
-    new_min = dedup.NEW_MIN_ID if hasattr(dedup, "NEW_MIN_ID") else 40
-    inline = dedup.minhash_lsh_dedup_incremental(docs, new_min)
-    prebuilt = dedup.minhash_incremental_prebuilt(
-        spark, docs, new_min, table="t_dedup_idx"
-    )
-    assert _pairs(prebuilt) == _pairs(inline)
-    assert len(_pairs(prebuilt)) > 0  # the check isn't vacuous
-
-
-def test_index_side_join_has_no_exchange(spark):
-    """The bucketed index must join WITHOUT its own hashpartitioning
-    exchange — the whole point of paying the bucket shuffle at build
-    time.  Probe the index with a tiny frame and inspect the plan: the
-    only Exchange(s) sit on the probe side."""
-    docs = dedup._docs(spark, SF_SMALL)
-    dedup.build_dedup_index(docs, table="t_dedup_idx2")
-    index = spark.table("t_dedup_idx2")
-    probe = index.limit(20).select(
-        "band", "bucket", F.col("doc_id").alias("p_id")
-    )
-    joined = index.join(probe, ["band", "bucket"])
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    # scan of the bucketed table carries the bucket spec; no exchange
-    # may be attributed to it (SelectedBucketsCount proves bucketed read)
-    assert "SelectedBucketsCount" in plan
-    idx_scan = plan.index("t_dedup_idx2")
-    # walk upward: no "Exchange hashpartitioning" between the index scan
-    # and the join on the index branch.  Cheap proxy: the plan contains
-    # at most ONE hashpartitioning exchange overall (the probe side).
-    assert plan.count("Exchange hashpartitioning") <= 1

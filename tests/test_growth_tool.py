@@ -1,4 +1,5 @@
-"""io_tables.replicate (the one scale-up recipe) and tools/growth.py."""
+"""io_tables.replicate (the one scale-up recipe), its recipe-stamped
+writer and tools/growth.py."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 
 from prometheus_anomaly_detection_lstm_spark.io_tables import (
     REPLICA_KEYS,
+    ensure_replica,
     load_table,
     replicate,
     span_days,
@@ -76,6 +78,37 @@ def test_replicate_refuses_wide_events_base(spark):
     )
     with pytest.raises(ValueError, match="< 30 days"):
         replicate(wide, "events", 3)
+
+
+@pytest.mark.parametrize("name", ["documents", "events"])
+def test_ensure_replica_reuses_a_stamped_table(spark, tmp_path, name):
+    """The first call writes the table and its recipe stamp; a second
+    call with the same recipe rewrites nothing and reports no
+    generation time."""
+    first = ensure_replica(spark, SF_SMALL, str(tmp_path), name, 2)
+    base_rows = load_table(spark, SF_SMALL, name).count()
+    assert set(first) == {f"{name}_gen_sec", f"{name}_rows"}
+    assert first[f"{name}_rows"] == 2 * base_rows
+    stamp = json.loads((tmp_path / f"{name}.recipe.json").read_text())
+    assert stamp["copies"] == 2 and stamp["rows"] == 2 * base_rows
+    assert stamp["base"] == f"{SF_SMALL}/{name}.parquet"
+
+    def mtimes():
+        return {
+            str(p): p.stat().st_mtime_ns
+            for p in tmp_path.rglob("*")
+            if p.is_file()
+        }
+
+    before = mtimes()
+    second = ensure_replica(spark, SF_SMALL, str(tmp_path), name, 2)
+    assert second == {f"{name}_rows": 2 * base_rows}
+    assert mtimes() == before
+    # a different recipe (copy count) regenerates and re-stamps
+    third = ensure_replica(spark, SF_SMALL, str(tmp_path), name, 3)
+    assert f"{name}_gen_sec" in third
+    stamp = json.loads((tmp_path / f"{name}.recipe.json").read_text())
+    assert stamp["copies"] == 3
 
 
 def test_growth_tool_smoke(spark, monkeypatch, capsys):

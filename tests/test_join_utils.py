@@ -1,4 +1,4 @@
-"""Skew/co-location mechanisms: result equivalence + plan shape."""
+"""Co-location and partition-pruning mechanisms: plan shape."""
 
 from __future__ import annotations
 
@@ -8,8 +8,6 @@ from pyspark.sql import functions as F
 
 from prometheus_anomaly_detection_lstm_spark.io_tables import load_table
 from prometheus_anomaly_detection_lstm_spark.operators.join_utils import (
-    bucketed_join_ready,
-    salted_join,
     write_bucketed,
 )
 
@@ -18,26 +16,6 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_salted_join_equals_plain(spark):
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, SF, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = (
-        li.join(orders, "l_orderkey")
-        .groupBy("l_orderkey")
-        .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 6).alias("q"))
-    )
-    salted = (
-        salted_join(li, orders, "l_orderkey", salt=8)
-        .groupBy("l_orderkey")
-        .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 6).alias("q"))
-    )
-    a = {(r.l_orderkey, r.n, r.q) for r in plain.collect()}
-    b = {(r.l_orderkey, r.n, r.q) for r in salted.collect()}
-    assert a == b
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -57,7 +35,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join_ready(spark, "li_bkt", "ord_bkt", "l_orderkey")
+        joined = spark.table("li_bkt").join(spark.table("ord_bkt"), "l_orderkey")
         plan = _plan(joined)
         assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, plan  # co-located: no shuffle either side
@@ -82,33 +60,3 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(dt" in plan, plan[:500]
     assert back.count() == ev.filter(F.col("dt") == "2024-01-05").count()
 
-
-def test_day_partitioned_sink_prunes_partitions(spark, tmp_path):
-    """Day-range predicates on the partitioned layout must become
-    PartitionFilters (pruned before file listing), not data filters."""
-    from pyspark.sql import functions as F
-
-    from prometheus_anomaly_detection_lstm_spark.io_tables import (
-        load_table,
-        read_day_partitioned,
-        write_day_partitioned,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    path = str(tmp_path / "events_by_day")
-    write_day_partitioned(ev, path)
-
-    back = read_day_partitioned(spark, path)
-    # roundtrip: same rows
-    assert back.count() == ev.count()
-
-    one_day = back.filter(F.col("__day") == "2024-01-02")
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    # the day predicate must appear in the partition filters, and the
-    # pruned scan must read fewer files than the full dataset
-    pf = plan.split("PartitionFilters: ")[1].split("\n")[0]
-    assert "__day" in pf
-    n_days = ev.select(F.to_date("ts").alias("d")).distinct().count()
-    assert n_days > 1
-    assert one_day.count() == ev.filter(F.to_date("ts") == "2024-01-02").count()

@@ -81,68 +81,3 @@ def test_early_stopping_restores_best():
     final = float(((y - x) ** 2).mean())
     assert final == pytest.approx(min(hist), abs=1e-12)
 
-
-def _twelve_windows(spark):
-    """Two repeating noisy patterns, 12 windows of 5 x 3, as an
-    ndarray and as a 4-partition windows frame."""
-    rng = np.random.default_rng(11)
-    base = rng.uniform(0.2, 0.8, (2, 5, 3))
-    x = np.concatenate(
-        [base + rng.normal(0, 0.01, base.shape) for _ in range(6)]
-    )
-    rows = [(int(i), [list(map(float, step)) for step in w])
-            for i, w in enumerate(x)]
-    windows = spark.createDataFrame(
-        rows, "window_id bigint, features array<array<double>>"
-    ).repartition(4)
-    return x, windows
-
-
-def test_distributed_training_matches_driver(spark):
-    """Per-partition gradients + driver Adam == driver-side full-batch
-    training on the fixture (float summation order is the only
-    divergence; the histories and weights pin together tightly)."""
-    from prometheus_anomaly_detection_lstm_spark.ml.lstm_train import (
-        train_lstm_autoencoder_distributed,
-    )
-
-    x, windows = _twelve_windows(spark)
-    # patience >= epochs never stops; at lr=0.5 epochs 3-5 sit >= 1.7%
-    # above epoch 2's loss, so the stop fires after epoch 5 whatever the
-    # sum order, and epoch 2's weights come back
-    for kw, n_epochs in (
-        ({"epochs": 8, "lr": 0.02, "patience": 8}, 8),
-        ({"epochs": 10, "lr": 0.5, "patience": 3}, 5),
-    ):
-        driver_model, driver_hist = train_lstm_autoencoder(
-            x, units=(4, 2), **kw
-        )
-        dist_model, dist_hist = train_lstm_autoencoder_distributed(
-            windows, units=(4, 2), **kw
-        )
-        assert len(driver_hist) == len(dist_hist) == n_epochs
-        np.testing.assert_allclose(driver_hist, dist_hist, rtol=1e-9)
-        for k in driver_model.w:
-            np.testing.assert_allclose(
-                dist_model.w[k], driver_model.w[k], rtol=1e-7, atol=1e-10
-            )
-
-
-def test_distributed_training_job_count(spark, count_jobs):
-    """Two Spark jobs per epoch (gradients, validation loss) plus a
-    fixed set-up: the shared partial-sum job must not add a third."""
-    from prometheus_anomaly_detection_lstm_spark.ml.lstm_train import (
-        train_lstm_autoencoder_distributed,
-    )
-
-    _, windows = _twelve_windows(spark)
-    counts = {
-        epochs: count_jobs(
-            lambda: train_lstm_autoencoder_distributed(
-                windows, epochs=epochs, lr=0.02, patience=epochs, units=(4, 2)
-            )
-        )[1]
-        for epochs in (2, 5)
-    }
-    assert counts[5] - counts[2] == 6
-    assert counts[5] <= 15  # 2 x 5 epochs, 5 set-up jobs

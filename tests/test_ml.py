@@ -109,52 +109,6 @@ def test_keras_gate_raises_without_tf():
         build_lstm_autoencoder(20, 18)
 
 
-def test_distributed_training_matches_driver(windows_df):
-    from prometheus_anomaly_detection_lstm_spark.ml.train import (
-        train_linear_autoencoder_distributed,
-    )
-
-    x = collect_windows(windows_df)
-    # patience >= epochs never stops; at lr=2 the loss grows ~14x an
-    # epoch, so the stop fires after epoch 4 whatever the sum order
-    for kw, n_epochs in (
-        ({"epochs": 15, "patience": 50}, 15),
-        ({"epochs": 15, "lr": 2.0, "patience": 3}, 4),
-    ):
-        m_drv, h_drv = train_linear_autoencoder(x, **kw)
-        m_dist, h_dist = train_linear_autoencoder_distributed(windows_df, **kw)
-        assert len(h_drv) == len(h_dist) == n_epochs
-        # same math, different partial-sum order -> equal to float tolerance
-        np.testing.assert_allclose(m_dist.a, m_drv.a, rtol=1e-9)
-        np.testing.assert_allclose(m_dist.b, m_drv.b, rtol=1e-9, atol=1e-12)
-        np.testing.assert_allclose(h_dist, h_drv, rtol=1e-9)
-
-
-def test_distributed_training_job_count(spark, windows_df, count_jobs):
-    """One Spark job per epoch plus a fixed set-up: the shared
-    partial-sum job must not grow a second job per epoch."""
-    from prometheus_anomaly_detection_lstm_spark.ml.train import (
-        train_linear_autoencoder_distributed,
-    )
-
-    # 12 windows in 4 partitions: a set-up cost that does not depend on
-    # how many shuffle partitions the windows plan was cut into
-    rows = [(i, w.tolist()) for i, w in enumerate(collect_windows(windows_df)[:12])]
-    small = spark.createDataFrame(
-        rows, "window_id bigint, features array<array<double>>"
-    ).repartition(4)
-    counts = {
-        epochs: count_jobs(
-            lambda: train_linear_autoencoder_distributed(
-                small, epochs=epochs, patience=epochs
-            )
-        )[1]
-        for epochs in (2, 5)
-    }
-    assert counts[5] - counts[2] == 3
-    assert counts[5] <= 9  # 5 epochs, the pre-epoch job, 3 set-up jobs
-
-
 def _scripted(losses):
     """A step that returns a fresh params array per epoch and the next
     scripted loss; ``made`` records every params object it returned."""

@@ -230,19 +230,6 @@ def test_winnowing_skips_docs_shorter_than_k(spark):
     assert rows[0].n_fingerprints == 1
 
 
-def test_salted_join_rejects_outer_hows(spark):
-    from prometheus_anomaly_detection_lstm_spark.operators.skew import (
-        salted_join,
-    )
-
-    fact = spark.range(4).withColumnRenamed("id", "k")
-    dim = spark.range(2).withColumnRenamed("id", "k")
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(fact, dim, "k", how="full")
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(fact, dim, "k", how="right")
-
-
 def test_quality_filter_rules_fire_individually(spark):
     from prometheus_anomaly_detection_lstm_spark.operators.text import (
         quality_filter,

@@ -9,7 +9,6 @@ through untouched, and (c) never run a Spark job just to decide.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import functions as F
 
@@ -69,101 +68,6 @@ def test_dedup_and_similarity_producers_use_the_gate():
         assert ".repartition(" not in src
 
 
-def test_jsonl_corpus_roundtrip_and_quarantine(spark, tmp_path):
-    """JSONL interchange: gzip shard roundtrip preserves rows; a
-    malformed line quarantines into _corrupt_record instead of failing
-    the read or flipping column types."""
-    import gzip
-    import os
-
-    from pyspark.sql import functions as F
-
-    from prometheus_anomaly_detection_lstm_spark.io_tables import (
-        read_jsonl_corpus,
-        write_jsonl_corpus,
-    )
-
-    docs = (
-        load_table(spark, SF_SMALL, "documents")
-        .withColumn("ts_added", F.lit("2024-01-01T00:00:00Z"))
-        .select("doc_id", "lang", "source", "ts_added", "n_chars", "text")
-    )
-    path = str(tmp_path / "corpus_jsonl")
-    write_jsonl_corpus(docs, path, shards=4)
-    files = [f for f in os.listdir(path) if f.endswith(".json.gz")]
-    assert len(files) == 4
-    # Spark disallows filtering RAW json on only _corrupt_record
-    # (column pruning would drop the source line) — persist first, the
-    # documented pattern for quarantine queries.
-    back = read_jsonl_corpus(spark, path).persist()
-    assert back.filter(F.col("_corrupt_record").isNotNull()).count() == 0
-    a = {tuple(r) for r in docs.collect()}
-    b = {
-        tuple(r)
-        for r in back.drop("_corrupt_record").collect()
-    }
-    assert a == b
-
-    # inject a malformed shard
-    bad = str(tmp_path / "corpus_bad")
-    os.makedirs(bad)
-    with gzip.open(f"{bad}/part-bad.json.gz", "wt") as fh:
-        fh.write('{"doc_id": 1, "lang": "en", "text": "ok"}\n')
-        fh.write("NOT JSON AT ALL\n")
-    q = read_jsonl_corpus(spark, bad).persist()
-    assert q.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-    assert q.filter(F.col("doc_id") == 1).count() == 1
-    q.unpersist()
-    back.unpersist()
-
-
-def test_csv_metrics_roundtrip_and_quarantine(spark, tmp_path):
-    """CSV interchange: gzip shard roundtrip preserves the sample
-    stream; malformed lines quarantine; bad timestamps become NULL ts
-    instead of failing the scan."""
-    import gzip
-    import os
-
-    from pyspark.sql import functions as F
-
-    from prometheus_anomaly_detection_lstm_spark.io_tables import (
-        read_csv_metrics,
-        write_csv_metrics,
-    )
-
-    samples = load_table(spark, SF_SMALL, "events").select(
-        "ts",
-        F.col("event_type").alias("metric"),
-        "value",
-        F.col("event_id").alias("seq"),
-    )
-    path = str(tmp_path / "metrics_csv")
-    write_csv_metrics(samples, path, shards=3)
-    files = [f for f in os.listdir(path) if f.endswith(".csv.gz")]
-    assert len(files) == 3
-    back = read_csv_metrics(spark, path).persist()
-    assert back.filter(F.col("_corrupt_record").isNotNull()).count() == 0
-    a = {tuple(r) for r in samples.collect()}
-    b = {tuple(r) for r in back.drop("_corrupt_record").collect()}
-    assert a == b
-
-    bad = str(tmp_path / "metrics_bad")
-    os.makedirs(bad)
-    with gzip.open(f"{bad}/part-bad.csv.gz", "wt") as fh:
-        fh.write("ts,metric,value,seq\n")
-        fh.write("2024-01-01 00:00:00.000000,cpu,1.5,1\n")
-        fh.write("not-a-timestamp,cpu,2.5,2\n")
-        fh.write("2024-01-01 00:02:00.000000,cpu,NOT_A_NUMBER,3\n")
-    q = read_csv_metrics(spark, bad).persist()
-    # row 3: value fails DOUBLE -> quarantined; row 2: ts string parses
-    # into the schema but try_to_timestamp yields NULL ts
-    assert q.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-    assert q.filter(F.col("ts").isNull() & F.col("_corrupt_record").isNull()).count() == 1
-    assert q.filter(F.col("seq") == 1).select("value").first()[0] == 1.5
-    q.unpersist()
-    back.unpersist()
-
-
 def test_streaming_frame_passes_through(spark, tmp_path):
     # Round-9: the gate now guards streaming frames explicitly — a
     # readStream source has no static partitioning to inspect
@@ -178,24 +82,3 @@ def test_streaming_frame_passes_through(spark, tmp_path):
     out = parallelize_if_underpartitioned(stream, "doc_id")
     assert out is stream  # identical object — untouched
 
-
-def test_orc_roundtrip_pushdown_and_bloom_option(spark, tmp_path):
-    from prometheus_anomaly_detection_lstm_spark.io_tables import (
-        load_table,
-        read_orc,
-        write_orc,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events")
-    path = str(tmp_path / "events_orc")
-    write_orc(ev, path, bloom_cols=("event_type",), shards=3)
-    files = [f for f in os.listdir(path) if f.endswith(".orc")]
-    assert len(files) == 3
-    back = read_orc(spark, path)
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in ev.collect()}
-    # predicate pushdown + column pruning reach the ORC scan
-    q = back.filter(F.col("event_type") == "click").select("event_id")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "EqualTo(event_type,click)" in plan
-    assert "struct<event_id:bigint,event_type:string>" in plan.replace(" ", "")
-    assert q.count() == ev.filter("event_type = 'click'").count()

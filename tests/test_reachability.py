@@ -1,0 +1,133 @@
+"""Ratchet: no package top-level def or class is reachable only from tests.
+
+A def counts as reached when its name occurs outside ``tests/``: in the
+package, ``bench.py``, ``__spark_entry__.py``, ``tools/`` or
+``perfbench/``, as a ``Name``, an ``Attribute``, an import alias or a
+string constant that is not a docstring.  The defs nothing reaches must
+equal :data:`UNREACHED`, each kept for a stated reason.  A new def with
+no non-test caller fails this test: give it a caller or delete it.  A
+listed def that gains a caller leaves the list.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+PKG = "prometheus_anomaly_detection_lstm_spark"
+
+#: qualified def -> why it stays without a non-test caller.
+UNREACHED = {
+    "streaming.exporter.start_http_server": (
+        "the live detector's /metrics endpoint (ROADMAP item 1)"
+    ),
+    "streaming.detector.run_detector_on_batch": (
+        "the foreachBatch sink cli detect will call (ROADMAP item 1)"
+    ),
+    "plans.reports.save_histogram_png": (
+        "the reference's MSE histogram artifact (ROADMAP item 6)"
+    ),
+    "plans.reports.save_loss_curve_png": (
+        "the reference's loss-curve artifact (ROADMAP item 6)"
+    ),
+    "plans.png.decode_ihdr": (
+        "reads back the PNG header the report writers emit (ROADMAP item 6)"
+    ),
+    "ml.keras_bridge.load_keras_archive": (
+        "loads the reference's trained .keras model"
+    ),
+    "ml.joblib_lite.scaler_params_from_joblib": (
+        "loads the reference's fitted scaler.joblib"
+    ),
+    "ml.autoencoder.build_lstm_autoencoder": (
+        "the reference's Keras model builder, gated on TensorFlow"
+    ),
+    "operators.windows.sequence_windows": (
+        "oracle twin of sequence_windows_scalable"
+    ),
+    "operators.windows.sliding_mean": (
+        "oracle twin of the windowed mean"
+    ),
+    "sql_session.open_sql_session": "documented SQL-session API",
+    "sources.prometheus.parse_response_df": (
+        "documented Prometheus response parser"
+    ),
+    "operators.promql.holt_smoothing": "documented PromQL holt_winters",
+    "operators.multimodal.decode_png_batch": (
+        "documented multimodal PNG decoder"
+    ),
+}
+
+
+def _root() -> pathlib.Path:
+    root = pathlib.Path.cwd().resolve()
+    if not (root / PKG).exists():  # running from another cwd
+        root = pathlib.Path(__file__).resolve().parents[1]
+    return root
+
+
+def _sources(root: pathlib.Path):
+    yield from (root / PKG).rglob("*.py")
+    yield root / "bench.py"
+    yield root / "__spark_entry__.py"
+    yield from (root / "tools").rglob("*.py")
+    yield from (root / "perfbench").rglob("*.py")
+
+
+def _docstrings(tree: ast.AST) -> set[int]:
+    doc_nodes = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, doc_nodes) and node.body:
+            first = node.body[0]
+            if isinstance(first, ast.Expr) and isinstance(
+                first.value, ast.Constant
+            ):
+                out.add(id(first.value))
+    return out
+
+
+def unreached() -> set[str]:
+    """Qualified package defs whose name no non-test source references."""
+    root = _root()
+    defs: dict[str, list[str]] = {}
+    refs: set[str] = set()
+    for path in _sources(root):
+        if "__pycache__" in path.parts:
+            continue
+        tree = ast.parse(path.read_text())
+        if (root / PKG) in path.parents:
+            mod = ".".join(path.relative_to(root / PKG).with_suffix("").parts)
+            for node in tree.body:
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    defs.setdefault(node.name, []).append(mod)
+        docs = _docstrings(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                refs.add(node.attr)
+            elif isinstance(node, ast.alias):
+                refs.add(node.name.rsplit(".", 1)[-1])
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docs
+            ):
+                refs.add(node.value)
+    return {
+        f"{mod}.{name}"
+        for name, mods in defs.items()
+        if name not in refs
+        for mod in mods
+    }
+
+
+def test_only_listed_defs_lack_a_non_test_caller():
+    found = unreached()
+    new = sorted(found - UNREACHED.keys())
+    gone = sorted(UNREACHED.keys() - found)
+    assert not new, f"defs only tests reach (add a caller or delete): {new}"
+    assert not gone, f"listed defs that now have a caller (unlist): {gone}"

@@ -12,9 +12,12 @@ per-stage overhead and the crossover sits near sf1; this measures it.
 same data: distinct keys per copy (join fan-outs, group cardinalities
 and duplicate-group sizes grow realistically), events shifted 30 days
 per copy, and a per-copy document suffix token so the dedup workload
-does not degenerate into 10-member exact-duplicate groups.  ``duck`` runs
-the same headline queries' DuckDB oracle SQL against identical parquet,
-best-of-three per query — the apples-to-apples single-process anchor.
+does not degenerate into 10-member exact-duplicate groups.  Documents
+and events go through ``io_tables.ensure_replica`` as in bench.py, so
+they carry the same recipe stamps and a stamped table is reused.
+``duck`` runs the same headline queries' DuckDB oracle SQL against
+identical parquet, best-of-three per query — the apples-to-apples
+single-process anchor.
 """
 
 from __future__ import annotations
@@ -52,6 +55,7 @@ DUCK_QUERIES = [
 def gen() -> None:
     from prometheus_anomaly_detection_lstm_spark.io_tables import (
         TABLES,
+        ensure_replica,
         write_replica,
     )
     from prometheus_anomaly_detection_lstm_spark.session import get_spark
@@ -59,7 +63,10 @@ def gen() -> None:
     spark = get_spark("sf1-gen")
     spark.sparkContext.setLogLevel("ERROR")
     for name in TABLES:
-        write_replica(spark, SRC, OUT_DIR, name, MULT)
+        if name in ("documents", "events"):  # recipe-stamped, as bench.py
+            ensure_replica(spark, SRC, OUT_DIR, name, MULT)
+        else:
+            write_replica(spark, SRC, OUT_DIR, name, MULT)
         print(f"{name}: written", flush=True)
 
 
