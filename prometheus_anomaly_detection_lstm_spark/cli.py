@@ -17,11 +17,15 @@ windows frame is cut with ``functions.checkpoint.cut_lineage`` and every
 consumer reads that one frame.  ``train`` collects the train and
 validation tensors and takes the p95 threshold in NumPy, from the
 trained model's per-window MSE over the validation tensor it already
-holds.  ``filter`` scores the cut frame once and writes both splits from
-one cut (window, is_anomaly) frame.  ``preprocess`` fits its scaler once
-(preprocess_data.py:85-100): one ``fit_params`` aggregation over the cut
-filled frame, collected; ``scaler_params.parquet`` and the scaled frame
-(a literal projection of the cut frame) both come from those rows.
+holds.  ``filter`` reads the weights ``train`` wrote with
+``ml.autoencoder.load_model`` (the stub when there are none), scores
+the cut frame once and writes both splits from one cut (window,
+is_anomaly) frame.  Both stages take the errors from
+``ml.autoencoder.reconstruction_errors``, as the detectors do.
+``preprocess`` fits its scaler once (preprocess_data.py:85-100): one
+``fit_params`` aggregation over the cut filled frame, collected;
+``scaler_params.parquet`` and the scaled frame (a literal projection of
+the cut frame) both come from those rows.
 Every stage releases the blocks of the frames it cuts when it returns,
 so a long-lived session does not pile them up.
 """
@@ -125,6 +129,7 @@ def cmd_preprocess(cfg: EngineConfig, input_path: str | None = None) -> None:
 
 
 def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
+    from .ml.autoencoder import reconstruction_errors
     from .ml.train import (
         collect_windows,
         save_artifacts,
@@ -165,15 +170,14 @@ def cmd_train(cfg: EngineConfig, input_path: str | None = None) -> None:
     # the validation tensor (every window when validation is empty);
     # np.percentile interpolates linearly, as Spark's exact percentile
     held = x_val if x_val.size else x_train
-    err = held - model.predict(held)
-    threshold = float(np.percentile((err * err).mean(axis=(1, 2)), 95))
+    mse, _ = reconstruction_errors(model, held)
+    threshold = float(np.percentile(mse, 95))
     save_artifacts(cfg.artifacts_dir, model, history, threshold)
 
 
 def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
-    from .ml.autoencoder import StubAutoencoder
+    from .ml.autoencoder import AffineAutoencoder, load_model
     from .ml.infer import score_windows
-    from .ml.train import LinearAutoencoder
 
     spark = get_spark("filter")
     path = input_path or _art(cfg, cfg.processed_output_filename)
@@ -190,22 +194,15 @@ def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
             threshold = json.load(fh).get("threshold", threshold)
     # score with the trained weights when the train stage ran (the
     # threshold from training_meta.json describes THAT model); fall
-    # back to the deterministic stub otherwise.  The npz key layout
-    # identifies the model family (a/b = linear, enc*/dec* = LSTM).
+    # back to the deterministic stub otherwise.  load_model reads the
+    # file here on the driver, so a foreign or truncated file fails
+    # before any task runs.
     weights_path = os.path.join(cfg.artifacts_dir, "autoencoder_weights.npz")
     if os.path.exists(weights_path):
-        with np.load(weights_path) as npz:
-            keys = set(npz.files)
-            arrays = {k: npz[k] for k in npz.files}
-        if keys == {"a", "b"}:
-            a_fit, b_fit = arrays["a"], arrays["b"]
-            factory = lambda: LinearAutoencoder(a=a_fit, b=b_fit)  # noqa: E731
-        else:
-            from .ml.lstm_np import LSTMAutoencoder
-
-            factory = lambda: LSTMAutoencoder(arrays)  # noqa: E731
+        model = load_model(weights_path)
+        factory = lambda: model  # noqa: E731
     else:
-        factory = lambda: StubAutoencoder()  # noqa: E731
+        factory = AffineAutoencoder
     windows = cut_lineage(sequence_windows_scalable(df, features, cfg.sequence_length))
     cuts = [windows]
     try:

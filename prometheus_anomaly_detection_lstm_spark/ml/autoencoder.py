@@ -1,4 +1,5 @@
-"""Autoencoder models: deterministic stub + optional Keras LSTM.
+"""The autoencoder contract: one affine model, one reconstruction-error
+rule and one weights file, behind every scorer.
 
 The reference trains a Keras LSTM autoencoder
 (train_autoencoder.py:76-91: LSTM 64→32→RepeatVector→32→64→
@@ -6,8 +7,18 @@ TimeDistributed(Dense sigmoid)).  TensorFlow is not available in this
 environment and Keras training is not bit-reproducible anyway (SURVEY
 H5), so:
 
-* :class:`StubAutoencoder` — the correctness-test model (FIXTURES F6):
-  X̂ = clip01(A·x + b) per feature, exactly recomputable in SQL/DuckDB.
+* :class:`AffineAutoencoder` — X̂ = clip01(a·x + b) per feature.  With
+  its default a = 0.9, b = 0.02 it is the correctness-test stub
+  (FIXTURES F6), exactly recomputable in SQL/DuckDB; with per-feature
+  arrays it is the model ``ml/train.train_linear_autoencoder`` fits.
+* :func:`reconstruction_errors` — the reference's scoring rule
+  (train_autoencoder.py:277-278, filter_anomalous_data.py:134-139,
+  realtime_detector.py:301-311) for any model exposing
+  ``predict((n, L, F)) -> (n, L, F)``: this one, or the NumPy LSTM
+  (ml/lstm_np.py).
+* :func:`save_model` / :func:`load_model` — the ``.npz`` weights file:
+  keys ``a``/``b`` hold an affine model, the 14 ``enc*``/``dec*``/
+  ``dense_*`` arrays an LSTM.
 * :func:`build_lstm_autoencoder` — the faithful Keras architecture,
   gated behind an import-try; raises a clear error when TF is absent.
 
@@ -23,29 +34,63 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .lstm_np import LSTMAutoencoder
+
 
 @dataclass(frozen=True)
-class StubAutoencoder:
-    """Deterministic per-feature affine reconstruction with [0,1] clip."""
+class AffineAutoencoder:
+    """Per-feature affine reconstruction with [0,1] clip; ``a`` and
+    ``b`` are scalars or (F,) arrays."""
 
-    a: float = 0.9
-    b: float = 0.02
+    a: float | np.ndarray = 0.9
+    b: float | np.ndarray = 0.02
 
     def predict(self, x: np.ndarray) -> np.ndarray:
         """x: (num_windows, L, F) -> reconstruction of the same shape."""
         return np.clip(x * self.a + self.b, 0.0, 1.0)
 
-    def window_mse(self, x: np.ndarray) -> np.ndarray:
-        """Per-window scalar MSE over (time, feature) axes
-        (train_autoencoder.py:277-278)."""
-        err = x - self.predict(x)
-        return (err * err).mean(axis=(1, 2))
 
-    def per_feature_mse(self, x: np.ndarray) -> np.ndarray:
-        """Per-window per-feature MSE over the time axis
-        (realtime_detector.py:309-311)."""
-        err = x - self.predict(x)
-        return (err * err).mean(axis=1)
+#: the deterministic stub: the stateful detector's model and the
+#: default parameters of the Catalyst scorers (operators/score.py)
+STUB = AffineAutoencoder()
+
+
+def reconstruction_errors(model, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """x: (n, L, F) -> per-window MSE over (time, feature), shape (n,)
+    (A6), and per-feature MSE over time, shape (n, F) (A8)."""
+    err = x - model.predict(x)
+    sq = err * err
+    return sq.mean(axis=(1, 2)), sq.mean(axis=1)
+
+
+_AFFINE_KEYS = frozenset({"a", "b"})
+_LSTM_KEYS = frozenset(
+    [f"{layer}_{p}" for layer in ("enc1", "enc2", "dec1", "dec2") for p in "WUb"]
+    + ["dense_W", "dense_b"]
+)
+
+
+def save_model(path: str, model) -> None:
+    """Write an affine or LSTM model as an ``.npz`` weights file."""
+    if isinstance(model, AffineAutoencoder):
+        np.savez(path, a=model.a, b=model.b)
+    else:
+        np.savez(path, **model.w)
+
+
+def load_model(path: str):
+    """Read a weights file written by :func:`save_model`; the key set
+    names the model family.  Any other key set raises ``ValueError``."""
+    with np.load(path) as npz:
+        arrays = {k: npz[k] for k in npz.files}
+    if arrays.keys() == _AFFINE_KEYS:
+        return AffineAutoencoder(a=arrays["a"], b=arrays["b"])
+    if arrays.keys() == _LSTM_KEYS:
+        return LSTMAutoencoder(arrays)
+    raise ValueError(
+        f"{path}: weights file holds keys {sorted(arrays)}; expected "
+        f"{sorted(_AFFINE_KEYS)} (affine) or {sorted(_LSTM_KEYS)} (LSTM)"
+    )
 
 
 def build_lstm_autoencoder(
@@ -66,7 +111,7 @@ def build_lstm_autoencoder(
     except ImportError as exc:  # pragma: no cover - TF absent in CI image
         raise NotImplementedError(
             "TensorFlow/Keras is not installed in this environment; "
-            "use StubAutoencoder for deterministic scoring, or install "
+            "use AffineAutoencoder for deterministic scoring, or install "
             "tensorflow to train the LSTM architecture."
         ) from exc
 

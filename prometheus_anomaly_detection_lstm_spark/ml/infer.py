@@ -7,9 +7,11 @@ each executor rebuilds the scorer, and scoring runs inside an
 Arrow-batched ``mapInPandas`` — per-window MSE (A6) and per-feature MSE
 (A8) computed in NumPy per batch, no shuffle.
 
-Works with any scorer exposing ``predict(x: (n, L, F)) -> (n, L, F)``;
-the deterministic :class:`~..ml.autoencoder.StubAutoencoder` in tests,
-a Keras LSTM in production (weights -> broadcast, rebuild per executor).
+Works with any scorer exposing ``predict(x: (n, L, F)) -> (n, L, F)``:
+the deterministic stub :class:`~..ml.autoencoder.AffineAutoencoder` in
+tests, a trained model from ``ml/autoencoder.load_model`` in the CLI.
+Both errors come from ``ml/autoencoder.reconstruction_errors``, the
+rule the CLI's threshold and both detector cores also score with.
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from .autoencoder import reconstruction_errors
 
 SCORE_SCHEMA = (
     "window_id bigint, start_ts timestamp, mse double, feature_mse array<double>"
@@ -41,8 +45,8 @@ def score_windows(
     """(window_id, start_ts, features) -> per-window MSE + per-feature MSE.
 
     ``model_factory`` must be picklable and cheap; it is invoked once
-    per task (e.g. ``lambda: StubAutoencoder()`` or a closure that
-    rebuilds Keras from broadcast weights).  The package is shipped to
+    per task (e.g. ``AffineAutoencoder`` or a closure returning a model
+    ``load_model`` read on the driver).  The package is shipped to
     executors first — factories referencing package classes unpickle by
     module path on the Python worker.
 
@@ -65,16 +69,15 @@ def score_windows(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = batch_tensor(pdf["features"])
-            recon = model.predict(x)
-            err = x - recon
-            sq = err * err
+            mse, feature_mse = reconstruction_errors(
+                model, batch_tensor(pdf["features"])
+            )
             yield pd.DataFrame(
                 {
                     "window_id": pdf["window_id"],
                     "start_ts": pdf["start_ts"],
-                    "mse": sq.mean(axis=(1, 2)),
-                    "feature_mse": list(sq.mean(axis=1)),
+                    "mse": mse,
+                    "feature_mse": list(feature_mse),
                 }
             )
 

@@ -28,6 +28,9 @@ import sys
 
 import numpy as np
 
+from .autoencoder import save_model
+from .lstm_np import LSTMAutoencoder
+
 #: our npz key layout, in Keras ``model.get_weights()`` order for the
 #: reference architecture (train_autoencoder.py:76-91): four LSTM
 #: layers (kernel, recurrent_kernel, bias each) then the TimeDistributed
@@ -192,7 +195,7 @@ def _export_keras(model_path: str, out_path: str) -> None:  # pragma: no cover
     layout = keras_weights_to_layout(
         [np.asarray(a) for a in model.get_weights()]
     )
-    np.savez(out_path, **layout)
+    save_model(out_path, LSTMAutoencoder(layout))
     print(f"wrote {out_path} ({len(layout)} arrays)")
 
 

@@ -32,8 +32,6 @@ with layers ``enc1``, ``enc2``, ``dec1``, ``dec2``.
 
 from __future__ import annotations
 
-import io
-
 import numpy as np
 
 #: reference defaults: config lstm_units_encoder1/encoder2_latent
@@ -114,8 +112,9 @@ class LSTMAutoencoder:
     """Weights-only LSTM autoencoder: ``predict(x: (N, L, F)) -> (N, L, F)``.
 
     Drop-in scorer for ``ml/infer.score_windows`` (same protocol as
-    StubAutoencoder) — the mapInPandas hot path stays Arrow-batched
-    NumPy, no TF dependency.
+    ``ml/autoencoder.AffineAutoencoder``) — the mapInPandas hot path
+    stays Arrow-batched NumPy, no TF dependency.  ``ml/autoencoder``'s
+    ``save_model``/``load_model`` write and read its ``.npz`` file.
     """
 
     def __init__(self, weights: dict[str, np.ndarray]):
@@ -130,24 +129,3 @@ class LSTMAutoencoder:
         d1 = _lstm_layer(rep, w["dec1_W"], w["dec1_U"], w["dec1_b"])
         d2 = _lstm_layer(d1, w["dec2_W"], w["dec2_U"], w["dec2_b"])
         return _sigmoid(d2 @ w["dense_W"] + w["dense_b"])
-
-    # ---------------------------------------------------- npz artifacts
-
-    def to_npz_bytes(self) -> bytes:
-        """Serialize for the model sink (S10 artifact discipline)."""
-        buf = io.BytesIO()
-        np.savez(buf, **self.w)
-        return buf.getvalue()
-
-    @classmethod
-    def from_npz_bytes(cls, data: bytes) -> "LSTMAutoencoder":
-        with np.load(io.BytesIO(data)) as npz:
-            return cls({k: npz[k] for k in npz.files})
-
-    def save(self, path: str) -> None:
-        np.savez(path, **self.w)
-
-    @classmethod
-    def load(cls, path: str) -> "LSTMAutoencoder":
-        with np.load(path) as npz:
-            return cls({k: npz[k] for k in npz.files})

@@ -15,8 +15,11 @@ to the driver is the right call — MLlib has no LSTM, and shipping a
   trainers run (:func:`train_linear_autoencoder` here and
   ``ml/lstm_train.train_lstm_autoencoder``): epochs, early stop,
   best-restore.
-* :func:`train_linear_autoencoder` — a deterministic NumPy autoencoder
-  (full-batch gradient descent, fixed init) standing in for the Keras
+* :func:`train_linear_autoencoder` — fits the per-feature
+  ``ml/autoencoder.AffineAutoencoder`` by full-batch gradient descent
+  from a fixed init (per-feature least squares of x against itself
+  through a bottleneck is degenerate in closed form), reproducible to
+  the last bit on any platform; a deterministic stand-in for the Keras
   LSTM.
 * :func:`fit_threshold` — A11: percentile of training-set errors, the
   practice config.yaml:113-118 documents but never automates.  The CLI
@@ -28,12 +31,13 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .autoencoder import AffineAutoencoder, save_model
 
 
 def train_val_split(
@@ -62,31 +66,6 @@ def collect_windows(windows: DataFrame) -> np.ndarray:
         return np.empty((0, 0, 0))
     rows.sort(key=lambda r: r.window_id)
     return np.array([r.features for r in rows], dtype="float64")
-
-
-@dataclass
-class LinearAutoencoder:
-    """Deterministic per-feature affine model x̂ = a·x + b (clipped).
-
-    The trainable generalization of StubAutoencoder: closed-form
-    per-feature least squares of x against itself through a bottleneck
-    is degenerate, so we fit a/b by full-batch gradient descent with
-    fixed init — reproducible to the last bit on any platform.
-    """
-
-    a: np.ndarray  # (F,)
-    b: np.ndarray  # (F,)
-
-    def predict(self, x: np.ndarray) -> np.ndarray:
-        return np.clip(x * self.a + self.b, 0.0, 1.0)
-
-    def save(self, path: str) -> None:
-        np.savez(path, a=self.a, b=self.b)
-
-    @classmethod
-    def load(cls, path: str) -> "LinearAutoencoder":
-        z = np.load(path)
-        return cls(a=z["a"], b=z["b"])
 
 
 def fit_early_stopping(step, params, epochs: int, patience: int):
@@ -121,7 +100,7 @@ def train_linear_autoencoder(
     lr: float = 0.1,
     patience: int = 10,
     val: np.ndarray | None = None,
-) -> tuple[LinearAutoencoder, list[float]]:
+) -> tuple[AffineAutoencoder, list[float]]:
     """Full-batch GD on mse(x, a·x+b) under :func:`fit_early_stopping`;
     the recorded loss is the post-update validation loss."""
     n_features = x.shape[-1]
@@ -137,7 +116,7 @@ def train_linear_autoencoder(
 
     init = (np.full(n_features, 0.5), np.zeros(n_features))
     (a, b), history = fit_early_stopping(step, init, epochs, patience)
-    return LinearAutoencoder(a=a, b=b), history
+    return AffineAutoencoder(a=a, b=b), history
 
 
 def fit_threshold(mse_df: DataFrame, percentile: float = 0.95) -> float:
@@ -149,17 +128,18 @@ def fit_threshold(mse_df: DataFrame, percentile: float = 0.95) -> float:
 
 def save_artifacts(
     out_dir: str,
-    model: LinearAutoencoder,
+    model,
     history: list[float],
     threshold: float,
 ) -> None:
-    """S10/S14 equivalents: weights npz + meta json (history, threshold).
+    """S10/S14 equivalents: weights npz (``ml/autoencoder.save_model``)
+    + meta json (history, threshold).
 
     The scaler artifact (S9) is the preprocess stage's
     ``scaler_params.parquet``; training writes no second copy.
     """
     os.makedirs(out_dir, exist_ok=True)
-    model.save(os.path.join(out_dir, "autoencoder_weights.npz"))
+    save_model(os.path.join(out_dir, "autoencoder_weights.npz"), model)
     with open(os.path.join(out_dir, "training_meta.json"), "w") as fh:
         json.dump({"history": history, "threshold": threshold}, fh)
 

@@ -29,14 +29,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import clip01, single_partition_key
+from ..ml.autoencoder import STUB
 from .windows import sliding_mean_scalable
 
 
 def row_error(
     df: DataFrame,
     feature_cols: list[str],
-    a: float = 0.9,
-    b: float = 0.02,
+    a: float = STUB.a,
+    b: float = STUB.b,
     err_col: str = "row_err",
 ) -> DataFrame:
     """Per-row mean over features of (x - clip01(a·x + b))² — stub model X̂.
@@ -63,8 +64,8 @@ def window_mse(
     feature_cols: list[str],
     length: int,
     ts_col: str = "ts",
-    a: float = 0.9,
-    b: float = 0.02,
+    a: float = STUB.a,
+    b: float = STUB.b,
     day_col: str | None = None,
     day_counts: DataFrame | None = None,
 ) -> DataFrame:
@@ -87,8 +88,8 @@ def window_mse(
 def per_feature_mse(
     df: DataFrame,
     feature_cols: list[str],
-    a: float = 0.9,
-    b: float = 0.02,
+    a: float = STUB.a,
+    b: float = STUB.b,
 ) -> DataFrame:
     """A8: global per-feature mean squared reconstruction error.
 

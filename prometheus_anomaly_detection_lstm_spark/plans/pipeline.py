@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hour_of_day, weekday_mon0
 from ..io_tables import load_table
+from ..ml.autoencoder import STUB
 from ..operators import fill, scale, score
 from ..operators.align import metrics_wide, metrics_wide_day_partitioned
 
@@ -34,7 +35,8 @@ SEQUENCE_LENGTH = 20
 #: near the p95 of stub-model MSE on the testdata (the practice config.yaml:113-118
 #: documents); the reference ships a hand-tuned 0.0025 (config.yaml:119).
 ANOMALY_THRESHOLD = 0.0013
-STUB_A, STUB_B = 0.9, 0.02
+#: the stub model's affine parameters (ml/autoencoder.py)
+STUB_A, STUB_B = STUB.a, STUB.b
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

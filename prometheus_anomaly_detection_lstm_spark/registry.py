@@ -241,13 +241,13 @@ def q_mse_via_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring over materialized windows) — same oracle as the Catalyst
     scoring path, proving the two physical strategies agree."""
     _utc(spark)
-    from .ml.autoencoder import StubAutoencoder
+    from .ml.autoencoder import AffineAutoencoder
     from .ml.infer import score_windows
     from .operators.windows import sequence_windows_scalable
 
     df = P.preprocessed(spark, sf_dir)
     windows = sequence_windows_scalable(df, P.FEATURES, P.SEQUENCE_LENGTH)
-    scored = score_windows(windows, StubAutoencoder)
+    scored = score_windows(windows, AffineAutoencoder)
     return scored.select(
         "window_id", "start_ts", F.round("mse", 8).alias("mse")
     )

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ml.autoencoder import StubAutoencoder
+from ..ml.autoencoder import AffineAutoencoder, reconstruction_errors
 from ..operators.scale import affine
 from .exporter import DetectorMetrics
 
@@ -46,14 +46,13 @@ class DetectorConfig:
     #: alarms at the risk-q EVT level; alarmed scores are not fed back
     #: into calibration (Siffer et al., KDD'17).
     threshold: float | None = 0.0013
-    interval_seconds: int = 30
     scaler_params: pd.DataFrame | None = None  # scaler_params.parquet
     #: the scaler preprocess fitted (``EngineConfig.scaler_type``), so a
     #: live window is scaled as the model's training data was
     scaler_type: str = "MinMaxScaler"
-    #: any scorer exposing predict((1, L, F)) -> (1, L, F): the stub,
-    #: a trained LinearAutoencoder, or the NumPy LSTM (ml/lstm_np.py)
-    model: object = field(default_factory=StubAutoencoder)
+    #: any scorer exposing predict((1, L, F)) -> (1, L, F): the stub
+    #: AffineAutoencoder, or a trained model from ml.autoencoder.load_model
+    model: object = field(default_factory=AffineAutoencoder)
     #: SPOT calibrator used when ``threshold`` is None.
     spot: "object" = None
     #: drift-aware auto-threshold: with ``threshold=None``, pick the
@@ -120,10 +119,8 @@ def run_detection_cycle(
     tail = aligned.tail(cfg.sequence_length)  # U5 (:210)
     seq = _prep_window(tail, cfg)
     try:
-        recon = cfg.model.predict(seq)
-        err = seq - recon
-        mse = float((err * err).mean())
-        feat_mse = (err * err).mean(axis=(0, 1))
+        mse, feat_mse = reconstruction_errors(cfg.model, seq)
+        mse, feat_mse = float(mse[0]), feat_mse[0]
     except Exception:
         sinks.latest_mse.set(-1.0)  # sentinel (M6, :339-348)
         sinks.is_anomaly.set(0.0)

@@ -67,6 +67,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from prometheus_anomaly_detection_lstm_spark import shipping
+from prometheus_anomaly_detection_lstm_spark.ml.autoencoder import (
+    STUB,
+    reconstruction_errors,
+)
 
 OUTPUT_SCHEMA = (
     "detector_id string, window_end timestamp, "
@@ -79,8 +83,6 @@ def make_detector_fn(
     metrics: list[str],
     sequence_length: int = 20,
     threshold: float = 0.0013,
-    a: float = 0.9,
-    b: float = 0.02,
 ):
     """Build the applyInPandasWithState function.  The closure carries
     plain values and calls :func:`_update` by module reference, so a
@@ -94,7 +96,7 @@ def make_detector_fn(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        return _update(key, pdfs, state, metrics, sequence_length, threshold, a, b)
+        return _update(key, pdfs, state, metrics, sequence_length, threshold)
 
     return detect
 
@@ -106,11 +108,11 @@ def _update(
     metrics: list[str],
     L: int,
     threshold: float,
-    a: float,
-    b: float,
 ) -> Iterator[pd.DataFrame]:
     """One key's batch: merge the new samples into the ring, keep its
-    last 2L distinct timestamps and score the last L aligned steps.
+    last 2L distinct timestamps and score the last L aligned steps with
+    the stub model (``ml.autoencoder.STUB``) through
+    ``ml.autoencoder.reconstruction_errors``.
 
     A (ts, metric) cell keeps its first sample: a state sample beats a new
     one, and within a batch the earlier row wins.  A present-but-NaN
@@ -164,8 +166,7 @@ def _update(
     # metric-major, the memory order of a pandas pivot of the window, so
     # the MSE sums in the same order as a pandas scorer does
     tail = np.asfortranarray(val[aligned[-L:]])
-    recon = np.clip(tail * a + b, 0.0, 1.0)
-    mse = float(((tail - recon) ** 2).mean())
+    mse = float(reconstruction_errors(STUB, tail[np.newaxis])[0][0])
     end = pd.Timestamp(int(ts[aligned[-1]]), unit="us")
     yield _row(key, end, mse, int(mse > threshold), len(aligned))
 

@@ -4,6 +4,10 @@ from __future__ import annotations
 
 import numpy as np
 
+from prometheus_anomaly_detection_lstm_spark.ml.autoencoder import (
+    load_model,
+    save_model,
+)
 from prometheus_anomaly_detection_lstm_spark.ml.lstm_np import (
     LSTMAutoencoder,
     _lstm_layer,
@@ -58,9 +62,16 @@ def test_predict_shape_range_determinism():
     np.testing.assert_array_equal(y1, y2)  # frozen weights, bit-identical
 
 
-def test_npz_roundtrip():
+def test_npz_roundtrip(tmp_path):
+    """The frozen LSTM comes back from its 14-array weights file as an
+    LSTM that predicts bit for bit the same."""
     model = LSTMAutoencoder(init_weights(5))
-    back = LSTMAutoencoder.from_npz_bytes(model.to_npz_bytes())
+    p = str(tmp_path / "w.npz")
+    save_model(p, model)
+    with np.load(p) as npz:
+        assert sorted(npz.files) == sorted(model.w)
+    back = load_model(p)
+    assert isinstance(back, LSTMAutoencoder)
     x = np.random.default_rng(2).uniform(0, 1, (4, 6, 5))
     np.testing.assert_array_equal(model.predict(x), back.predict(x))
 

@@ -11,12 +11,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from prometheus_anomaly_detection_lstm_spark.ml.autoencoder import (
-    StubAutoencoder,
+    AffineAutoencoder,
     build_lstm_autoencoder,
+    load_model,
+    reconstruction_errors,
+    save_model,
 )
 from prometheus_anomaly_detection_lstm_spark.ml.infer import score_windows
+from prometheus_anomaly_detection_lstm_spark.ml.lstm_np import init_weights
 from prometheus_anomaly_detection_lstm_spark.ml.train import (
-    LinearAutoencoder,
     collect_windows,
     fit_early_stopping,
     fit_threshold,
@@ -60,13 +63,13 @@ def test_split_deterministic_same_seed(windows_df):
 
 def test_distributed_scoring_matches_driver(windows_df):
     """mapInPandas scoring == driver-side NumPy scoring (M5 parity)."""
-    model = StubAutoencoder()
     scored = {
-        r.window_id: r for r in score_windows(windows_df, StubAutoencoder).collect()
+        r.window_id: r for r in score_windows(windows_df, AffineAutoencoder).collect()
     }
     x = collect_windows(windows_df)
-    expected_mse = model.window_mse(x)
-    expected_feat = model.per_feature_mse(x)
+    err = x - np.clip(0.9 * x + 0.02, 0.0, 1.0)
+    expected_mse = (err**2).mean(axis=(1, 2))
+    expected_feat = (err**2).mean(axis=1)
     ids = sorted(scored)
     got_mse = np.array([scored[i].mse for i in ids])
     np.testing.assert_allclose(got_mse, expected_mse, rtol=1e-12)
@@ -88,16 +91,45 @@ def test_training_is_deterministic(windows_df):
 
 
 def test_model_roundtrip(tmp_path, windows_df):
+    """A trained affine model comes back from its weights file (keys
+    ``a``, ``b``) as an affine model with equal errors, bit for bit."""
     x = collect_windows(windows_df)
     model, _ = train_linear_autoencoder(x, epochs=5)
     p = str(tmp_path / "w.npz")
-    model.save(p)
-    loaded = LinearAutoencoder.load(p)
-    np.testing.assert_array_equal(model.a, loaded.a)
+    save_model(p, model)
+    with np.load(p) as npz:
+        assert sorted(npz.files) == ["a", "b"]
+    loaded = load_model(p)
+    assert isinstance(loaded, AffineAutoencoder)
+    for got, want in zip(
+        reconstruction_errors(loaded, x), reconstruction_errors(model, x)
+    ):
+        np.testing.assert_array_equal(got, want)
+
+
+@pytest.mark.parametrize(
+    "arrays",
+    [
+        {"a": np.ones(2)},  # an affine file missing ``b``
+        {k: v for k, v in init_weights(3).items() if k != "enc1_W"},
+        {"weights": np.ones(3)},  # a foreign file
+    ],
+    ids=["truncated_affine", "truncated_lstm", "foreign"],
+)
+def test_load_model_rejects_unknown_layouts(tmp_path, arrays):
+    """Any other key set fails on the driver, naming what it found and
+    both layouts it accepts."""
+    p = str(tmp_path / "w.npz")
+    np.savez(p, **arrays)
+    with pytest.raises(ValueError, match=r"holds keys \[") as info:
+        load_model(p)
+    msg = str(info.value)
+    assert str(sorted(arrays)) in msg
+    assert "['a', 'b'] (affine)" in msg and "'enc1_W'" in msg and "(LSTM)" in msg
 
 
 def test_fit_threshold_percentile(windows_df):
-    scored = score_windows(windows_df, StubAutoencoder)
+    scored = score_windows(windows_df, AffineAutoencoder)
     thr = fit_threshold(scored.select("mse"), 0.95)
     n = scored.count()
     above = scored.filter(F.col("mse") > thr).count()

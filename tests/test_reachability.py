@@ -7,6 +7,11 @@ string constant that is not a docstring.  The defs nothing reaches must
 equal :data:`UNREACHED`, each kept for a stated reason.  A new def with
 no non-test caller fails this test: give it a caller or delete it.  A
 listed def that gains a caller leaves the list.
+
+References are matched by bare name, so a test-only def hides behind a
+reached def of the same name in another module.  The second ratchet
+closes that gap: a public top-level name is defined in one package
+module only, unless :data:`SHARED_NAMES` lists it with a reason.
 """
 
 from __future__ import annotations
@@ -59,6 +64,15 @@ UNREACHED = {
 }
 
 
+#: public name -> why more than one package module defines it.
+SHARED_NAMES = {
+    "quality_checks": (
+        "two unrelated reached defs: plans.wave5's table constraint "
+        "report and operators.text's document rule set"
+    ),
+}
+
+
 def _root() -> pathlib.Path:
     root = pathlib.Path.cwd().resolve()
     if not (root / PKG).exists():  # running from another cwd
@@ -87,8 +101,9 @@ def _docstrings(tree: ast.AST) -> set[int]:
     return out
 
 
-def unreached() -> set[str]:
-    """Qualified package defs whose name no non-test source references."""
+def _scan() -> tuple[dict[str, list[str]], set[str]]:
+    """(top-level def name -> defining package modules, every name a
+    non-test source references)."""
     root = _root()
     defs: dict[str, list[str]] = {}
     refs: set[str] = set()
@@ -117,6 +132,12 @@ def unreached() -> set[str]:
                 and id(node) not in docs
             ):
                 refs.add(node.value)
+    return defs, refs
+
+
+def unreached() -> set[str]:
+    """Qualified package defs whose name no non-test source references."""
+    defs, refs = _scan()
     return {
         f"{mod}.{name}"
         for name, mods in defs.items()
@@ -131,3 +152,16 @@ def test_only_listed_defs_lack_a_non_test_caller():
     gone = sorted(UNREACHED.keys() - found)
     assert not new, f"defs only tests reach (add a caller or delete): {new}"
     assert not gone, f"listed defs that now have a caller (unlist): {gone}"
+
+
+def test_public_names_are_defined_once():
+    defs, _ = _scan()
+    shared = {
+        name: sorted(mods)
+        for name, mods in defs.items()
+        if len(mods) > 1 and not name.startswith("_")
+    }
+    new = {n: m for n, m in shared.items() if n not in SHARED_NAMES}
+    gone = sorted(SHARED_NAMES.keys() - shared.keys())
+    assert not new, f"public names defined in more than one module: {new}"
+    assert not gone, f"listed names now defined once (unlist): {gone}"

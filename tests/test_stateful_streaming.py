@@ -120,7 +120,7 @@ class FakeState:
         self.value = tuple(value)
 
 
-def oracle_update(key, pdfs, state, metrics, L, threshold, a, b):
+def oracle_update(key, pdfs, state, metrics, L, threshold, a=0.9, b=0.02):
     """The row-list detector's rule: state rows then new rows, keep-first
     per (ts, metric), trim to the last 2L timestamps, pivot, dropna."""
     metrics = sorted(metrics)
@@ -230,7 +230,7 @@ def _cases(L, metrics, batches):
 
 def _one_row(update, key, pdf, state, metrics, L):
     """Run one state-function call; return its single output row."""
-    (frame,) = list(update(key, iter([pdf]), state, metrics, L, 0.0013, 0.9, 0.02))
+    (frame,) = list(update(key, iter([pdf]), state, metrics, L, 0.0013))
     return tuple(frame.iloc[0])
 
 
