@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 from .config import EngineConfig, load_config, validate_periods
 from .operators import fill as fill_ops
 from .operators import scale as scale_ops
-from .operators import score as score_ops
 from .operators.align import metrics_wide
 from .operators.windows import sequence_windows_scalable
 from .functions import hour_of_day, weekday_mon0

@@ -74,10 +74,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 #: fact table -> key columns :func:`replicate` offsets per copy; every
-#: other table is a dimension and is not replicated.
+#: other table is a dimension and is not replicated.  Foreign keys into
+#: a dimension (``orders.o_custkey``) are not offset, so every copy
+#: still joins the one dimension table.
 REPLICA_KEYS: dict[str, list[str]] = {
     "lineitem": ["l_orderkey"],
-    "orders": ["o_orderkey", "o_custkey"],
+    "orders": ["o_orderkey"],
     "events": ["event_id"],
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
@@ -158,12 +160,15 @@ def write_replica(
 def ensure_replica(
     spark: SparkSession, src_dir: str, dst_dir: str, name: str, copies: int
 ) -> dict:
-    """:func:`write_replica` for ``documents`` or ``events``, skipped
-    when ``dst_dir`` already holds the table under the same recipe.
+    """:func:`write_replica` for table ``name``, skipped when
+    ``dst_dir`` already holds the table under the same recipe.
 
-    The recipe stamp names recipe, copies, key offset (for events also
-    the day shift and the measured base span), base path and row
-    counts; it is written beside the table as ``<name>.recipe.json``.
+    The recipe stamp names recipe, copies, the offset keys and their
+    offset (for events also the day shift and the measured base span),
+    base path and row counts; it is written beside the table as
+    ``<name>.recipe.json``.  A dimension table's stamp names only its
+    base and rows.
+
     An existing ``<name>.parquet`` is reused only if its sidecar equals
     the stamp and its row count agrees: a stale or differently built
     parquet would otherwise make a measurement on ``dst_dir`` read
@@ -191,8 +196,22 @@ def ensure_replica(
             "base_span_days": span_days(base),
             "rows": base_rows * copies,
         }
+    elif name in REPLICA_KEYS:
+        recipe = {
+            "recipe": "copyoffset",
+            "copies": copies,
+            "offset_keys": REPLICA_KEYS[name],
+            "key_offset": REPLICA_KEY_OFFSET,
+            "base": f"{src_dir}/{name}.parquet",
+            "base_rows": base_rows,
+            "rows": base_rows * copies,
+        }
     else:
-        raise ValueError(f"no replica recipe for table {name!r}")
+        recipe = {
+            "recipe": "dimension",
+            "base": f"{src_dir}/{name}.parquet",
+            "rows": base_rows,
+        }
     path = f"{dst_dir}/{name}.parquet"
     stamp_path = f"{dst_dir}/{name}.recipe.json"
     reusable = False
@@ -320,6 +339,7 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int = 16,
     sort_col: str | None = None,
+    path: str | None = None,
 ) -> None:
     """Write a hash-bucketed managed table (``bucketBy`` + optional
     ``sortBy``) — the pre-shuffled lake layout for co-located joins.
@@ -330,13 +350,25 @@ def write_bucketed(
     optionally pre-sorted) on the key, and every later equi-join on it
     plans as a zero-exchange SortMergeJoin — see
     ``tests/test_bucketed_join.py`` for the plan-level guarantee.
-    Requires a SparkSession with a writable ``spark.sql.warehouse.dir``.
+    Rows are repartitioned on the bucket key first, so every writer
+    task holds exactly one bucket and writes one file per bucket.
+    Without it each of the N input tasks writes a sliver of every
+    bucket (N x n_buckets small files) and the read side pays the
+    fragmentation (measured at sf1: unaligned-8 read 0.60 s vs
+    aligned-8 0.35 s).  ``path`` makes an external table there;
+    without it the table is managed and needs a writable
+    ``spark.sql.warehouse.dir``.
     """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, bucket_col
+    w = (
+        df.repartition(n_buckets, F.col(bucket_col))
+        .write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(n_buckets, bucket_col)
     )
     if sort_col is not None:
         w = w.sortBy(sort_col)
+    if path is not None:
+        w = w.option("path", path)
     w.saveAsTable(table)
 
 

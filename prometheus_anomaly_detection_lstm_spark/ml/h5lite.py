@@ -25,8 +25,6 @@ never touches the Spark executors.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 SIGNATURE = b"\x89HDF\r\n\x1a\n"

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import single_partition_key
-
 
 def nan_counts(df: DataFrame, cols: list[str]) -> DataFrame:
     """A1: per-column NULL count (preprocess_data.py:44, :72-74)."""

@@ -40,7 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io_tables import load_table
 from .similarity import _emb, with_norm
 
 K_CLUSTERS = 8

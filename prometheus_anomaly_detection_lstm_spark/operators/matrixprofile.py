@@ -29,8 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io_tables import load_table
-
 #: subsequence length (samples) — ~80 min at the testdata cadence.
 MP_M = 16
 #: discords reported per (series, chunk).

@@ -26,7 +26,6 @@ per-row error first and windows the scalar — see operators/score.py.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import pandas as pd
 

@@ -10,14 +10,12 @@ rounding.
 
 from __future__ import annotations
 
+from .ml.autoencoder import STUB
 from .plans.pipeline import (
     ANOMALY_THRESHOLD,
-    CALENDAR,
     FEATURES,
     METRICS,
     SEQUENCE_LENGTH,
-    STUB_A,
-    STUB_B,
 )
 
 L = SEQUENCE_LENGTH
@@ -84,7 +82,7 @@ SCALED_CTE = (
 
 
 def _row_err_term(c: str) -> str:
-    return f"power({c} - least(greatest({c} * {STUB_A} + {STUB_B}, 0.0), 1.0), 2)"
+    return f"power({c} - least(greatest({c} * {STUB.a} + {STUB.b}, 0.0), 1.0), 2)"
 
 
 ERR_CTE = (

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from ..functions import hour_of_day, weekday_mon0
 from ..io_tables import load_table
-from ..ml.autoencoder import STUB
 from ..operators import fill, scale, score
 from ..operators.align import metrics_wide, metrics_wide_day_partitioned
 
@@ -35,8 +34,6 @@ SEQUENCE_LENGTH = 20
 #: near the p95 of stub-model MSE on the testdata (the practice config.yaml:113-118
 #: documents); the reference ships a hand-tuned 0.0025 (config.yaml:119).
 ANOMALY_THRESHOLD = 0.0013
-#: the stub model's affine parameters (ml/autoencoder.py)
-STUB_A, STUB_B = STUB.a, STUB.b
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -124,7 +121,7 @@ def anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     df = preprocessed(spark, sf_dir, keep_day=True)
     out = score.window_mse(
-        df, FEATURES, SEQUENCE_LENGTH, a=STUB_A, b=STUB_B, day_col="__day",
+        df, FEATURES, SEQUENCE_LENGTH, day_col="__day",
         day_counts=pivot_day_counts(spark, sf_dir),
     )
     return out.select(
@@ -136,7 +133,7 @@ def anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagged windows: mse + is_anomaly bit (P7)."""
     df = preprocessed(spark, sf_dir, keep_day=True)
     out = score.window_mse(
-        df, FEATURES, SEQUENCE_LENGTH, a=STUB_A, b=STUB_B, day_col="__day",
+        df, FEATURES, SEQUENCE_LENGTH, day_col="__day",
         day_counts=pivot_day_counts(spark, sf_dir),
     )
     return out.select(

@@ -167,20 +167,9 @@ def q_tpch_q3_bucketed(
             (orders, ord_tbl, "o_orderkey"),
         ):
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            (
-                # repartition on the bucket key FIRST so every writer
-                # task holds exactly one bucket -> one file per bucket.
-                # Without it each of the N input tasks writes a sliver
-                # of every bucket (N x n_buckets small files) and the
-                # read side pays the fragmentation — measured at sf1:
-                # unaligned-8 read 0.60 s vs aligned-8 0.35 s.
-                df.repartition(n_buckets, F.col(key))
-                .write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(n_buckets, key)
-                .sortBy(key)
-                .option("path", os.path.join(root, tbl))
-                .saveAsTable(tbl)
+            write_bucketed(
+                df, tbl, key, n_buckets, sort_col=key,
+                path=os.path.join(root, tbl),
             )
     return tpch_q3_core(
         read_bucketed(spark, li_tbl),

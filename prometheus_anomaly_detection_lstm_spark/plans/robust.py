@@ -48,7 +48,6 @@ total-count denominator) broadcasts a one-row aggregate.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window

@@ -50,7 +50,7 @@ import json
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (

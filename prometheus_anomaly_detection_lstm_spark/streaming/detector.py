@@ -27,7 +27,6 @@ import logging
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..ml.autoencoder import AffineAutoencoder, reconstruction_errors
 from ..operators.scale import affine
@@ -108,8 +107,12 @@ def run_detection_cycle(
     # permanently disable detection
     if not set(cfg.metrics).issubset(present):
         return None
+    # dropna=False keeps a configured metric whose samples are all NaN
+    # (a Prometheus "NaN"): its column then empties the inner align
+    # below and the cycle ends on the short-window guard
     wide = window_long.pivot_table(
-        index="ts", columns="metric", values="value", aggfunc="first"
+        index="ts", columns="metric", values="value", aggfunc="first",
+        dropna=False,
     ).reset_index()
     # inner-align: rows where every metric has a sample (:195)
     aligned = wide.dropna(subset=cfg.metrics)

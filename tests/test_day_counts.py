@@ -31,11 +31,11 @@ def test_pivot_day_counts_matches_prep_distribution(spark):
 def test_day_counts_window_mse_equals_derived(spark):
     prep = P.preprocessed(spark, SF, keep_day=True)
     with_dc = score.window_mse(
-        prep, P.FEATURES, P.SEQUENCE_LENGTH, a=P.STUB_A, b=P.STUB_B,
+        prep, P.FEATURES, P.SEQUENCE_LENGTH,
         day_col="__day", day_counts=P.pivot_day_counts(spark, SF),
     )
     without = score.window_mse(
-        prep, P.FEATURES, P.SEQUENCE_LENGTH, a=P.STUB_A, b=P.STUB_B,
+        prep, P.FEATURES, P.SEQUENCE_LENGTH,
         day_col="__day",
     )
     assert _rows(with_dc) == _rows(without)

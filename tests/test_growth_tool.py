@@ -80,7 +80,7 @@ def test_replicate_refuses_wide_events_base(spark):
         replicate(wide, "events", 3)
 
 
-@pytest.mark.parametrize("name", ["documents", "events"])
+@pytest.mark.parametrize("name", ["documents", "events", "orders"])
 def test_ensure_replica_reuses_a_stamped_table(spark, tmp_path, name):
     """The first call writes the table and its recipe stamp; a second
     call with the same recipe rewrites nothing and reports no
@@ -109,6 +109,25 @@ def test_ensure_replica_reuses_a_stamped_table(spark, tmp_path, name):
     assert f"{name}_gen_sec" in third
     stamp = json.loads((tmp_path / f"{name}.recipe.json").read_text())
     assert stamp["copies"] == 3
+
+
+def test_replicated_orders_all_join_a_customer(spark, tmp_path):
+    """Copies offset order keys but not ``o_custkey``: the dimension is
+    written once, so every replicated order still finds its customer."""
+    got = {}
+    for name in ("orders", "customer"):
+        got.update(ensure_replica(spark, SF_SMALL, str(tmp_path), name, 3))
+    base_customers = load_table(spark, SF_SMALL, "customer").count()
+    assert got["customer_rows"] == base_customers
+    stamp = json.loads((tmp_path / "customer.recipe.json").read_text())
+    assert stamp["recipe"] == "dimension"
+    orders = spark.read.parquet(str(tmp_path / "orders.parquet"))
+    customer = spark.read.parquet(str(tmp_path / "customer.parquet"))
+    assert orders.count() == got["orders_rows"]
+    lost = orders.join(
+        customer, orders.o_custkey == customer.c_custkey, "left_anti"
+    )
+    assert lost.count() == 0
 
 
 def test_growth_tool_smoke(spark, monkeypatch, capsys):

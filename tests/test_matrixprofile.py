@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from prometheus_anomaly_detection_lstm_spark.io_tables import load_table
 from prometheus_anomaly_detection_lstm_spark.operators import matrixprofile as MP
 
 from .conftest import SF_ORACLE
@@ -96,7 +97,7 @@ def test_distributed_profile_is_partitioning_invariant(spark):
     base = MP.q_matrix_profile(spark, SF_ORACLE)
     a = base.toPandas().sort_values(["metric", "day", "disc_idx"], ignore_index=True)
     s = (
-        MP.load_table(spark, SF_ORACLE, "events")
+        load_table(spark, SF_ORACLE, "events")
         .select(
             F.col("event_type").alias("metric"),
             "ts",

@@ -12,6 +12,11 @@ References are matched by bare name, so a test-only def hides behind a
 reached def of the same name in another module.  The second ratchet
 closes that gap: a public top-level name is defined in one package
 module only, unless :data:`SHARED_NAMES` lists it with a reason.
+
+The third ratchet catches dead imports: every name a package module
+imports must occur in that module as a ``Name`` (string annotations
+are parsed), unless :data:`REEXPORTS` lists it as a deliberate
+re-export.
 """
 
 from __future__ import annotations
@@ -71,6 +76,10 @@ SHARED_NAMES = {
         "report and operators.text's document rule set"
     ),
 }
+
+
+#: "module.name" -> why the module imports a name it does not use.
+REEXPORTS: dict[str, str] = {}
 
 
 def _root() -> pathlib.Path:
@@ -165,3 +174,61 @@ def test_public_names_are_defined_once():
     gone = sorted(SHARED_NAMES.keys() - shared.keys())
     assert not new, f"public names defined in more than one module: {new}"
     assert not gone, f"listed names now defined once (unlist): {gone}"
+
+
+def _annotation_names(tree: ast.AST) -> set[str]:
+    """Names inside string annotations (``x: "Iterator"``)."""
+    notes = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            args = node.args
+            notes += [
+                a.annotation
+                for a in (*args.posonlyargs, *args.args, *args.kwonlyargs,
+                          args.vararg, args.kwarg)
+                if a is not None
+            ]
+            notes.append(node.returns)
+        elif isinstance(node, ast.AnnAssign):
+            notes.append(node.annotation)
+    out = set()
+    for note in notes:
+        if isinstance(note, ast.Constant) and isinstance(note.value, str):
+            out |= {
+                n.id
+                for n in ast.walk(ast.parse(note.value, mode="eval"))
+                if isinstance(n, ast.Name)
+            }
+    return out
+
+
+def unused_imports() -> set[str]:
+    """``module.name`` for every name a package module imports but
+    never references."""
+    root = _root()
+    found = set()
+    for path in (root / PKG).rglob("*.py"):
+        if "__pycache__" in path.parts:
+            continue
+        tree = ast.parse(path.read_text())
+        imported = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                imported |= {
+                    a.asname or a.name.split(".")[0] for a in node.names
+                }
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                imported |= {a.asname or a.name for a in node.names}
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        used |= _annotation_names(tree)
+        mod = ".".join(path.relative_to(root / PKG).with_suffix("").parts)
+        found |= {f"{mod}.{name}" for name in imported - used}
+    return found
+
+
+def test_package_modules_have_no_unused_imports():
+    found = unused_imports()
+    new = sorted(found - REEXPORTS.keys())
+    gone = sorted(REEXPORTS.keys() - found)
+    assert not new, f"unused imports (delete, or list as a re-export): {new}"
+    assert not gone, f"listed re-exports now used or gone (unlist): {gone}"

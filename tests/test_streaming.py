@@ -88,6 +88,17 @@ def test_short_window_skips_but_reports_points(cfg):
     assert sinks.window_points.value() == L - 2  # :211-215
 
 
+def test_all_nan_metric_ends_on_short_window(cfg):
+    """A configured metric whose window samples are all NaN aligns no
+    row: the cycle skips with window_points 0 instead of raising."""
+    sinks = DetectorMetrics()
+    out = run_detection_cycle(
+        _cycle(0, L + 2, nan_at=set(range(L + 2))), cfg, sinks
+    )
+    assert out is None
+    assert sinks.window_points.value() == 0
+
+
 def test_nan_window_fills_and_scores(cfg):
     sinks = DetectorMetrics()
     out = run_detection_cycle(

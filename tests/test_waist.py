@@ -42,8 +42,6 @@ def _score_from_waist(spark, path):
         waist,
         P.FEATURES,
         P.SEQUENCE_LENGTH,
-        a=P.STUB_A,
-        b=P.STUB_B,
         day_col="__day",
         day_counts=day_counts,
     ).select("window_id", "start_ts", F.round("mse", 8).alias("mse"))

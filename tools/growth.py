@@ -5,13 +5,14 @@ For each multiplier, every table of ``--sf`` is written through
 copy, events shifted 30 days per copy so series grow in time, a
 per-copy document suffix token, dimension tables as-is) into one
 temporary directory, and each named query from
-``registry.all_queries()`` is timed full-cost: one warm-up pass, then
-the best of 3, each pass constructing the plan and forcing it with a
-noop write (a re-execution of one built frame would time only the tail
-after a lazy checkpoint).  Near-linear wall growth = no hidden
-super-linear stage.  Prints one JSON line per multiplier; results are
-recorded in BASELINE.md.  The temporary directory is removed at the
-end.
+``registry.all_queries()`` is timed by ``bench.measure``: one warm-up
+pass, then the best of 3 noop writes.  A query whose construction
+registers a checkpoint is rebuilt and timed full-cost on every pass
+(a re-execution of one built frame would time only the tail after a
+lazy checkpoint); any other query is built once and re-executed.
+Near-linear wall growth = no hidden super-linear stage.  Prints one
+JSON line per multiplier; results are recorded in BASELINE.md.  The
+temporary directory is removed at the end.
 
     python tools/growth.py NAME... [--sf DIR] [--mults 1 4 10]
 
@@ -28,7 +29,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -58,25 +58,8 @@ def expand(names: list[str], queries: dict) -> list[str]:
     return out
 
 
-def best_of_3(spark, fn, sf_dir: str) -> float:
-    from prometheus_anomaly_detection_lstm_spark.functions.checkpoint import (
-        release_checkpoints,
-        track_checkpoints,
-    )
-
-    best = float("inf")
-    for i in range(4):  # pass 0 warms, untimed
-        with track_checkpoints() as frames:
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-        release_checkpoints(frames)
-        if i:
-            best = min(best, wall)
-    return round(best, 3)
-
-
 def main(argv: list[str] | None = None) -> None:
+    import bench
     from prometheus_anomaly_detection_lstm_spark.io_tables import (
         REPLICA_KEYS,
         TABLES,
@@ -104,7 +87,12 @@ def main(argv: list[str] | None = None) -> None:
                 write_replica(spark, args.sf, sf_dir, t, mult)
                 if t in REPLICA_KEYS:
                     rows[t] = spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-            timings = {n: best_of_3(spark, queries[n][0], sf_dir) for n in names}
+            timings = {
+                n: bench.measure(
+                    spark, {n: lambda: queries[n][0](spark, sf_dir)}, 3, min
+                )[n]
+                for n in names
+            }
             print(
                 json.dumps({"mult": mult, "rows": rows, "queries": timings}),
                 flush=True,

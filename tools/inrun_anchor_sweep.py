@@ -3,16 +3,15 @@
 bench.py carries same-run anchors for the comparable-11 basket and the
 sf1 sections (round-10); everything else in BASELINE.md's ratio tables
 was anchored cross-session on a VM with documented ±2-3× noise.  This
-tool re-anchors any registry query the same-minute way: construct the
-Spark plan once, warm it, then ALTERNATE timed Spark and DuckDB passes
-on the same data in the same process, and print a markdown row per
-query (medians + ratio).
+tool re-anchors any registry query the same-minute way through
+``bench.measure``: warm both engines, then ALTERNATE timed Spark and
+DuckDB passes on the same data in the same process, and print a
+markdown row per query (medians + ratio).
 
-Queries whose construction is part of the honest cost (lazy
-localCheckpoint builders: corpus_perplexity_filter, text_lang_id_ngram,
-corpus_ccnet_partition, text_lang_id_confusion) are run FULL-COST —
+A query whose construction registers a checkpoint is run FULL-COST —
 construct+execute per pass — because a warm re-execution would time
-only the post-checkpoint tail.
+only the post-checkpoint tail; any other query re-executes one built
+plan.  The protocol column says which.
 
 Run: python tools/inrun_anchor_sweep.py [query ...] [--sf DIR] [--passes N]
 Defaults to the round-10 ratio-weak set at sf0.1.
@@ -22,57 +21,8 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-#: queries whose plan builds an eager-on-first-action checkpoint: time
-#: construction + execution together (the bench full-cost protocol).
-#: Round-12 additions: every query that gained a lazy localCheckpoint
-#: in the scan-audit sweep — a warm re-execution of the SAME frame
-#: times only the post-checkpoint tail.
-FULL_COST = {
-    "events_heavy_hitters",  # r13: packed MG candidates+count checkpoint
-    "semantic_dedup_scaled",  # r13: narrow (id,norm,cluster) checkpoint
-    "corpus_perplexity_filter",
-    "corpus_ccnet_partition",
-    "text_lang_id_ngram",
-    "text_lang_id_confusion",
-    "metric_esd_outliers",
-    "mse_histogram",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "event_pagerank",
-    "event_graph_triangles",
-    "text_related_docs_topk",
-    "corpus_dedup_e2e_stats",
-    "dedup_minhash_recall_eval",
-    "events_association_rules",
-    "orders_basket_affinity",
-    "text_log_odds_keywords",
-    # sweep extension 2 (post-closing session) checkpoint landings:
-    "metric_distribution_drift",
-    "text_containment_pairs",
-    "corpus_upsert_latest",
-    "dedup_minhash_incremental",
-    "text_nb_classifier",
-    "text_nb_classifier_auc",
-    "text_nb_confusion",
-    "text_pmi_collocations",
-    "metric_seasonal_mad",
-    "corpus_source_token_drift",
-    "metric_mad_outliers",
-    "metric_sax_motifs",
-    # earlier checkpointed plans that predate this list:
-    "metric_cointegration_pairs",
-    "metric_sax_similar_days",
-    "corpus_clean_tokenize_pack",
-    "events_anomaly_attribution",
-    # second optimization-session landings:
-    "multires_rollup",
-    "events_funnel_timing",
-    "promql_absent",
-}
 
 DEFAULT_SET = [
     "text_quality_scores",
@@ -121,25 +71,16 @@ def main() -> None:
         if sql is None:
             print(f"| {name} | - | - | - | no oracle |")
             continue
-        full = name in FULL_COST
-        df = fn(spark, sf)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        con.execute(sql).fetchall()  # warm duck too
-        sp: list[float] = []
-        dk: list[float] = []
-        for _ in range(n_passes):
-            t0 = time.perf_counter()
-            if full:
-                df = fn(spark, sf)
-            df.write.format("noop").mode("overwrite").save()
-            sp.append(round(time.perf_counter() - t0, 3))
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            dk.append(round(time.perf_counter() - t0, 3))
-        s, d = sorted(sp)[len(sp) // 2], sorted(dk)[len(dk) // 2]
-        proto = "full-cost (construct+exec)" if full else "warm plan"
+        got = bench.measure(
+            spark, {name: lambda: fn(spark, sf)}, n_passes, con=con, sql=sql
+        )
+        proto = (
+            "warm plan" if got.frames[name] is not None
+            else "full-cost (construct+exec)"
+        )
         print(
-            f"| {name} | {s} | {d} | {round(s / max(d, 1e-9), 2)}× | {proto} |",
+            f"| {name} | {got[name]} | {got[f'{name}_duck_sec']} "
+            f"| {got[f'{name}_inrun_ratio']}× | {proto} |",
             flush=True,
         )
 
