@@ -111,7 +111,9 @@ def cmd_preprocess(cfg: EngineConfig, input_path: str | None = None) -> None:
         "hour_of_day", hour_of_day("ts")
     )
     features = metric_cols + ["day_of_week", "hour_of_day"]
-    df = cut_lineage(df)
+    # the fill moves the metrics last; train windows the file's column
+    # order, so restore the collected one: metrics, then calendar
+    df = cut_lineage(df.select(*[c for c in df.columns if c not in features], *features))
     try:
         params = scale_ops.fit_params(df, features)
         rows = params.collect()
@@ -228,9 +230,9 @@ def cmd_filter(cfg: EngineConfig, input_path: str | None = None) -> None:
 
 def cmd_detect(cfg: EngineConfig) -> None:  # pragma: no cover - needs live prom
     raise SystemExit(
-        "detect requires a live Prometheus; see "
-        "streaming/detector.run_detector_on_batch (a foreachBatch body) "
-        "and streaming/stateful.stateful_detector_stream"
+        "detect requires a live Prometheus; the one detector core, streaming/stateful."
+        "merge_ring + score_ring, serves stateful_detector_stream and "
+        "streaming/detector.run_detector_on_batch (a foreachBatch body)"
     )
 
 

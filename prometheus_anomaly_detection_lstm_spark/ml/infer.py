@@ -11,7 +11,8 @@ Works with any scorer exposing ``predict(x: (n, L, F)) -> (n, L, F)``:
 the deterministic stub :class:`~..ml.autoencoder.AffineAutoencoder` in
 tests, a trained model from ``ml/autoencoder.load_model`` in the CLI.
 Both errors come from ``ml/autoencoder.reconstruction_errors``, the
-rule the CLI's threshold and both detector cores also score with.
+rule the CLI's threshold and the one detector core
+(``streaming/stateful.score_ring``) also score with.
 """
 
 from __future__ import annotations

@@ -5,8 +5,12 @@ The reference's detector (realtime_detector.py:350-398) is a
 L points per metric, preprocesses, scores one window, and pushes gauges.
 The Spark-native port keeps the same *stateless recompute* semantics
 (T2) inside ``foreachBatch`` of a processing-time-triggered streaming
-query (T1); the exporter sink (S12) receives "update-mode" gauge writes
-(T4) and the reference's guard/sentinel behaviors are preserved:
+query (T1).  A cycle is a one-shot call of the stateful operator's core
+(``stateful.merge_ring`` over the whole window, then
+``stateful.score_ring`` with the calendar columns, the fitted scaler and
+the model); SPOT and the gauges stay here.  The exporter sink (S12)
+receives "update-mode" gauge writes (T4) and the reference's
+guard/sentinel behaviors are preserved:
 
 * missing metric -> whole cycle skipped                 (T3, :176-190)
 * short window (n < L) -> skipped, point-count gauge    (T3, :211-215)
@@ -28,9 +32,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..ml.autoencoder import AffineAutoencoder, reconstruction_errors
+from ..ml.autoencoder import AffineAutoencoder
 from ..operators.scale import affine
 from .exporter import DetectorMetrics
+from .stateful import merge_ring, ring_samples, score_ring
 
 
 @dataclass
@@ -69,65 +74,43 @@ class DetectorConfig:
             self.spot = (
                 DriftSpotCalibrator() if self.drift else SpotCalibrator()
             )
+        # the fitted scaler over ``features`` (realtime_detector.py:231-242)
+        self._scale = None if self.scaler_params is None else tuple(
+            np.asarray(v, np.float64)
+            for v in affine(self.scaler_params.to_dict("records"), self.features, self.scaler_type)
+        )
 
     @property
     def features(self) -> list[str]:
-        return self.metrics + ["day_of_week", "hour_of_day"]
-
-
-def _prep_window(pdf: pd.DataFrame, cfg: DetectorConfig) -> np.ndarray | None:
-    """The reference's _preprocess_and_create_sequence
-    (realtime_detector.py:220-242) on one aligned window."""
-    pdf = pdf.sort_values("ts").reset_index(drop=True)
-    pdf["day_of_week"] = pdf["ts"].dt.dayofweek
-    pdf["hour_of_day"] = pdf["ts"].dt.hour
-    vals = pdf[cfg.features].astype("float64")
-    if vals.isna().any().any():  # ffill/bfill only when NaN present (:224-230)
-        vals = vals.ffill().bfill()
-    vals = vals.to_numpy()
-    if cfg.scaler_params is not None:  # the fitted scaler (:231-242)
-        shift, divisor = affine(
-            cfg.scaler_params.to_dict("records"), cfg.features, cfg.scaler_type
-        )
-        vals = (vals - np.asarray(shift, np.float64)) / np.asarray(divisor, np.float64)
-    return vals[np.newaxis, :, :]  # (1, L, F) — :242
+        """The model's columns in training order: the metrics sorted,
+        then the calendar columns, as ``cli collect`` and ``cli
+        preprocess`` write them and ``cli train`` windows them."""
+        return sorted(self.metrics) + ["day_of_week", "hour_of_day"]
 
 
 def run_detection_cycle(
     window_long: pd.DataFrame, cfg: DetectorConfig, sinks: DetectorMetrics
 ) -> dict | None:
-    """One cycle over a long-format window (ts, metric, value).
+    """One cycle over a long-format window (ts, metric, value): the
+    stateful operator's ring merge over the whole window (no trim), then
+    its scorer with the calendar columns, the config's scaler and model.
 
     Returns the cycle outcome dict, or None when skipped (guards).
     """
-    present = set(window_long["metric"].unique())
-    # SUBSET check, not equality: the reference guard requires every
-    # CONFIGURED metric present (realtime_detector.py:176-193); an
-    # extra series in the scrape (a newly-added gauge) must not
-    # permanently disable detection
-    if not set(cfg.metrics).issubset(present):
+    metrics = sorted(cfg.metrics)
+    ring = merge_ring(ring_samples([window_long], metrics), len(metrics))
+    got = score_ring(*ring, cfg.sequence_length, cfg.model, cfg._scale, calendar=True)
+    # every CONFIGURED metric must be present (realtime_detector.py:176-193);
+    # an extra series in the scrape (a newly-added gauge) is ignored
+    if got.reason == "missing_metric":
         return None
-    # dropna=False keeps a configured metric whose samples are all NaN
-    # (a Prometheus "NaN"): its column then empties the inner align
-    # below and the cycle ends on the short-window guard
-    wide = window_long.pivot_table(
-        index="ts", columns="metric", values="value", aggfunc="first",
-        dropna=False,
-    ).reset_index()
-    # inner-align: rows where every metric has a sample (:195)
-    aligned = wide.dropna(subset=cfg.metrics)
-    sinks.window_points.set(len(aligned))
-    if len(aligned) < cfg.sequence_length:  # short window (:211-215)
-        return None
-    tail = aligned.tail(cfg.sequence_length)  # U5 (:210)
-    seq = _prep_window(tail, cfg)
-    try:
-        mse, feat_mse = reconstruction_errors(cfg.model, seq)
-        mse, feat_mse = float(mse[0]), feat_mse[0]
-    except Exception:
+    sinks.window_points.set(got.n_points)
+    if got.reason == "score_error":
         sinks.latest_mse.set(-1.0)  # sentinel (M6, :339-348)
         sinks.is_anomaly.set(0.0)
+    if got.reason is not None:  # short window (:211-215) or the sentinel
         return None
+    mse = got.mse
     thr = cfg.threshold
     if thr is None:  # automatic SPOT/EVT threshold (streaming/spot.py)
         thr = cfg.spot.threshold  # None while calibrating -> no alarm
@@ -139,15 +122,10 @@ def run_detection_cycle(
     sinks.is_anomaly.set(1.0 if is_anom else 0.0)
     if is_anom:
         sinks.total_anomalies.inc()
-    for name, v in zip(cfg.features, feat_mse):
+    for name, v in zip(cfg.features, got.feature_mse):
         sinks.feature_mse.set(float(v), feature_name=name)
     sinks.last_success.set_to_current_time()
-    return {
-        "mse": mse,
-        "is_anomaly": is_anom,
-        "n_points": len(aligned),
-        "threshold": thr,
-    }
+    return {"mse": mse, "is_anomaly": is_anom, "n_points": got.n_points, "threshold": thr}
 
 
 def run_detector_on_batch(
@@ -158,11 +136,9 @@ def run_detector_on_batch(
     matching the reference loop :392-398)."""
     pdf = batch_df.select("cycle_id", "ts", "metric", "value").toPandas()
     outcomes = []
-    for cycle_id in sorted(pdf["cycle_id"].unique()):
+    for cycle_id, window in pdf.groupby("cycle_id", sort=True):
         try:
-            out = run_detection_cycle(
-                pdf[pdf["cycle_id"] == cycle_id], cfg, sinks
-            )
+            out = run_detection_cycle(window, cfg, sinks)
         except Exception:
             # logged-AND-continue (reference loop :392-398) — silently
             # discarding made production failures indistinguishable

@@ -1,17 +1,19 @@
-"""Stateful streaming detector (SURVEY H6 / §2.8-T2 idiomatic upgrade).
+"""The detector core, and the stateful streaming detector built on it
+(SURVEY H6 / §2.8-T2 idiomatic upgrade).
 
 The reference re-fetches the full L-point window every cycle
-(realtime_detector.py:142-153 — stateless recompute).  The idiomatic
-Structured-Streaming upgrade keeps the trailing window in OPERATOR
-STATE so each trigger only needs the NEW samples: a ring of recent
-samples lives in per-key group state as compact NumPy buffers, and a
-scored row is emitted per batch once the buffer holds a full aligned
-window.
+(realtime_detector.py:142-153).  Here a ring of recent samples lives in
+per-key group state as compact NumPy buffers, so a trigger needs only
+the NEW samples, and each batch emits one row per key, scored once the
+ring holds a full aligned window.  Two pure NumPy pieces are the one
+detector core: :func:`merge_ring` (samples -> matrix, first sample per
+cell) and :func:`score_ring` (guards, then the last L aligned steps
+through ``ml.autoencoder.reconstruction_errors``).  The stateless cycle
+``detector.run_detection_cycle`` is a one-shot call of both.
 
-Implementation note: Spark 4's ``transformWithStateInPandas`` is the
-newer API, but its Python worker requires ``google.protobuf`` which is
-not in this image — so this uses ``applyInPandasWithState`` (GroupState,
-Spark >= 3.4, no extra deps).
+This uses ``applyInPandasWithState`` (Spark >= 3.4, no extra
+dependency): Spark 4's ``transformWithStateInPandas`` needs
+``google.protobuf`` in its Python worker.
 
 Input stream : (detector_id string, ts timestamp, metric string, value double)
 Output stream: (detector_id, window_end, mse, is_anomaly, n_points)
@@ -24,41 +26,29 @@ State layout (``STATE_SCHEMA``), one row per detector key, for L =
   microseconds (the session-local wall time Spark hands to pandas);
 - ``value``: the (n_ts x M) float64 matrix, row-major, ``tobytes()``;
 - ``seen``: the (n_ts x M) bool mask of occupied cells, ``tobytes()``.
-  A present-but-NaN sample is seen; a missing one is not.
 
-That is at most 8·2L + 9·2L·M bytes per key (6,080 for L = 20,
-M = 16) plus the M names, and the state codec moves M strings, 2L ints
-and two byte strings per key, not 2L·M Python datetimes, strings and
-floats each.  Nothing is global: thousands of detectors shard across
-executors by key.
-
-Checkpoint break: a checkpoint written with the earlier row-list state
+That is at most 8·2L + 9·2L·M bytes per key (6,080 for L = 20, M = 16)
+plus the M names.  A checkpoint written with the earlier row-list state
 (``ts array<timestamp>, metric array<string>, value array<double>``)
-cannot be resumed.  Spark refuses it when the query starts, with
-``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``; start such a detector on a
-fresh checkpoint.  Changing the metric list of a running detector also
-needs a fresh checkpoint: a key whose stored names differ from the
-configured ones (a rename, an added or a dropped metric) fails the
-batch with a ``ValueError`` naming both lists, rather than reading one
-metric's values as another's.
+fails at start with ``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``, and a
+key whose stored names differ from the configured metrics fails the
+batch with a ``ValueError`` naming both lists: start either on a fresh
+checkpoint.
 
-Deployment note: the stateful operator's partition count is taken from
-``spark.sql.shuffle.partitions`` at the FIRST run and frozen into the
-checkpoint — size it to the detector-key cardinality before starting
-(200 tasks per micro-batch for one key is pure scheduling overhead).
-Each state partition runs one Python task per micro-batch.  Measured on
-a 4-vCPU box, a Python task on a reused worker adds about 0.09 CPU-s of
-fixed cost to the process tree (0.34 before the package's lazy zip
-invalidation, see ``shipping``); a fresh worker spends about 0.7 CPU-s
-of its own on its first task.  The state function calls :func:`_update`
-by module reference, so every state-partition worker imports the
-package and gets the lazy invalidation; :func:`stateful_detector_stream`
-ships the package for it.
+Deployment: the operator's partition count is ``spark.sql.shuffle.partitions``
+at the FIRST run, frozen into the checkpoint — size it to the detector
+keys.  Each state partition runs one Python task per micro-batch (about
+0.09 CPU-s of fixed cost on a reused worker, 0.7 on a fresh one, on a
+4-vCPU box).  The state function calls :func:`_update` by module
+reference, so each worker imports the package and gets its lazy zip
+invalidation (``shipping``); this module imports nothing from
+``detector``, ``exporter`` or ``spot``, so workers load no more.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+import logging
+from typing import Any, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -110,77 +100,107 @@ def _update(
     threshold: float,
 ) -> Iterator[pd.DataFrame]:
     """One key's batch: merge the new samples into the ring, keep its
-    last 2L distinct timestamps and score the last L aligned steps with
-    the stub model (``ml.autoencoder.STUB``) through
-    ``ml.autoencoder.reconstruction_errors``.
-
-    A (ts, metric) cell keeps its first sample: a state sample beats a new
-    one, and within a batch the earlier row wins.  A present-but-NaN
-    sample occupies its cell (the ``seen`` mask tells it from a missing
-    one).  Every distinct timestamp counts toward the 2L trim, including
-    one carried only by a metric outside ``metrics``, whose value is
-    dropped.  A step is aligned when every configured metric has a
-    non-NaN value there, so a configured metric that never arrived
-    leaves none aligned (the J3 guard); ``n_points`` counts the aligned
-    steps in the ring and ``window_end`` is the last one scored.  State
+    last 2L distinct timestamps (one carried only by a metric outside
+    ``metrics`` counts too) and score the ring with the stub model
+    (``ml.autoencoder.STUB``), no scaler and no calendar columns.
+    ``n_points`` counts the aligned steps in the ring, ``window_end`` is
+    the last one scored; a guard reason emits an unscored row.  State
     stored for another metric list raises ``ValueError``."""
-    M = len(metrics)
-    frames = list(pdfs)
-    index = pd.Index(metrics)
-    new_ts = np.concatenate(
-        [f["ts"].to_numpy("datetime64[us]").view(np.int64) for f in frames]
-    )
-    new_col = np.concatenate([index.get_indexer(f["metric"]) for f in frames])
-    new_val = np.concatenate([f["value"].to_numpy(np.float64) for f in frames])
-    old_metrics, old_ts, old_val, old_seen = (
-        state.get if state.exists else (metrics, [], b"", b"")
-    )
+    old_metrics, *ring = state.get if state.exists else (metrics, [], b"", b"")
     if list(old_metrics) != metrics:
         raise ValueError(
             f"detector {key[0]!r}: its state holds metrics {list(old_metrics)}, "
             f"not the configured {metrics}; start it on a fresh checkpoint"
         )
-    old_ts = np.asarray(old_ts, dtype=np.int64)
-    old_val = np.frombuffer(old_val, np.float64).reshape(len(old_ts), M)
-    old_seen = np.frombuffer(old_seen, np.bool_).reshape(len(old_ts), M)
-
-    ts = np.union1d(old_ts, new_ts)[-2 * L :]
-    val = np.full((len(ts), M), np.nan)
-    seen = np.zeros((len(ts), M), np.bool_)
-    k = np.searchsorted(old_ts, ts[0])  # old_ts[k:] survive the trim
-    rows = np.searchsorted(ts, old_ts[k:])
-    val[rows] = old_val[k:]
-    seen[rows] = old_seen[k:]
-    ok = (new_col >= 0) & (new_ts >= ts[0])
-    cells = np.searchsorted(ts, new_ts[ok]) * M + new_col[ok]
-    cells, first = np.unique(cells, return_index=True)  # first in batch order
-    fresh = ~seen.reshape(-1)[cells]
-    val.reshape(-1)[cells[fresh]] = new_val[ok][first[fresh]]
-    seen.reshape(-1)[cells[fresh]] = True
+    ts, val, seen = merge_ring(ring_samples(list(pdfs), metrics), len(metrics), *ring)
+    ts, val, seen = ts[-2 * L :], val[-2 * L :], seen[-2 * L :]
     state.update((metrics, ts.tolist(), val.tobytes(), seen.tobytes()))
 
+    got = score_ring(ts, val, seen, L)  # a guard reason leaves mse NaN
+    end = pd.NaT if got.reason else pd.Timestamp(got.end, unit="us")
+    yield pd.DataFrame(
+        {"detector_id": [key[0]], "window_end": [end], "mse": [got.mse],
+         "is_anomaly": [int(got.mse > threshold)], "n_points": [got.n_points]}
+    )
+
+
+def ring_samples(frames: list[pd.DataFrame], metrics: list[str]):
+    """Long (ts, metric, value) frames -> int64 microsecond timestamps,
+    column indices into ``metrics`` (-1 for any other metric) and
+    float64 values, in row order."""
+    index = pd.Index(metrics)
+    return (
+        np.concatenate([f["ts"].to_numpy("datetime64[us]").view(np.int64) for f in frames]),
+        np.concatenate([index.get_indexer(f["metric"]) for f in frames]),
+        np.concatenate([f["value"].to_numpy(np.float64) for f in frames]),
+    )
+
+
+def merge_ring(samples, M: int, ts=(), val=b"", seen=b""):
+    """Merge :func:`ring_samples` into a ring given in its state encoding
+    (empty by default): returns the sorted union of the timestamps, the
+    (n_ts x M) float64 matrix and its seen mask.
+
+    A cell keeps its first sample: a ring sample beats a new one, and
+    among the new ones the earlier row wins.  A present-but-NaN sample
+    occupies its cell (``seen`` tells it from a missing one).  A sample
+    of column -1 adds its timestamp and no value."""
+    new_ts, new_col, new_val = samples
+    old_ts = np.asarray(ts, dtype=np.int64)
+    out_ts = np.union1d(old_ts, new_ts)
+    out_val = np.full((len(out_ts), M), np.nan)
+    out_seen = np.zeros((len(out_ts), M), np.bool_)
+    rows = np.searchsorted(out_ts, old_ts)
+    out_val[rows] = np.frombuffer(val, np.float64).reshape(len(old_ts), M)
+    out_seen[rows] = np.frombuffer(seen, np.bool_).reshape(len(old_ts), M)
+    ok = new_col >= 0
+    cells = np.searchsorted(out_ts, new_ts[ok]) * M + new_col[ok]
+    cells, first = np.unique(cells, return_index=True)  # first in row order
+    fresh = ~out_seen.reshape(-1)[cells]
+    out_val.reshape(-1)[cells[fresh]] = new_val[ok][first[fresh]]
+    out_seen.reshape(-1)[cells[fresh]] = True
+    return out_ts, out_val, out_seen
+
+
+class Scored(NamedTuple):
+    reason: str | None
+    n_points: int
+    end: int | None = None
+    mse: float = float("nan")
+    feature_mse: np.ndarray | None = None
+
+
+def score_ring(ts, val, seen, L, model=STUB, scale=None, calendar=False) -> Scored:
+    """Score a ring's last L aligned steps (every column non-NaN) with
+    ``model`` through ``ml.autoencoder.reconstruction_errors``: the
+    result holds the last step (µs), the MSE and the per-column MSE, or
+    a guard ``reason`` and no score.  ``n_points`` counts aligned steps.
+
+    Reasons: ``missing_metric`` (a column with no seen cell, J3),
+    ``short_window`` (fewer than L aligned steps, W4), ``score_error``
+    (the model raised, M6).  ``calendar`` appends ``day_of_week``
+    (Monday = 0) and ``hour_of_day`` of each step; ``scale`` is a
+    ``(shift, divisor)`` pair of arrays over all columns."""
     aligned = np.flatnonzero(~np.isnan(val).any(axis=1))
+    if not seen.any(axis=0).all():
+        return Scored("missing_metric", len(aligned))
     if len(aligned) < L:
-        yield _row(key, pd.NaT, float("nan"), 0, len(aligned))
-        return
+        return Scored("short_window", len(aligned))
+    rows = aligned[-L:]
     # metric-major, the memory order of a pandas pivot of the window, so
     # the MSE sums in the same order as a pandas scorer does
-    tail = np.asfortranarray(val[aligned[-L:]])
-    mse = float(reconstruction_errors(STUB, tail[np.newaxis])[0][0])
-    end = pd.Timestamp(int(ts[aligned[-1]]), unit="us")
-    yield _row(key, end, mse, int(mse > threshold), len(aligned))
-
-
-def _row(key: Any, window_end, mse: float, is_anomaly: int, n_points: int):
-    return pd.DataFrame(
-        {
-            "detector_id": [key[0]],
-            "window_end": [window_end],
-            "mse": [mse],
-            "is_anomaly": [is_anomaly],
-            "n_points": [n_points],
-        }
-    )
+    x = np.asfortranarray(val[rows])
+    if calendar:
+        hours = ts[rows] // 3_600_000_000  # 1970-01-01 was a Thursday
+        x = np.asfortranarray(np.column_stack([x, (hours // 24 + 3) % 7, hours % 24]))
+    if scale is not None:
+        x = (x - scale[0]) / scale[1]
+    try:
+        mse, feature_mse = reconstruction_errors(model, x[np.newaxis])
+    except Exception:  # any model's failure: the M6 sentinel, not a lost batch
+        logging.getLogger(__name__).exception("window scoring failed")
+        return Scored("score_error", len(aligned))
+    return Scored(None, len(aligned), int(ts[rows[-1]]), float(mse[0]), feature_mse[0])
 
 
 def stateful_detector_stream(

@@ -153,11 +153,20 @@ def test_preprocess_matches_oracle(tmp_path, raw, scaler_type):
         )
 
 
-@pytest.mark.parametrize("scaler", ["MinMaxScaler", "StandardScaler"])
-def test_detector_scales_like_preprocess(tmp_path, raw, scaler):
+@pytest.mark.parametrize(
+    "scaler, live",
+    [
+        ("MinMaxScaler", ["cpu", "mem", "net"]),
+        ("StandardScaler", ["cpu", "mem", "net"]),
+        ("MinMaxScaler", ["net", "cpu", "mem"]),
+    ],
+    ids=["MinMaxScaler", "StandardScaler", "unsorted_metrics"],
+)
+def test_detector_scales_like_preprocess(tmp_path, raw, scaler, live):
     """Train/serve parity: fed the rows of ``scaler_params.parquet`` and
     the scaler type preprocess used, the detector turns a raw window into
-    the processed parquet's rows for the same timestamps."""
+    the processed parquet's rows for the same timestamps, in the
+    processed parquet's column order whatever the configured order."""
     path, pdf = raw
     cfg = _cfg(
         tmp_path, "lstm", queries={m: m for m in RAW_METRICS}, scaler_type=scaler
@@ -171,7 +180,6 @@ def test_detector_scales_like_preprocess(tmp_path, raw, scaler):
             self.seen = x
             return x
 
-    live = ["cpu", "mem", "net"]
     length = 20
     det = DetectorConfig(
         metrics=live,
@@ -187,8 +195,9 @@ def test_detector_scales_like_preprocess(tmp_path, raw, scaler):
     )
     assert run_detection_cycle(window, det, DetectorMetrics()) is not None
     seen = det.model.seen
-    assert seen.shape == (1, length, len(det.features))
-    want = processed[det.features].tail(length).to_numpy()
+    columns = [c for c in processed.columns if c in det.features]
+    assert seen.shape == (1, length, len(columns))
+    want = processed[columns].tail(length).to_numpy()
     np.testing.assert_allclose(seen[0], want, rtol=1e-12, atol=0.0)
 
 

@@ -99,12 +99,13 @@ def test_all_nan_metric_ends_on_short_window(cfg):
     assert sinks.window_points.value() == 0
 
 
-def test_nan_window_fills_and_scores(cfg):
+def test_nan_rows_drop_out_and_window_scores(cfg):
+    """Rows where a configured metric is NaN are not aligned: two of
+    L + 2 drop out, and the cycle scores the L rows left."""
     sinks = DetectorMetrics()
-    out = run_detection_cycle(
-        _cycle(0, L + 2, nan_at={0, 3}), cfg, sinks
-    )  # ffill/bfill path (:224-230)
+    out = run_detection_cycle(_cycle(0, L + 2, nan_at={0, 3}), cfg, sinks)
     assert out is not None
+    assert sinks.window_points.value() == L
 
 
 def test_anomaly_branch_increments_counter(cfg):
